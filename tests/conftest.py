@@ -10,6 +10,6 @@ from tosidewalk_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()

@@ -34,33 +34,56 @@ def test_make_sidewalks_straight3(spark):
     assert (rows[0].lngs[0] - -122.330) * (rows[1].lngs[0] - -122.330) < 0
 
 
+def _kernel_sidewalks(gw, offset_m=geom.SIDEWALK_OFFSET_M):
+    """make_sidewalks' rows computed by the numpy kernel over collected gw
+    rows, keyed by way id, with the closed-form sidewalk ids."""
+    out = {}
+    for r in gw.collect():
+        n = len(r.lats)
+        if n < 2:
+            continue
+        llat, llng, rlat, rlng = geom.offset_polyline(r.lats, r.lngs, offset_m)
+        for side, (slat, slng) in enumerate(((llat, llng), (rlat, rlng))):
+            out[SW.SW_WAY_BASE + 2 * r.way_id + side] = (
+                r.way_id, side,
+                [SW.SW_NODE_BASE + r.way_id * 20_000 + side * 10_000 + k
+                 for k in range(n)],
+                slat.tolist(), slng.tolist(), r.highway)
+    return out
+
+
 def test_make_sidewalks_sql_matches_pandas(spark):
     """r6: make_sidewalks was rewritten from applyInPandas to pure SQL for
     the per-session python-worker spawn cost — the SQL form must stay
-    BIT-identical to the kernel-faithful pandas form on every geometry
-    class (straight, bent, multi-vertex near-collinear, grid city)."""
+    BIT-identical to kernel.offset_polyline on every geometry class
+    (straight, bent, multi-vertex near-collinear, grid city)."""
     fixtures = ["straight3", "bent3", "zigzag_redundant", "split_street"]
-    for name in fixtures:
-        gw = _gw(spark, name)
-        sql_rows = {r.way_id: r for r in SW.make_sidewalks(gw).collect()}
-        pd_rows = {r.way_id: r for r in SW._make_sidewalks_pandas(gw).collect()}
-        assert sql_rows.keys() == pd_rows.keys(), name
-        for wid, a in sql_rows.items():
-            b = pd_rows[wid]
-            assert a.parent_way_id == b.parent_way_id and a.side == b.side
-            assert list(a.node_ids) == list(b.node_ids), (name, wid)
-            assert a.highway == b.highway
-            # exact double equality — the whole point of the op-order mirror
-            assert a.lats == b.lats, (name, wid)
-            assert a.lngs == b.lngs, (name, wid)
-    # grid city (the bench's buffers chain input)
-    nodes, ways = synth.osm_grid(spark, g=6)
-    gw = N.geom_ways(nodes, N.split_streets(N.filter_streets(ways)))
-    sql_rows = {r.way_id: (list(r.node_ids), r.lats, r.lngs)
-                for r in SW.make_sidewalks(gw).collect()}
-    pd_rows = {r.way_id: (list(r.node_ids), r.lats, r.lngs)
-               for r in SW._make_sidewalks_pandas(gw).collect()}
-    assert sql_rows == pd_rows
+    grid_nodes, grid_ways = synth.osm_grid(spark, g=6)
+    gws = [_gw(spark, name) for name in fixtures] + [
+        N.geom_ways(grid_nodes, N.split_streets(N.filter_streets(grid_ways)))]
+    for name, gw in zip(fixtures + ["grid6"], gws):
+        sql_rows = {r.way_id: (r.parent_way_id, r.side, list(r.node_ids),
+                               r.lats, r.lngs, r.highway)
+                    for r in SW.make_sidewalks(gw).collect()}
+        # exact double equality — the whole point of the op-order mirror
+        assert sql_rows == _kernel_sidewalks(gw), name
+
+
+def test_make_sidewalks_node_id_capacity_limit(spark):
+    """The node-id scheme gives each side 10,000 ids: a 9,999-vertex way
+    is the largest that fits, a 10,000-vertex way fails loudly."""
+    def way(n):
+        return spark.createDataFrame(
+            [(7, list(range(n)), [47.6 + 1e-6 * k for k in range(n)],
+              [-122.33] * n, "residential")],
+            "way_id long, node_ids array<long>, lats array<double>, "
+            "lngs array<double>, highway string")
+
+    rows = SW.make_sidewalks(way(9_999)).collect()
+    assert len(rows) == 2 and all(len(r.node_ids) == 9_999 for r in rows)
+    assert max(max(r.node_ids) for r in rows) == SW.SW_NODE_BASE + 7 * 20_000 + 19_998
+    with pytest.raises(Exception, match="10000 vertices overflow the sidewalk node-id scheme"):
+        SW.make_sidewalks(way(10_000)).collect()
 
 
 def test_make_sidewalks_plan_has_no_python(spark):

@@ -27,9 +27,9 @@ k-row centroid table (k ~ 10^2..10^5 centroids is the model, always the
 small side) + a struct-min — no shuffle of the corpus; the update is
 posexplode -> ONE map-side-combinable hash agg on (cluster, dim) — k*dim
 groups, tiny — so the corpus crosses the wire as partial sums only.
-Centroids ride DataFrame lineage between rounds with each round's k-row
-result persisted (evaluated once by the next round's broadcast); nothing
-corpus-sized ever hits the driver.
+Each round's k-row centroid table is an eager localCheckpoint (the
+round state of every fixpoint operator here), so the next round's
+broadcast reads it flat; nothing corpus-sized ever hits the driver.
 
 No reference parity to cite: /root/reference is empty this round
 (SURVEY.md §0); derives from the public Lloyd/MacQueen k-means and the
@@ -38,12 +38,9 @@ SemDeDup paper.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import _spread
-from .spatial import _safe_unpersist
 
 KM_SCALE = 1_000_000  # fixed-point scale for embedding coordinates
 
@@ -80,11 +77,10 @@ def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 3,
                  F.expr(f"TRANSFORM({vec_col}, x -> CAST(FLOOR("
                         f"CAST(x AS DOUBLE) * {scale} + 0.5e0) AS BIGINT))")
                  .alias("q"))
-         .persist())
+         .localCheckpoint(eager=False))
     cents = (q.filter(F.col("vec_id") < k)
              .select(F.col("vec_id").cast("long").alias("cluster_id"),
                      F.col("q").alias("c")))
-    pinned = [cents]
     mean = ("CAST(FLOOR(CAST(_s AS DOUBLE) / CAST(_n AS DOUBLE) + 0.5e0) "
             "AS BIGINT)")
     for _ in range(n_iter):
@@ -99,12 +95,8 @@ def kmeans_assign(emb: DataFrame, k: int = 8, n_iter: int = 3,
         cents = (cents.join(upd, "cluster_id", "left")
                  .select("cluster_id",
                          F.coalesce("c_new", "c").alias("c"))
-                 .persist())
-        pinned.append(cents)
-    out = _assign(q, cents).select("vec_id", "cluster_id", "dist_fx")
-    for df in (q, *pinned[1:]):
-        weakref.finalize(out, _safe_unpersist, df)
-    return out
+                 .localCheckpoint())
+    return _assign(q, cents).select("vec_id", "cluster_id", "dist_fx")
 
 
 def semantic_dedup(emb: DataFrame, k: int = 8, n_iter: int = 3,
@@ -134,8 +126,8 @@ def semantic_dedup(emb: DataFrame, k: int = 8, n_iter: int = 3,
 
     if max_bucket is None:
         max_bucket = dedup.LSH_MAX_BUCKET
-    assign_full = kmeans_assign(emb, k=k, n_iter=n_iter, vec_col=vec_col)
-    assign = assign_full.select("vec_id", "cluster_id")
+    assign = (kmeans_assign(emb, k=k, n_iter=n_iter, vec_col=vec_col)
+              .select("vec_id", "cluster_id"))
     e = (_spread(emb)
          .select("vec_id",
                  F.expr(f"TRANSFORM({vec_col}, x -> CAST(x AS DOUBLE))")
@@ -145,7 +137,7 @@ def semantic_dedup(emb: DataFrame, k: int = 8, n_iter: int = 3,
          .withColumn("bucket", F.expr(similarity.lsh_signature_expr(
              "v", n_planes=similarity.NEARDUP_PLANES)))
          .join(assign, "vec_id")
-         .persist())
+         .localCheckpoint(eager=False))
     ok = (e.groupBy("cluster_id", "bucket")
           .agg(F.count("*").alias("bn"))
           .filter(F.col("bn") <= max_bucket)
@@ -167,17 +159,11 @@ def semantic_dedup(emb: DataFrame, k: int = 8, n_iter: int = 3,
         pairs.select(F.col("vec_a").alias("src"),
                      F.col("vec_b").alias("dst"))).select(
         F.col("id").alias("vec_id"), F.col("component").alias("group_id"))
-    out = (e.select("vec_id", "cluster_id")
-           .join(comp, "vec_id", "left")
-           .select("vec_id", "cluster_id",
-                   F.coalesce("group_id", "vec_id").alias("group_id"))
-           .withColumn("keep", F.expr("vec_id = group_id")))
-    weakref.finalize(out, _safe_unpersist, e)
-    # kmeans' internal caches are weakref-scoped to ITS returned object;
-    # pin that object to our result so they stay cached for out's
-    # lifetime (dropping it early would only recompute, never corrupt)
-    out._kmeans_lineage_pin = assign_full
-    return out
+    return (e.select("vec_id", "cluster_id")
+            .join(comp, "vec_id", "left")
+            .select("vec_id", "cluster_id",
+                    F.coalesce("group_id", "vec_id").alias("group_id"))
+            .withColumn("keep", F.expr("vec_id = group_id")))
 
 
 def kmeans_assign_duckdb_sql(emb_table: str = "embeddings", k: int = 8,

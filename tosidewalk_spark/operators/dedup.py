@@ -558,19 +558,15 @@ def dedup_clusters(docs: DataFrame, max_hamming: int = 3,
     Output: (doc_id, cluster_id, cluster_size) with cluster_id = min
     doc_id in the cluster — the canonical representative a pipeline keeps
     when collapsing each cluster to one document."""
-    import weakref
-
     from .network import connected_components
-    from .spatial import _safe_unpersist
-    # pinned: fdocs feeds the pair graph AND the final labeling, reps
-    # feeds the band graph AND the rep->cluster join — without the
-    # persists the _spread + fingerprint62 scan re-ran up to 3x through
-    # the CC loop's lineage; the weakref scopes both caches to the
-    # returned DataFrame as in knn_join.  Together with the non-distinct
-    # pair stream below: 22.4 -> 11.8 s at sf0.1 (same-session pair)
+    # checkpointed: fdocs feeds the pair graph AND the final labeling,
+    # reps feeds the band graph AND the rep->cluster join — without them
+    # the _spread + fingerprint62 scan re-ran up to 3x through the CC
+    # loop's lineage.  Lazy local checkpoints: each is materialized by
+    # its first job and freed by Spark's cleaner once no plan reads it.
     fdocs = _spread(docs).select(
         "doc_id", "text", F.expr(fingerprint62_sql("text")).alias("fp")
-    ).persist()
+    ).localCheckpoint(eager=False)
     # struct-min: the representative is the MIN doc_id of each exact-dup
     # group, carrying its text (identical within the group) — map-side
     # combinable, so the shuffle moves ~one text per distinct fp per
@@ -579,7 +575,7 @@ def dedup_clusters(docs: DataFrame, max_hamming: int = 3,
             .agg(F.min(F.struct("doc_id", "text")).alias("r"))
             .select("fp", F.col("r.doc_id").alias("doc_id"),
                     F.col("r.text").alias("text"))
-            .persist())
+            .localCheckpoint(eager=False))
     # non-distinct pair stream: CC only needs connectivity, and its
     # contraction groupBy-min absorbs the <= 4x per-band multiplicity in
     # map-side combine — the cross-band distinct would be a full extra
@@ -599,7 +595,7 @@ def dedup_clusters(docs: DataFrame, max_hamming: int = 3,
     labeled = (fdocs.select("doc_id", "fp")
                .join(rep_cluster, "fp")
                .select("doc_id", "cluster_id")
-               .persist())
+               .localCheckpoint(eager=False))
     # cluster_size via a two-phase hash agg joined back, NOT a window:
     # COUNT(*) OVER (PARTITION BY cluster_id) funnels the corpus's
     # biggest duplicate cluster (at crawl scale, empty/boilerplate pages
@@ -607,16 +603,12 @@ def dedup_clusters(docs: DataFrame, max_hamming: int = 3,
     # (VERDICT r4 'What's wrong' #1).  groupBy(cluster_id).count() is an
     # 8-byte key with map-side partial aggregation, so the hot cluster
     # contributes one partial row per map task; the labeled branch is
-    # persisted so the double reference costs one evaluation, keeping
+    # checkpointed so the double reference costs one evaluation, keeping
     # the single-scan property the r3 review asked for.
     sizes = labeled.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size"))
-    result = (labeled.join(sizes, "cluster_id")
-              .select("doc_id", "cluster_id", "cluster_size"))
-    weakref.finalize(result, _safe_unpersist, fdocs)
-    weakref.finalize(result, _safe_unpersist, reps)
-    weakref.finalize(result, _safe_unpersist, labeled)
-    return result
+    return (labeled.join(sizes, "cluster_id")
+            .select("doc_id", "cluster_id", "cluster_size"))
 
 
 def dedup_keep(docs: DataFrame, max_hamming: int = 3,

@@ -83,26 +83,28 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     with ``base = ((100 - damping_pct) * scale) DIV (100 * n)`` the
     teleport share.  Parallel edges vote once each (outdeg counts them).
 
-    Plan: the edge relation is pre-joined with outdeg ONCE and persisted
-    as ``ew`` (r6 — the old shape re-aggregated and re-joined outdeg
-    inside every round); every round is then ONE join(on src) →
-    hash-agg(dst) → LEFT join back to the node relation, so nodes with no
-    in-edges stay at ``base`` instead of dropping out; each round's rank
-    vector is cut off with a localCheckpoint (it is referenced twice per
-    round — see the loop comment).
+    Plan: the edge relation is pre-joined with outdeg ONCE as ``ew`` (r6
+    — the old shape re-aggregated and re-joined outdeg inside every
+    round); every round is then ONE join(on src) → hash-agg(dst) → LEFT
+    join back to the node relation, so nodes with no in-edges stay at
+    ``base`` instead of dropping out; each round's rank vector is cut off
+    with an eager localCheckpoint (it is referenced twice per round — see
+    the loop comment).  ``e``, ``nodes`` and ``ew`` are re-read by later
+    jobs, so each is a lazy localCheckpoint: materialized by its first
+    job, freed by Spark's cleaner once no plan reads it.
 
     Output: (node_id, rank_fx, out_deg) — rank_fx sums to ~scale (minus
     the documented floor leak)."""
-    e = _spread(edges).select("src", "dst").persist()
+    e = _spread(edges).select("src", "dst").localCheckpoint(eager=False)
     nodes = (e.select(F.col("src").alias("node_id"))
              .unionByName(e.select(F.col("dst").alias("node_id")))
-             .distinct().persist())
-    # edges pre-joined with out-degree ONCE and persisted (r6): the old
+             .distinct().localCheckpoint(eager=False))
+    # edges pre-joined with out-degree ONCE (r6): the old
     # shape re-aggregated outdeg and re-joined it inside EVERY round —
     # n_iter extra (agg + join) stages for an edge-constant value.  The
     # weights are identical (out_deg per src is a pure function of e).
     outdeg = e.groupBy("src").agg(F.count("*").cast("long").alias("out_deg"))
-    ew = e.join(outdeg, "src").persist()
+    ew = e.join(outdeg, "src").localCheckpoint(eager=False)
     n1 = nodes.agg(F.count("*").cast("long").alias("_n"))
     base_expr = (f"CAST(({100 - damping_pct} * CAST({scale} AS BIGINT))"
                  f" DIV (100 * _n) AS BIGINT)")
@@ -128,17 +130,10 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
                                 "COALESCE(_in, CAST(0 AS BIGINT)))"
                                 " DIV 100 AS BIGINT)").alias("rank_fx"))
                  .localCheckpoint())
-    out = (ranks.join(outdeg, F.col("node_id") == F.col("src"), "left")
-           .select("node_id", "rank_fx",
-                   F.expr("COALESCE(out_deg, CAST(0 AS BIGINT))")
-                   .alias("out_deg")))
-    # cache scope = result lifetime (the knn_join pattern, spatial.py): a
-    # plan that outlives the result recomputes from lineage — slower,
-    # never wrong
-    weakref.finalize(out, _safe_unpersist, e)
-    weakref.finalize(out, _safe_unpersist, nodes)
-    weakref.finalize(out, _safe_unpersist, ew)
-    return out
+    return (ranks.join(outdeg, F.col("node_id") == F.col("src"), "left")
+            .select("node_id", "rank_fx",
+                    F.expr("COALESCE(out_deg, CAST(0 AS BIGINT))")
+                    .alias("out_deg")))
 
 
 def pagerank_duckdb_sql(edges_sql: str, n_iter: int = 5,
@@ -253,8 +248,8 @@ def hits(edges: DataFrame, n_iter: int = 5,
     promotes the SUM to HUGEINT and raises on the out-of-range product
     (hard error) — size `scale` to the graph's max in-degree.
 
-    Plan: edges persisted once; each round is two join→hash-agg passes
-    plus two 1-row L1 totals that ride broadcasts (no driver collect).
+    Plan: each round is two join→hash-agg passes over the edges plus two
+    1-row L1 totals that ride broadcasts (no driver collect).
     Unlike pagerank, each round references the previous score vector
     FOUR times (raw agg in the total AND the rescale, for both roles) —
     left lazy, the logical plan and the executed work grow 4^n_iter, so
@@ -263,9 +258,11 @@ def hits(edges: DataFrame, n_iter: int = 5,
     (node_id, BIGINT) relation to executor-local storage and all later
     references read it flat.  The intra-round authority vector needs no
     checkpoint of its own — it reads the already-flat hubs, so its
-    subtree is constant-size; its raw aggregate is persisted (it is
-    read by the L1 total, the rescale, and the next half-round) and the
-    last round's stays cached for the output join.  Values are
+    subtree is constant-size; its raw aggregate (read by the L1 total,
+    the rescale, and the next half-round; the last round's also by the
+    output join) is a lazy localCheckpoint, as are the hub raw aggregate,
+    the edges and the node relation — each materialized by its first job
+    and freed by Spark's cleaner once no plan reads it.  Values are
     unchanged (integer arithmetic, already deterministic); the cost is
     one job per round, the shape a checkpointed iterative
     GraphX/GraphFrames loop pays.
@@ -273,10 +270,10 @@ def hits(edges: DataFrame, n_iter: int = 5,
     kept in the output, not dropped.  Output: (node_id, hub_fx,
     auth_fx), each column summing to ~scale minus floor leak."""
     assert n_iter >= 1, "hits needs at least one reinforcement round"
-    e = _spread(edges).select("src", "dst").persist()
+    e = _spread(edges).select("src", "dst").localCheckpoint(eager=False)
     nodes = (e.select(F.col("src").alias("node_id"))
              .unionByName(e.select(F.col("dst").alias("node_id")))
-             .distinct().persist())
+             .distinct().localCheckpoint(eager=False))
     n1 = nodes.agg(F.count("*").cast("long").alias("_n"))
     # h0 is referenced once (round 1's a_raw): no checkpoint needed.
     # GREATEST(..., 1): with more than `scale` nodes the floor division
@@ -289,9 +286,8 @@ def hits(edges: DataFrame, n_iter: int = 5,
          .select("node_id",
                  F.expr(f"GREATEST(CAST(CAST({scale} AS BIGINT) DIV _n "
                         f"AS BIGINT), 1)").alias("h_fx")))
-    a = a_raw = None
-    for i in range(n_iter):
-        prev_a_raw = a_raw
+    a = None
+    for _ in range(n_iter):
         # (r6 note: folding the L1 total into this aggregation via
         # rollup/grouping-sets was measured and REVERTED — the Expand
         # doubles the aggregation input, costing far more than the
@@ -307,7 +303,7 @@ def hits(edges: DataFrame, n_iter: int = 5,
         # bit-identical (same sums, same DIV rescale).
         a_raw = (h.join(e, F.col("node_id") == F.col("src"))
                  .groupBy("dst").agg(F.sum("h_fx").alias("_a"))
-                 .persist())
+                 .localCheckpoint(eager=False))
         a_tot = a_raw.agg(F.sum("_a").alias("_t"))
         a = (a_raw.crossJoin(F.broadcast(a_tot))
              .select(F.col("dst").alias("node_id"),
@@ -315,32 +311,24 @@ def hits(edges: DataFrame, n_iter: int = 5,
                             f"DIV _t AS BIGINT)").alias("a_fx")))
         h_raw = (a.join(e, F.col("node_id") == F.col("dst"))
                  .groupBy("src").agg(F.sum("a_fx").alias("_h"))
-                 .persist())
+                 .localCheckpoint(eager=False))
         h_tot = h_raw.agg(F.sum("_h").alias("_t2"))
         h = (h_raw.crossJoin(F.broadcast(h_tot))
              .select(F.col("src").alias("node_id"),
                      F.expr(f"CAST((_h * CAST({scale} AS BIGINT)) "
                             f"DIV _t2 AS BIGINT)").alias("h_fx"))
              .localCheckpoint())
-        h_raw.unpersist()
-        if prev_a_raw is not None:
-            prev_a_raw.unpersist()
     # densify once: every node appears in the output, zero-score nodes
     # (no in-links / no out-links) included — same rows and values as the
     # old per-round dense rebuild
-    out = (nodes
-           .join(h.selectExpr("node_id AS _nh", "h_fx"),
-                 F.col("node_id") == F.col("_nh"), "left")
-           .join(a.selectExpr("node_id AS _na", "a_fx"),
-                 F.col("node_id") == F.col("_na"), "left")
-           .select("node_id",
-                   F.expr("COALESCE(h_fx, CAST(0 AS BIGINT))").alias("hub_fx"),
-                   F.expr("COALESCE(a_fx, CAST(0 AS BIGINT))").alias("auth_fx")))
-    weakref.finalize(out, _safe_unpersist, e)
-    weakref.finalize(out, _safe_unpersist, nodes)
-    if a_raw is not None:
-        weakref.finalize(out, _safe_unpersist, a_raw)
-    return out
+    return (nodes
+            .join(h.selectExpr("node_id AS _nh", "h_fx"),
+                  F.col("node_id") == F.col("_nh"), "left")
+            .join(a.selectExpr("node_id AS _na", "a_fx"),
+                  F.col("node_id") == F.col("_na"), "left")
+            .select("node_id",
+                    F.expr("COALESCE(h_fx, CAST(0 AS BIGINT))").alias("hub_fx"),
+                    F.expr("COALESCE(a_fx, CAST(0 AS BIGINT))").alias("auth_fx")))
 
 
 def hits_duckdb_sql(edges_sql: str, n_iter: int = 5,
@@ -394,7 +382,7 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
     reached within the bound, dist in [0, n_rounds] exact integers.
 
     Plan: per round the FRONTIER (nodes first reached in the previous
-    round — not the whole known set) joins the persisted edge relation
+    round — not the whole known set) joins the checkpointed edge relation
     and the relaxed candidates fold into the known set via one
     map-side-combinable MIN agg; each round's known set is cut off with
     an eager ``localCheckpoint`` (the ``hits`` discipline — the set is
@@ -404,7 +392,7 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
     input is proportional to the NEW wavefront, not the accumulated
     reach, so the expanding-ball blowup stays in the agg's hash table
     where partial aggregation absorbs it."""
-    e = _spread(edges).select("src", "dst").persist()
+    e = _spread(edges).select("src", "dst").localCheckpoint(eager=False)
     dist = (sources.select("node_id",
                            F.lit(0).cast("long").alias("dist"))
             .distinct().localCheckpoint())
@@ -416,7 +404,6 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
         dist = (dist.unionByName(relaxed)
                 .groupBy("node_id").agg(F.min("dist").alias("dist"))
                 .localCheckpoint())
-    weakref.finalize(dist, _safe_unpersist, e)
     return dist
 
 
@@ -503,14 +490,14 @@ def label_propagation(edges: DataFrame, n_rounds: int = 5) -> DataFrame:
     round budget is the standard production cut — communities are
     whatever the labels say after ``n_rounds``).
 
-    Plan: per round one equi-join against the persisted edges, one
+    Plan: per round one equi-join against the checkpointed edges, one
     (dst, label) hash count — map-side combinable, the hot-community
     skew absorber — then an argmax folded as MIN(STRUCT(-cnt, label))
     in the same agg pipeline (no window, no sort), LEFT join back so
     isolated nodes survive.  The label vector is referenced twice per
     round (votes + keep-own fallback): localCheckpoint per round, the
     ``hits`` discipline.  Output: (node_id, label)."""
-    e = _spread(edges).select("src", "dst").persist()
+    e = _spread(edges).select("src", "dst").localCheckpoint(eager=False)
     labels = (e.select(F.col("src").alias("node_id"))
               .unionByName(e.select(F.col("dst").alias("node_id")))
               .distinct()
@@ -528,7 +515,6 @@ def label_propagation(edges: DataFrame, n_rounds: int = 5) -> DataFrame:
                   .select("node_id",
                           F.coalesce("new_label", "label").alias("label"))
                   .localCheckpoint())
-    weakref.finalize(labels, _safe_unpersist, e)
     return labels
 
 

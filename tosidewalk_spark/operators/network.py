@@ -433,28 +433,12 @@ def merge_nodes_gw(gw: DataFrame,
 
 # --- R17 Douglas-Peucker simplification ------------------------------------------
 
-_SIMPLIFY_SCHEMA = T.StructType([
-    T.StructField("way_id", T.LongType()),
-    T.StructField("node_ids", T.ArrayType(T.LongType())),
-])
-
-
 def simplify_ways(nodes: DataFrame, ways: DataFrame,
                   tol_m: float = geom.DP_TOLERANCE_M) -> DataFrame:
     """R17: exact recursive Douglas-Peucker per way (kernel twin), dropping
-    interior vertices below tol_m.  GROUPED_MAP pandas UDF over the
-    resolved geometry — groups are single ways, trivially bounded."""
-    gw = geom_ways(nodes, ways)
-
-    def dp(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples():
-            keep = geom.douglas_peucker_mask(np.asarray(r.lats), np.asarray(r.lngs), tol_m)
-            out.append({"way_id": r.way_id,
-                        "node_ids": [int(x) for x, k in zip(r.node_ids, keep) if k]})
-        return pd.DataFrame(out)
-
-    slim = gw.groupBy("way_id").applyInPandas(lambda _, p: dp(p), _SIMPLIFY_SCHEMA)
+    interior vertices below tol_m — ``simplify_gw`` over the resolved
+    geometry, projected back to the node/way form."""
+    slim = simplify_gw(geom_ways(nodes, ways), tol_m).select("way_id", "node_ids")
     return slim.join(ways.drop("node_ids"), "way_id")
 
 
@@ -475,10 +459,11 @@ def way_length_expr() -> F.Column:
 
 def remove_short_segments(nodes: DataFrame, ways: DataFrame,
                           min_len_m: float = geom.SHORT_SEGMENT_M) -> DataFrame:
-    """R18: drop ways shorter than min_len_m (filter on an R9 length agg)."""
-    gw = geom_ways(nodes, ways).withColumn("len_m", way_length_expr())
-    return gw.filter(F.col("len_m") >= min_len_m) \
-             .select("way_id", "node_ids", "highway", "tags")
+    """R18: drop ways shorter than min_len_m (filter on an R9 length agg) —
+    ``drop_short_gw`` over the resolved geometry, projected back to the
+    node/way form."""
+    return (drop_short_gw(geom_ways(nodes, ways), min_len_m)
+            .select("way_id", "node_ids", "highway", "tags"))
 
 
 def simplify_gw(gw: DataFrame, tol_m: float = geom.DP_TOLERANCE_M) -> DataFrame:

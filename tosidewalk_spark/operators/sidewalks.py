@@ -7,17 +7,16 @@ SURVEY.md §0): ``ToSidewalk.py § make_sidewalk_nodes`` (R12),
 connect_crosswalk_nodes / swap_nodes`` (R16), ``ToSidewalk.py § main``
 union (R19), ``network.py § export`` (R20).
 
-All geometry runs in GROUPED_MAP pandas UDFs over already-gathered vertex
-arrays calling the numpy kernel (no per-row Python — BASELINE.json:16);
-groups are single ways / single intersections, so UDF group size is O(way
-length), trivially bounded at any data scale.  Id assignment is a pure
-function of input ids (SURVEY.md §7 hard part 2), so output is independent
-of partitioning and parallelism.
+Sidewalk offsets are pure SQL over the gathered vertex arrays; crosswalk
+geometry runs in GROUPED_MAP pandas UDFs calling the numpy kernel (no
+per-row Python — BASELINE.json:16) with single intersections as groups,
+so UDF group size is trivially bounded at any data scale.  Id assignment
+is a pure function of input ids (SURVEY.md §7 hard part 2), so output is
+independent of partitioning and parallelism.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
@@ -32,22 +31,12 @@ CW_WAY_BASE = 2_000_000_000
 CW_NODE_BASE = 2_000_000_000_000
 SNAP_DIST_M = 8.0  # sidewalk endpoint -> crosswalk corner splice radius
 
-_SW_SCHEMA = T.StructType([
-    T.StructField("way_id", T.LongType()),
-    T.StructField("parent_way_id", T.LongType()),
-    T.StructField("side", T.IntegerType()),
-    T.StructField("node_ids", T.ArrayType(T.LongType())),
-    T.StructField("lats", T.ArrayType(T.DoubleType())),
-    T.StructField("lngs", T.ArrayType(T.DoubleType())),
-    T.StructField("highway", T.StringType()),
-])
-
 
 def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> DataFrame:
     """R12+R13: two sidewalk polylines per street way, offset +-offset_m
     perpendicular via the bisector method — pure Spark SQL, bit-identical
-    to kernel.offset_polyline (r6 rewrite of the applyInPandas form, kept
-    as _make_sidewalks_pandas and pinned equal by
+    to kernel.offset_polyline (r6 rewrite of the applyInPandas form,
+    pinned equal to the kernel by
     tests/test_sidewalks.py::test_make_sidewalks_sql_matches_pandas).
 
     Why SQL: the pandas form was the ONLY python stage in the bench's
@@ -62,7 +51,7 @@ def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> D
     node = SW_NODE_BASE + parent*20000 + side*10000 + seq."""
     M = sqlfns.M
     d = sqlfns.dlit(offset_m)
-    # n < 2: no segments (the pandas form's `continue`); node-id capacity
+    # n < 2: no segments, so no sidewalk; node-id capacity
     # guard stays loud (ASSERT_TRUE evaluates per row, raises on overflow)
     base = (gw.filter(F.size("lats") >= 2)
             .filter(F.expr(
@@ -121,7 +110,7 @@ def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> D
     # left = rotate +90 (lx, ly) = (x - vy*d, y + vx*d); right the mirror;
     # unproject: lat0 + py / M, lng0 + px / (M * cs) — kernel op order
     offs = v.select(
-        "way_id", "highway", "_n",
+        F.col("way_id").alias("_pid"), "highway", "_n",
         F.expr(f"TRANSFORM(SEQUENCE(1, _n), k -> ELEMENT_AT(lats, 1) "
                f"+ (ELEMENT_AT(_ys, k) + ELEMENT_AT(_vxs, k) * {d}) / {M})").alias("_llats"),
         F.expr(f"TRANSFORM(SEQUENCE(1, _n), k -> ELEMENT_AT(lngs, 1) "
@@ -132,46 +121,14 @@ def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> D
                f"+ (ELEMENT_AT(_xs, k) + ELEMENT_AT(_vys, k) * {d}) / ({M} * _cs))").alias("_rlngs"))
     sided = offs.select("*", F.explode(F.expr("ARRAY(0, 1)")).alias("side"))
     return sided.select(
-        F.expr(f"{SW_WAY_BASE} + 2 * way_id + side").alias("way_id"),
-        F.col("way_id").alias("parent_way_id"),
+        F.expr(f"{SW_WAY_BASE} + 2 * _pid + side").alias("way_id"),
+        F.col("_pid").alias("parent_way_id"),
         F.col("side"),
         F.expr(f"TRANSFORM(SEQUENCE(0, _n - 1), k -> "
-               f"{SW_NODE_BASE} + way_id * 20000 + side * 10000 + k)").alias("node_ids"),
+               f"{SW_NODE_BASE} + _pid * 20000 + side * 10000 + k)").alias("node_ids"),
         F.expr("CASE WHEN side = 0 THEN _llats ELSE _rlats END").alias("lats"),
         F.expr("CASE WHEN side = 0 THEN _llngs ELSE _rlngs END").alias("lngs"),
         F.col("highway"))
-
-
-def _make_sidewalks_pandas(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> DataFrame:
-    """The original applyInPandas form of make_sidewalks — retained as the
-    kernel-faithful twin the SQL rewrite is tested bit-equal against."""
-
-    def offset(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples():
-            la = np.asarray(r.lats, dtype=np.float64)
-            lg = np.asarray(r.lngs, dtype=np.float64)
-            if la.size < 2:
-                continue
-            if la.size >= 10_000:  # node-id scheme capacity — fail loudly
-                raise ValueError(f"way {r.way_id}: {la.size} vertices "
-                                 "overflow the sidewalk node-id scheme")
-            llat, llng, rlat, rlng = geom.offset_polyline(la, lg, offset_m)
-            pid = int(r.way_id)
-            for side, (slat, slng) in enumerate(((llat, llng), (rlat, rlng))):
-                out.append({
-                    "way_id": SW_WAY_BASE + 2 * pid + side,
-                    "parent_way_id": pid,
-                    "side": side,
-                    "node_ids": [SW_NODE_BASE + pid * 20_000 + side * 10_000 + k
-                                 for k in range(la.size)],
-                    "lats": slat.tolist(),
-                    "lngs": slng.tolist(),
-                    "highway": r.highway,
-                })
-        return pd.DataFrame(out, columns=[f.name for f in _SW_SCHEMA.fields])
-
-    return gw.groupBy("way_id").applyInPandas(lambda _, p: offset(p), _SW_SCHEMA)
 
 
 # --- R14/R15/R16: crosswalks ---------------------------------------------------

@@ -1255,22 +1255,18 @@ def bpe_learn(docs: DataFrame,
          corpus through an inner cross join.
     Tokenization state is the sentinel string of bpe_chain_sql — merges
     stay correct under plain REPLACE for the reasons documented there.
-    Each round's state and winner persist so round k's lineage does not
-    recompute rounds 1..k-1 (the kmeans_assign discipline).
+    Each round's state and winner are eager localCheckpoints (the round
+    state of every fixpoint operator), so round k's plan reads them flat
+    instead of recomputing rounds 1..k-1.
 
     100 TB: per round = one corpus scan + agg (combiner-backed) and one
     broadcast join; K rounds = K passes.  Production tokenizer training
     runs on a sample — compose with deterministic_sample(docs) upstream;
     the learned table then drives bpe_tokenize over the full corpus.
     """
-    import weakref
-
-    from .spatial import _safe_unpersist
-
     state = (_spread(docs)
              .select("doc_id", F.expr(_sentinel_sql("text")).alias("s"))
-             .persist())
-    pinned = [state]
+             .localCheckpoint())
     upd = ("REPLACE(s, COALESCE(CONCAT('|', a, '||', b, '|'), CHR(1)), "
            "COALESCE(CONCAT('|', a, b, '|'), ''))")
     bests = []
@@ -1281,21 +1277,17 @@ def bpe_learn(docs: DataFrame,
                         F.expr("SPLIT_PART(pair, CHR(2), 1)").alias("a"),
                         F.expr("SPLIT_PART(pair, CHR(2), 2)").alias("b"),
                         "pair_count")
-                .persist())
+                .localCheckpoint())
         bests.append(best)
-        pinned.append(best)
         if k < n_merges:
             state = (state
                      .join(F.broadcast(best.select("a", "b")),
                            F.lit(True), "left")
                      .select("doc_id", F.expr(upd).alias("s"))
-                     .persist())
-            pinned.append(state)
+                     .localCheckpoint())
     out = bests[0]
     for b in bests[1:]:
         out = out.unionByName(b)
-    for df in pinned:
-        weakref.finalize(out, _safe_unpersist, df)
     return out
 
 
