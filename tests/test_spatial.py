@@ -137,6 +137,15 @@ def test_flagship_smoke(spark):
     assert df.columns == ["cell9", "n_pages", "n_matched", "coverage", "raster"]
 
 
+def test_build_network_g6_digest(spark):
+    """The production inference chain's exact output on the g=6 grid city:
+    (rows, lineage checksum) pinned, not just rows > 0."""
+    from tosidewalk_spark.operators import lineage
+    net = pipeline.build_network(*synth.osm_grid(spark, g=6))
+    row = net.agg(F.count("*").alias("n"), lineage.checksum_expr(net.columns)).first()
+    assert (row["n"], row["checksum"]) == (286, 319612802063)
+
+
 def test_vectorize_tiles_runs_and_merges_runs(spark):
     raster = [0.0, 2.0, 2.0, 0.0,
               0.0, 0.0, 0.0, 3.0,

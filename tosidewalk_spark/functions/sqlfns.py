@@ -8,8 +8,13 @@ codegen — the fast path per the north rule) and verbatim inside the
 bit-identical arithmetic, which is what makes the driver's value-hash
 comparison pass without tolerance hacks.
 
-Kernel twins: cells.cell == CELL_TPL, geom.haversine_m == HAVERSINE_TPL,
-geom.point_segment_dist_m == SEG_DIST_TPL, cells.hash63 == polyhash.
+Kernel twins: cells.cell == cell_sql, cells.cell_res/cell_ij ==
+cell_decode_sql, cells.pack_ij == cell_pack_sql, cells.disk == disk_sql,
+geom.haversine_m == haversine_sql, geom.point_segment_dist_m ==
+seg_dist_sql, cells.hash63 == polyhash.  The packed cell-id layout
+(res·2^56 + j·2^28 + i) is spelled here and in kernel/cells.py only;
+operators and oracle twins go through the cell_* / lattice / disk
+templates.
 Unit tests in tests/test_sqlfns.py check numpy-vs-Spark-vs-DuckDB equality.
 """
 
@@ -35,28 +40,74 @@ M = "111111.0e0"
 EARTH_R = "6371009.0e0"
 
 
+def cell_decode_sql(cell: str) -> tuple[str, str, str]:
+    """(res, j, i) fields of a packed cell id — mirror of kernel.cells
+    cell_res / cell_ij.  ``res`` is INT, ``j`` and ``i`` BIGINT.  The one
+    division both engines spell alike is a DOUBLE division, so each field
+    is isolated by modulo BEFORE dividing: the numerators res·2^56 and
+    j·2^28 have at most 28 significant bits and divide exactly.  (Dividing
+    ``cell % 2^56 = j·2^28 + i`` instead rounds once that sum passes 2^53,
+    which at res 19 maps the last columns before lng = +180 to j + 1.)"""
+    c = f"({cell})"
+    return (f"CAST(({c} - {c} % {POW2_56}) / {POW2_56} AS INT)",
+            f"CAST(({c} % {POW2_56} - {c} % {POW2_28}) / {POW2_28} AS BIGINT)",
+            f"({c} % {POW2_28})")
+
+
+def cell_pack_sql(res, j: str, i: str) -> str:
+    """Cell id from its (res, j, i) fields — mirror of kernel.cells.pack_ij.
+    ``res`` is an int or an integer expression."""
+    return f"(CAST({res} AS BIGINT) * {POW2_56} + ({j}) * {POW2_28} + ({i}))"
+
+
+def in_field_sql(j: str, i: str) -> str:
+    """True when lattice coordinates fit the 28-bit j/i fields.  A
+    coordinate outside them packs onto a DIFFERENT real cell (i = -1 is
+    bit-identical to (j - 1, i = 2^28 - 1)), so neighbor arithmetic that
+    can leave the lattice filters on this."""
+    return (f"(({i}) >= 0 AND ({i}) < {POW2_28} "
+            f"AND ({j}) >= 0 AND ({j}) < {POW2_28})")
+
+
+def lattice_sql(lat: str, lng: str, res: int) -> tuple[str, str]:
+    """(j, i) lattice coordinates of a lat/lng at ``res`` (BIGINT)."""
+    s = dlit(_cells.cell_size_deg(res))
+    return (f"CAST(FLOOR(({lat} + 90.0e0) / {s}) AS BIGINT)",
+            f"CAST(FLOOR(({lng} + 180.0e0) / {s}) AS BIGINT)")
+
+
 def cell_sql(lat: str, lng: str, res: int = 9) -> str:
     """Cell id at resolution ``res`` — mirror of kernel.cells.cell."""
-    s = dlit(360.0 / float(2 ** (res + 9)))
-    return (
-        f"(CAST({res} AS BIGINT) * {POW2_56} "
-        f"+ CAST(FLOOR(({lat} + 90.0e0) / {s}) AS BIGINT) * {POW2_28} "
-        f"+ CAST(FLOOR(({lng} + 180.0e0) / {s}) AS BIGINT))"
-    )
+    return cell_pack_sql(res, *lattice_sql(lat, lng, res))
+
+
+def disk_sql(j: str, i: str, res, r_lat: int, r_lng: int | None = None) -> str:
+    """ARRAY of the (2·r_lat + 1) x (2·r_lng + 1) cell ids around lattice
+    point (j, i) at ``res`` — kernel.cells.disk with separate lat/lng radii
+    (r_lng defaults to r_lat).  Unrolled: every element is two integer adds
+    and a pack, so the array stays in whole-stage codegen.  Pass ``j`` and
+    ``i`` as STAGED columns: each element repeats them, and an inline
+    FLOOR derivation (or an unmaterialized upstream chain behind lat/lng)
+    would be re-evaluated per element — a disk(6) probe written that way
+    ran ~100x slower.  No lattice-edge clipping: ids past the edge alias
+    other cells, so callers that can reach an edge filter on in_field_sql
+    or refine every candidate exactly.  Spark SQL; DuckDB spells the
+    ARRAY(...) constructor list_value(...)."""
+    r_lng = r_lat if r_lng is None else r_lng
+    return "ARRAY(" + ", ".join(
+        cell_pack_sql(res, f"{j} + {dj}", f"{i} + {di}")
+        for di in range(-r_lng, r_lng + 1)
+        for dj in range(-r_lat, r_lat + 1)) + ")"
 
 
 def parent_sql(cell: str, res: int, parent_res: int) -> str:
     """Parent cell id — mirror of kernel.cells.parent.  Integer shifts are
     spelled FLOOR(x / 2**n) because Spark's DIV is not DuckDB SQL and
-    DuckDB's // is not Spark SQL; all values < 2**52 so doubles are exact."""
+    DuckDB's // is not Spark SQL; j, i < 2**28, so the doubles are exact."""
     d = 2 ** (res - parent_res)
-    j = f"CAST(FLOOR((({cell}) % {POW2_56}) / {POW2_28}) AS BIGINT)"
-    i = f"(({cell}) % {POW2_28})"
-    return (
-        f"(CAST({parent_res} AS BIGINT) * {POW2_56} "
-        f"+ CAST(FLOOR({j} / {d}) AS BIGINT) * {POW2_28} "
-        f"+ CAST(FLOOR({i} / {d}) AS BIGINT))"
-    )
+    _, j, i = cell_decode_sql(cell)
+    return cell_pack_sql(parent_res, f"CAST(FLOOR({j} / {d}) AS BIGINT)",
+                         f"CAST(FLOOR({i} / {d}) AS BIGINT)")
 
 
 def zorder_sql(i: str, j: str, bits: int = 16) -> str:
@@ -221,32 +272,6 @@ def polyhash_duckdb(s: str, mult: int = 31) -> str:
         f"k -> CAST(ascii(substr({s}, k, 1)) AS BIGINT))), "
         f"(a, x) -> (a * {mult} + x) % {HASH_P}) END)"
     )
-
-
-def polyhash_unrolled(s: str, max_len: int = 12) -> str:
-    """Polynomial hash of a SHORT (<= max_len chars) string as pure nested
-    arithmetic (no higher-order functions) — identical fold and values as
-    polyhash_spark/duckdb.  MEASURED SLOWER than the lambda fold (2.7x at
-    10M rows: per-char SUBSTRING slicing + the 78-branch CASE dispatch cost
-    more than the HOF interpreter) — kept as the documented experiment and
-    for engines/contexts where lambdas are unavailable; the engine's hot
-    paths use polyhash_spark.  One template string, valid in both Spark
-    and DuckDB.  Strings longer than max_len return -1 (a loud sentinel).
-
-    Shape note: the fold is dispatched on LENGTH(s) at the TOP so each
-    branch is a straight-line fold of exactly n chars — wrapping each fold
-    STEP in its own CASE duplicates the accumulator per level and builds a
-    2^max_len-node tree (measured 100x slower; ``s`` must be a plain
-    column reference, staged by the caller)."""
-    branches = []
-    for n in range(1, max_len + 1):
-        acc = "CAST(0 AS BIGINT)"
-        for i in range(1, n + 1):
-            c = f"CAST(ASCII(SUBSTRING({s}, {i}, 1)) AS BIGINT)"
-            acc = f"(({acc} * 31 + {c}) % {HASH_P})"
-        branches.append(f"WHEN {n} THEN {acc}")
-    return (f"(CASE LENGTH({s}) WHEN 0 THEN CAST(0 AS BIGINT) "
-            + " ".join(branches) + " ELSE CAST(-1 AS BIGINT) END)")
 
 
 def minhash_spark(hashes_col: str, a: int, b: int) -> str:

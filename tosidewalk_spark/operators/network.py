@@ -346,11 +346,9 @@ def _node_merge_remap(pts: DataFrame, threshold_m: float) -> DataFrame:
     old cand.isEmpty() guard evaluated the whole candidate plan as an
     extra job per call)."""
     res = 13  # 9.5 m cells > 5 m threshold
-    disk_cells = F.array(*[
-        F.expr(sqlfns.cell_sql(f"lat + {di} * {cells.cell_size_deg(res)!r}",
-                               f"lng + {dj} * {cells.cell_size_deg(res)!r}", res))
-        for di in (-1, 0, 1) for dj in (-1, 0, 1)])
-    left = pts.withColumn("cell", F.explode(disk_cells))
+    j, i = sqlfns.lattice_sql("lat", "lng", res)
+    left = (pts.select("*", F.expr(j).alias("_j"), F.expr(i).alias("_i"))
+            .withColumn("cell", F.explode(F.expr(sqlfns.disk_sql("_j", "_i", res, 1)))))
     right = pts.select(
         F.col("node_id").alias("node_id_b"), F.col("lat").alias("lat_b"),
         F.col("lng").alias("lng_b"),
@@ -546,25 +544,20 @@ def find_parallel_pairs(gw: DataFrame,
     >= half the lat edge)."""
     import math as _math
     res = 11
-    s = sqlfns.dlit(cells.cell_size_deg(res))
     edge_m = cells.cell_size_deg(res) * geom.M_PER_DEG
     r_lat = _math.ceil(dist_m / edge_m)
     r_lng = _math.ceil(dist_m / (edge_m * 0.5))
-    jk = f"CAST(FLOOR((lats[k] + 90.0e0) / {s}) AS BIGINT)"
-    ik = f"CAST(FLOOR((lngs[k] + 180.0e0) / {s}) AS BIGINT)"
-    covered = F.expr(
-        "ARRAY_DISTINCT(FLATTEN(TRANSFORM(SEQUENCE(0, SIZE(lats) - 1), k -> "
-        f"FLATTEN(TRANSFORM(SEQUENCE(-{r_lat}, {r_lat}), di -> "
-        f"TRANSFORM(SEQUENCE(-{r_lng}, {r_lng}), dj -> "
-        f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
-        f"+ ({jk} + di) * {sqlfns.POW2_28} + ({ik} + dj)))))))")
-    exact = F.expr(
-        "ARRAY_DISTINCT(TRANSFORM(SEQUENCE(0, SIZE(lats) - 1), k -> "
-        f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
-        f"+ ({jk}) * {sqlfns.POW2_28} + ({ik})))")
-    a = gw.select(F.col("way_id").alias("way_a"), *_endpoint_cols("a"),
+    # per-vertex lattice coords staged once; the disks add integer offsets
+    jk, ik = sqlfns.lattice_sql("lat", "lng", res)
+    ji = gw.withColumn("_ji", F.expr(
+        f"ZIP_WITH(lats, lngs, (lat, lng) -> NAMED_STRUCT('j', {jk}, 'i', {ik}))"))
+    covered = F.expr("ARRAY_DISTINCT(FLATTEN(TRANSFORM(_ji, p -> "
+                     f"{sqlfns.disk_sql('p.j', 'p.i', res, r_lat, r_lng)})))")
+    exact = F.expr("ARRAY_DISTINCT(TRANSFORM(_ji, p -> "
+                   f"{sqlfns.cell_pack_sql(res, 'p.j', 'p.i')}))")
+    a = ji.select(F.col("way_id").alias("way_a"), *_endpoint_cols("a"),
                   F.explode(covered).alias("cell"))
-    b = gw.select(F.col("way_id").alias("way_b"), *_endpoint_cols("b"),
+    b = ji.select(F.col("way_id").alias("way_b"), *_endpoint_cols("b"),
                   F.col("lats").alias("lats_b"), F.col("lngs").alias("lngs_b"),
                   F.explode(exact).alias("cell"))
     cand = (a.join(b, "cell").filter(F.col("way_a") < F.col("way_b"))

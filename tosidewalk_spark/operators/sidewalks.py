@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from ..functions import sqlfns
-from ..kernel import cells, geom
+from ..kernel import geom
 from . import network as N
 
 SW_WAY_BASE = 1_000_000_000
@@ -218,7 +218,6 @@ def rewire_sidewalk_endpoints(sidewalks: DataFrame, corners: DataFrame,
     join (res 13 disk-1 covers the snap radius) -> nearest corner per
     endpoint via top-1 window -> conditional array rewrite in SQL (no UDF)."""
     res = 13
-    s = cells.cell_size_deg(res)
     ends = sidewalks.select(
         "way_id",
         F.explode(F.array(
@@ -229,9 +228,9 @@ def rewire_sidewalk_endpoints(sidewalks: DataFrame, corners: DataFrame,
         )).alias("e")
     ).select("way_id", F.col("e.pos").alias("pos"),
              F.col("e.elat").alias("elat"), F.col("e.elng").alias("elng"))
-    ends_cells = ends.withColumn("cell", F.explode(F.array(*[
-        F.expr(sqlfns.cell_sql(f"elat + {di} * {s!r}", f"elng + {dj} * {s!r}", res))
-        for di in (-1, 0, 1) for dj in (-1, 0, 1)])))
+    j, i = sqlfns.lattice_sql("elat", "elng", res)
+    ends_cells = (ends.select("*", F.expr(j).alias("_j"), F.expr(i).alias("_i"))
+                  .withColumn("cell", F.explode(F.expr(sqlfns.disk_sql("_j", "_i", res, 1)))))
     corner_cells = corners.withColumn(
         "cell", F.expr(sqlfns.cell_sql("corner_lat", "corner_lng", res)))
     cand = (ends_cells.join(corner_cells, "cell")

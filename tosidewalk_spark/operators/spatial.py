@@ -77,7 +77,6 @@ def street_buffers(segments: DataFrame,
     DEFAULT_RES (9) for the kNN ring index."""
     M = sqlfns.M
     hw = sqlfns.dlit(half_width_m)
-    s = sqlfns.dlit(cells.cell_size_deg(res))
     st = (segments
           .select("way_id", "segment_id", "alat", "alng", "blat", "blng",
                   F.expr(f"({sqlfns.coslat_sql('alat')} * {M})").alias("cm"))
@@ -94,18 +93,16 @@ def street_buffers(segments: DataFrame,
                f"alat + (my - ny) / {M}, alat + (-ny) / {M})").alias("poly_lats"),
         F.expr("ARRAY(alng + nx / cm, alng + (mx + nx) / cm, "
                "alng + (mx - nx) / cm, alng + (-nx) / cm)").alias("poly_lngs"))
-    bounds = poly.select("*",
-        F.expr(f"CAST(FLOOR((ARRAY_MIN(poly_lats) + 90.0e0) / {s}) AS BIGINT)").alias("j0"),
-        F.expr(f"CAST(FLOOR((ARRAY_MAX(poly_lats) + 90.0e0) / {s}) AS BIGINT)").alias("j1"),
-        F.expr(f"CAST(FLOOR((ARRAY_MIN(poly_lngs) + 180.0e0) / {s}) AS BIGINT)").alias("i0"),
-        F.expr(f"CAST(FLOOR((ARRAY_MAX(poly_lngs) + 180.0e0) / {s}) AS BIGINT)").alias("i1"))
+    j0, i0 = sqlfns.lattice_sql("ARRAY_MIN(poly_lats)", "ARRAY_MIN(poly_lngs)", res)
+    j1, i1 = sqlfns.lattice_sql("ARRAY_MAX(poly_lats)", "ARRAY_MAX(poly_lngs)", res)
+    bounds = poly.select("*", F.expr(j0).alias("j0"), F.expr(j1).alias("j1"),
+                         F.expr(i0).alias("i0"), F.expr(i1).alias("i1"))
     out = bounds.select(
         "way_id", "segment_id", "alat", "alng", "blat", "blng",
         "poly_lats", "poly_lngs",
         F.expr(f"FLATTEN(TRANSFORM(SEQUENCE(j0, j1), jj -> "
                f"TRANSFORM(SEQUENCE(i0, i1), ii -> "
-               f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
-               f"+ jj * {sqlfns.POW2_28} + ii)))").alias("cells"),
+               f"{sqlfns.cell_pack_sql(res, 'jj', 'ii')})))").alias("cells"),
         F.lit(res).alias("cover_res"))
     # The cover_res COLUMN lets pip_join fail loudly on a resolution
     # mismatch even after the frame passes through checkpoints, selects or
@@ -209,33 +206,6 @@ def segments_by_cell(buffers: DataFrame) -> DataFrame:
         F.explode("cells").alias("cell")).dropDuplicates(["segment_id", "cell"])
 
 
-def _probe_ji_cols(res: int) -> list:
-    """The point's lattice coordinates at ``res``, staged ONCE as integer
-    columns.  The probe arrays below reference these columns instead of
-    re-deriving FLOOR((lat+90)/s) inside every array element: with the
-    old per-element form a disk(6) probe repeated the j/i derivation —
-    and, when lat/lng were unmaterialized upstream expressions (the
-    map_match ping chain's hash geocode), the WHOLE upstream chain —
-    169 times per row inside one giant interpreted projection (measured
-    ~85 us/row; the staged form is ~100x cheaper)."""
-    s = sqlfns.dlit(cells.cell_size_deg(res))
-    return [
-        F.expr(f"CAST(FLOOR((lat + 90.0e0) / {s}) AS BIGINT)").alias("_pj"),
-        F.expr(f"CAST(FLOOR((lng + 180.0e0) / {s}) AS BIGINT)").alias("_pi"),
-    ]
-
-
-def _probe_cells_expr(res: int, r_hi: int) -> F.Column:
-    """(2*r_hi+1)^2 probe cells (Chebyshev disk) around the point's cell
-    at ``res`` from the staged ``_pj``/``_pi`` columns (_probe_ji_cols) —
-    every element is two integer adds + a multiply, pure codegen."""
-    offs = [(di, dj) for di in range(-r_hi, r_hi + 1) for dj in range(-r_hi, r_hi + 1)]
-    return F.array(*[
-        F.expr(f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
-               f"+ (_pj + {dj}) * {sqlfns.POW2_28} + (_pi + {di})")
-        for di, dj in offs])
-
-
 def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
              max_ring: int = 8, first_radius: int = 2,
              res: int = cells.DEFAULT_RES) -> DataFrame:
@@ -265,10 +235,15 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
     s = cells.cell_size_deg(res)
     # conservative meters-per-cell lower bound (lng edge at |lat|<=60)
     edge_min_m = s * geom.M_PER_DEG * 0.5
-    # _pj/_pi staged once per point (see _probe_ji_cols): probe arrays
-    # become pure integer arithmetic over these columns
-    pts = points.select("url", "entity", "lat", "lng", "cell9",
-                        *_probe_ji_cols(res))
+    # the point's lattice coords staged once as _pj/_pi, so the probe
+    # disks (sqlfns.disk_sql) are pure integer arithmetic over them
+    pj, pi = sqlfns.lattice_sql("lat", "lng", res)
+    ji = [F.expr(pj).alias("_pj"), F.expr(pi).alias("_pi")]
+    pts = points.select("url", "entity", "lat", "lng", "cell9", *ji)
+
+    def probe(r: int) -> F.Column:
+        return F.explode(F.expr(sqlfns.disk_sql("_pj", "_pi", res, r)))
+
     # per-segment frame staged on the tiny build side (same JIT-limit
     # rationale and bit-identical arithmetic as pip_join)
     M = sqlfns.M
@@ -292,7 +267,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
     def topk(src: DataFrame, r_hi: int) -> DataFrame:
         # broadcast the segment-cover side: the fixed-size city network —
         # the points side is the data-scaled one and must stream
-        cand = (src.withColumn("cell", F.explode(_probe_cells_expr(res, r_hi)))
+        cand = (src.withColumn("cell", probe(r_hi))
                 .join(F.broadcast(sc), "cell")
                 .select("url", "entity", "lat", "lng", "cell9",
                         "way_id", "segment_id", dist_expr.alias("dist_m")))
@@ -337,7 +312,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
         # anti-joined pts against the settled set, i.e. two corpus-wide
         # shuffles on (url, entity) purely to find the zero-candidate
         # points phase 1 had dropped (review r4: 4.3 -> ~2 s at sf0.1).
-        cand = (pts.withColumn("cell", F.explode(_probe_cells_expr(res, first_radius)))
+        cand = (pts.withColumn("cell", probe(first_radius))
                 .join(F.broadcast(sc), "cell", "left")
                 .select("url", "entity", "lat", "lng", "cell9",
                         "way_id", "segment_id", dist_expr.alias("dist_m")))
@@ -358,8 +333,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
                         F.lit(1).alias("knn_rank")))
         stragglers = (phase1.filter(F.col("b").isNull()
                                     | (F.col("b.dist_m") > bound))
-                      .select("url", "entity", "lat", "lng", "cell9",
-                              *_probe_ji_cols(res)))
+                      .select("url", "entity", "lat", "lng", "cell9", *ji))
     else:
         phase1 = topk(pts, first_radius).persist()
         settled = (phase1.groupBy("url", "entity")
@@ -401,10 +375,8 @@ def coverage_tiles(points: DataFrame, matches: DataFrame,
     cells at any scale [BASELINE.json:14 'salted skew handling']."""
     res = cells.DEFAULT_RES
     sub_res = res + 2  # 4x per axis
-    s_sub = repr(cells.cell_size_deg(sub_res))
-    sub_idx = (
-        f"(CAST(FLOOR((lat + 90.0) / {s_sub}) AS BIGINT) % {n_sub}) * {n_sub} "
-        f"+ (CAST(FLOOR((lng + 180.0) / {s_sub}) AS BIGINT) % {n_sub})")
+    sj, si = sqlfns.lattice_sql("lat", "lng", sub_res)
+    sub_idx = f"({sj} % {n_sub}) * {n_sub} + ({si} % {n_sub})"
     # page counts: salted two-phase hash agg over the full points table;
     # matched counts: distinct-page agg over the (already filtered) match
     # rows, which carry their own lat/lng — NO wide (url, entity) join of
@@ -468,12 +440,6 @@ def vectorize_tiles(tiles: DataFrame, threshold: float = 1.0,
 
 # --- H3-style coverage compaction (compact / uncompact) ---------------------
 
-def _res_expr(cell: str) -> str:
-    """Resolution field of a cell id (dialect-portable: FLOOR-division,
-    same rule as sqlfns.parent_sql)."""
-    return f"CAST(FLOOR(({cell}) / {sqlfns.POW2_56}) AS INT)"
-
-
 def compact_cells(cover: DataFrame, res: int,
                   min_res: int = 6) -> DataFrame:
     """H3 ``compact`` analog over the quadtree lattice: fold every
@@ -509,28 +475,27 @@ def compact_cells(cover: DataFrame, res: int,
     output share a parent."""
     if not (0 <= min_res <= res):
         raise ValueError(f"need 0 <= min_res <= res, got {min_res}..{res}")
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
+    r, j, i = sqlfns.cell_decode_sql("cell")
     cur = cover.select(F.col("cell").cast("long").alias("cell")).distinct()
     if min_res == res:
-        return cur.select("cell", F.expr(_res_expr("cell")).alias("cell_res"))
-    at_res = cur.filter(F.expr(f"{_res_expr('cell')} = {res}"))
-    passthrough = cur.filter(F.expr(f"{_res_expr('cell')} <> {res}"))
+        return cur.select("cell", F.expr(r).alias("cell_res"))
+    at_res = cur.filter(F.expr(f"{r} = {res}"))
+    passthrough = cur.filter(F.expr(f"{r} <> {res}"))
     # every ancestor of every input cell, levels min_res..res-1
     ancs = F.array(*[F.expr(sqlfns.parent_sql("cell", res, lo))
                      for lo in range(min_res, res)])
     cnt = (at_res.select(F.explode(ancs).alias("cell"))
            .groupBy("cell").agg(F.count("*").alias("n")))
     required = ("(CASE " + " ".join(
-        f"WHEN {_res_expr('cell')} = {lo} THEN {4 ** (res - lo)}"
+        f"WHEN {r} = {lo} THEN {4 ** (res - lo)}"
         for lo in range(min_res, res)) + " END)")
     complete_anc = cnt.filter(F.expr(f"n = {required}")).select("cell")
     # parent one level up, valid for a cell at ANY level >= 1
-    gp = (f"((cell DIV {P56}) - 1) * {P56} "
-          f"+ (((cell % {P56}) DIV {P28}) DIV 2) * {P28} "
-          f"+ ((cell % {P28}) DIV 2)")
+    gp = sqlfns.cell_pack_sql(f"{r} - 1", f"CAST(FLOOR({j} / 2) AS BIGINT)",
+                              f"CAST(FLOOR({i} / 2) AS BIGINT)")
     # keyed stream: each complete cell above min_res as a CHILD row under
     # its parent; each complete ancestor as a MARKER row under itself
-    children = (complete_anc.filter(F.expr(f"{_res_expr('cell')} > {min_res}"))
+    children = (complete_anc.filter(F.expr(f"{r} > {min_res}"))
                 .unionByName(at_res)
                 .select(F.expr(gp).alias("k"), F.col("cell").alias("child")))
     markers = complete_anc.select(F.col("cell").alias("k"),
@@ -542,9 +507,9 @@ def compact_cells(cover: DataFrame, res: int,
                     .alias("marked")))
     kept = (grouped.filter("marked = 0")
             .select(F.explode("kids").alias("cell")))
-    base = complete_anc.filter(F.expr(f"{_res_expr('cell')} = {min_res}"))
+    base = complete_anc.filter(F.expr(f"{r} = {min_res}"))
     out = kept.unionByName(base).unionByName(passthrough)
-    return out.select("cell", F.expr(_res_expr("cell")).alias("cell_res"))
+    return out.select("cell", F.expr(r).alias("cell_res"))
 
 
 def uncompact_cells(cover: DataFrame, res: int) -> DataFrame:
@@ -552,15 +517,16 @@ def uncompact_cells(cover: DataFrame, res: int) -> DataFrame:
     covering to its resolution-``res`` descendants (4^(res - r) children
     per cell — two SEQUENCE explodes over the i/j child offsets, pure
     codegen, zero shuffles).  Cells already at ``res`` pass through;
-    cells finer than ``res`` are an error (H3 contract)."""
+    cells finer than ``res`` are an error (H3 contract).  The fields come
+    from sqlfns.cell_decode_sql, exact up to res 19's east edge, so a
+    res-19 cell in the last column maps to itself."""
     if not 0 <= res <= 19:
         # with res validated, the d CASE below is TOTAL over every legal
         # input (cell res 0..19, gap 0..19) — no NULL arm can ever make
         # SEQUENCE silently emit zero rows (ADVICE r4)
         raise ValueError(f"res must be in [0, 19], got {res}")
-    d = f"({res} - {_res_expr('cell')})"
-    j = f"CAST(FLOOR((cell % {sqlfns.POW2_56}) / {sqlfns.POW2_28}) AS BIGINT)"
-    i = f"(cell % {sqlfns.POW2_28})"
+    r, j, i = sqlfns.cell_decode_sql("cell")
+    d = f"({res} - {r})"
     # side = 2^d via CASE (d is a small non-negative integer; no shift op
     # syntax shared by both engines).  The CASE covers the FULL legal gap
     # range 0..19 (lattice res spans 0..19, so a res-0 cell uncompacted to
@@ -576,16 +542,14 @@ def uncompact_cells(cover: DataFrame, res: int) -> DataFrame:
             # by pip_join): evaluates per row, raises on the first cell
             # finer than the target res
             .filter(F.expr(
-                f"ASSERT_TRUE({_res_expr('cell')} <= {res}, "
+                f"ASSERT_TRUE({r} <= {res}, "
                 f"'uncompact: cell finer than target res') IS NULL"))
             .select("cell", F.expr(f"EXPLODE(SEQUENCE(0, {side} - 1))")
                     .alias("di"))
             .select("cell", "di", F.expr(f"EXPLODE(SEQUENCE(0, {side} - 1))")
                     .alias("dj"))
-            .select(F.expr(
-                f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
-                f"+ ({j} * {side} + dj) * {sqlfns.POW2_28} "
-                f"+ ({i} * {side} + di)").alias("cell")))
+            .select(F.expr(sqlfns.cell_pack_sql(
+                res, f"{j} * {side} + dj", f"{i} * {side} + di")).alias("cell")))
 
 
 # --- H3-style polygon polyfill (polygonToCells analog) -----------------------
@@ -647,8 +611,7 @@ def polyfill_cells(spark, poly: list[tuple[float, float]],
     return (spark.range(i0, i1 + 1).selectExpr("id AS i")
             .crossJoin(spark.range(j0, j1 + 1).selectExpr("id AS j"))
             .filter(F.expr(inside))
-            .selectExpr(f"CAST({res} AS BIGINT) * {sqlfns.POW2_56}"
-                        f" + j * {sqlfns.POW2_28} + i AS cell"))
+            .select(F.expr(sqlfns.cell_pack_sql(res, "j", "i")).alias("cell")))
 
 
 def cells_to_geojson(cover: DataFrame, precision: int = 6) -> DataFrame:
@@ -665,9 +628,7 @@ def cells_to_geojson(cover: DataFrame, precision: int = 6) -> DataFrame:
     zero shuffles, no python.
 
     Output: (cell, feature) with feature a complete RFC 7946 Feature."""
-    res = _res_expr("cell")
-    j = f"CAST(FLOOR((cell % {sqlfns.POW2_56}) / {sqlfns.POW2_28}) AS BIGINT)"
-    i = f"(cell % {sqlfns.POW2_28})"
+    res, j, i = sqlfns.cell_decode_sql("cell")
     s = ("(CASE " + " ".join(
         f"WHEN {res} = {r} THEN {sqlfns.dlit(cells.cell_size_deg(r))}"
         for r in range(20)) + " END)")
@@ -726,27 +687,20 @@ def scatter_disk(rows: DataFrame, k: int) -> DataFrame:
     codegen (two SEQUENCE explodes + a field-bound filter), runs
     unchanged on a stream.
 
-    Offsets that leave the 28-bit i/j fields are dropped: i + di = -1
-    is bit-identical to (j - 1, i = 2^28 - 1) in the packed id, so a
-    ghost at a lattice bound would alias onto a REAL cell's row and
-    corrupt its focal sum (ADVICE r4).  The filter costs two codegen
-    comparisons per replicated row and makes edge disks honestly
-    clipped at every resolution, including res 19 where i spans the
-    whole field."""
-    res = _res_expr("cell")
-    j = f"CAST(FLOOR((cell % {sqlfns.POW2_56}) / {sqlfns.POW2_28}) AS BIGINT)"
-    i = f"(cell % {sqlfns.POW2_28})"
+    Offsets that leave the 28-bit i/j fields are dropped
+    (sqlfns.in_field_sql): a ghost past a lattice bound would alias onto
+    a REAL cell's row and corrupt its focal sum (ADVICE r4).  Edge disks
+    are clipped at every resolution, including res 19 where i spans the
+    whole field and the exact decode (sqlfns.cell_decode_sql) keeps the
+    last columns before lng = +180 on their own row."""
+    res, j, i = sqlfns.cell_decode_sql("cell")
     rest = [c for c in rows.columns if c != "cell"]
     return (rows
             .select("*", F.expr(f"EXPLODE(SEQUENCE(-{k}, {k}))").alias("di"))
             .select("*", F.expr(f"EXPLODE(SEQUENCE(-{k}, {k}))").alias("dj"))
-            .filter(F.expr(
-                f"({i} + di) >= 0 AND ({i} + di) < {sqlfns.POW2_28} "
-                f"AND ({j} + dj) >= 0 AND ({j} + dj) < {sqlfns.POW2_28}"))
-            .select(F.expr(
-                f"CAST({res} AS BIGINT) * {sqlfns.POW2_56} "
-                f"+ ({j} + dj) * {sqlfns.POW2_28} + ({i} + di)")
-                .alias("cell"), *rest))
+            .filter(F.expr(sqlfns.in_field_sql(f"{j} + dj", f"{i} + di")))
+            .select(F.expr(sqlfns.cell_pack_sql(res, f"{j} + dj", f"{i} + di"))
+                    .alias("cell"), *rest))
 
 
 def grid_paths(pairs: DataFrame) -> DataFrame:
@@ -774,10 +728,10 @@ def grid_paths(pairs: DataFrame) -> DataFrame:
     Plan: pure codegen — one SEQUENCE(0, d) explode, zero joins, zero
     exchanges; output size is sum of path lengths, bounded by the
     caller's pair list.  Output: (pair_id, grid_dist, step, cell)."""
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
-    ra, rb = f"(cell_a DIV {P56})", f"(cell_b DIV {P56})"
-    ia, ja = f"(cell_a % {P28})", f"((cell_a % {P56}) DIV {P28})"
-    ib, jb = f"(cell_b % {P28})", f"((cell_b % {P56}) DIV {P28})"
+    ra, ja, ia = sqlfns.cell_decode_sql("cell_a")
+    rb, jb, ib = sqlfns.cell_decode_sql("cell_b")
+    off = (lambda ad: f"(CASE WHEN grid_dist = 0 THEN 0 "
+           f"ELSE (2 * {ad} * step + grid_dist) DIV (2 * grid_dist) END)")
     return (pairs
             .filter(F.expr(
                 f"ASSERT_TRUE({ra} = {rb}, 'grid_paths: resolutions "
@@ -791,12 +745,8 @@ def grid_paths(pairs: DataFrame) -> DataFrame:
             .withColumn("grid_dist", F.expr("GREATEST(adi, adj)"))
             .select("pair_id", "cell_a", "adi", "adj", "si", "sj", "grid_dist",
                     F.expr("EXPLODE(SEQUENCE(0, grid_dist))").alias("step"))
-            .select("pair_id", "grid_dist", "step", F.expr(
-                f"(cell_a DIV {P56}) * {P56} "
-                f"+ (((cell_a % {P56}) DIV {P28}) + sj * (CASE WHEN grid_dist = 0 "
-                f"THEN 0 ELSE (2 * adj * step + grid_dist) DIV (2 * grid_dist) END)) * {P28} "
-                f"+ ((cell_a % {P28}) + si * (CASE WHEN grid_dist = 0 "
-                f"THEN 0 ELSE (2 * adi * step + grid_dist) DIV (2 * grid_dist) END))")
+            .select("pair_id", "grid_dist", "step", F.expr(sqlfns.cell_pack_sql(
+                ra, f"{ja} + sj * {off('adj')}", f"{ia} + si * {off('adi')}"))
                 .alias("cell")))
 
 
@@ -824,9 +774,8 @@ def trajectory_stats(points: DataFrame) -> DataFrame:
     bounded by pings-per-trajectory; a hot trajectory (fleet vehicle,
     bot user) skews its partition — the fetch_schedule host-skew trade,
     inherent to the per-key ordering semantics."""
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
-    i, j = f"(cell % {P28})", f"((cell % {P56}) DIV {P28})"
-    pi, pj = f"(_pc % {P28})", f"((_pc % {P56}) DIV {P28})"
+    r, j, i = sqlfns.cell_decode_sql("cell")
+    pr, pj, pi = sqlfns.cell_decode_sql("_pc")
     w = "PARTITION BY traj_id ORDER BY ts, event_id"
     stepped = (points
                .select("traj_id", "ts", "event_id",
@@ -837,8 +786,8 @@ def trajectory_stats(points: DataFrame) -> DataFrame:
                    f"ROW_NUMBER() OVER ({w}) AS _rn",
                    f"COUNT(*) OVER (PARTITION BY traj_id) AS _n")
                .filter(F.expr(
-                   f"_pc IS NULL OR ASSERT_TRUE(_pc DIV {P56} = "
-                   f"cell DIV {P56}, 'trajectory_stats: mixed resolutions "
+                   f"_pc IS NULL OR ASSERT_TRUE({pr} = {r}, "
+                   f"'trajectory_stats: mixed resolutions "
                    f"in one trajectory') IS NULL"))
                .selectExpr(
                    "traj_id", "_rn", "_n",
@@ -846,8 +795,8 @@ def trajectory_stats(points: DataFrame) -> DataFrame:
                    f"GREATEST(ABS({i} - {pi}), ABS({j} - {pj})) END AS step",
                    "CASE WHEN _rn = 1 THEN cell END AS _start",
                    "CASE WHEN _rn = _n THEN cell END AS _end"))
-    si, sj = f"(start_cell % {P28})", f"((start_cell % {P56}) DIV {P28})"
-    ei, ej = f"(end_cell % {P28})", f"((end_cell % {P56}) DIV {P28})"
+    _, sj, si = sqlfns.cell_decode_sql("start_cell")
+    _, ej, ei = sqlfns.cell_decode_sql("end_cell")
     return (stepped.groupBy("traj_id")
             .agg(F.count("*").cast("long").alias("n_points"),
                  F.expr("CAST(SUM(CASE WHEN step > 0 THEN 1 ELSE 0 END) "
@@ -889,9 +838,8 @@ def grid_dbscan(points: DataFrame, min_pts: int = 4) -> DataFrame:
     from .network import connected_components
     cnt = points.groupBy("cell").agg(
         F.count("*").cast("long").alias("n_points"))
-    bounds = cnt.agg(
-        F.expr(f"MIN(cell DIV {sqlfns.POW2_56}) AS _r0"),
-        F.expr(f"MAX(cell DIV {sqlfns.POW2_56}) AS _r1"))
+    r, _, _ = sqlfns.cell_decode_sql("cell")
+    bounds = cnt.agg(F.expr(f"MIN({r}) AS _r0"), F.expr(f"MAX({r}) AS _r1"))
     dense = (cnt.filter(F.col("n_points") >= min_pts)
              .join(F.broadcast(bounds))
              .filter(F.expr("ASSERT_TRUE(_r0 = _r1, 'grid_dbscan: mixed "
@@ -1177,8 +1125,7 @@ def zonal_stats(cell_values: DataFrame, zones: DataFrame) -> DataFrame:
     combinable hash agg on zone_id, then zones LEFT-join the aggregate
     so empty zones survive.  BIGINT v keeps every statistic engine-
     exact."""
-    i = f"(cell % {sqlfns.POW2_28})"
-    j = f"CAST(FLOOR((cell % {sqlfns.POW2_56}) / {sqlfns.POW2_28}) AS BIGINT)"
+    _, j, i = sqlfns.cell_decode_sql("cell")
     hit = (cell_values
            .join(F.broadcast(zones),
                  F.expr(f"{i} >= i_lo AND {i} <= i_hi "

@@ -24,32 +24,37 @@ from ..operators import spatial as SP
 from ..sources import synth
 
 
-def build_network(nodes: DataFrame, ways: DataFrame,
-                  merge_close_nodes: bool = True) -> DataFrame:
+def build_network(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """Street network -> full inferred network (streets U sidewalks U
     crosswalks) in the unified gw schema (way_id, kind, highway, node_ids,
-    lats, lngs)."""
-    streets = N.filter_streets(ways)
-    streets = N.join_segmented_ways(streets)
-    inter = N.intersections(streets)
-    segs = N.split_streets(streets, inter)
-    gw = N.geom_ways(nodes, segs)
-    pairs = N.find_parallel_pairs(gw)
-    gw = N.merge_parallel_pairs(gw, pairs)
-    if merge_close_nodes:
-        gw = N.merge_nodes_gw(gw)  # R8 in the reference position
-    gw = N.simplify_gw(gw)
-    gw = N.drop_short_gw(gw)
-    full_inter_gw = N.geom_ways(nodes, streets)  # arms from unsplit streets
-    sidewalks = SW.make_sidewalks(gw)
-    crosswalks = SW.make_crosswalks(full_inter_gw, inter)
-    corners = SW.crosswalk_corner_nodes(crosswalks)
-    sidewalks = SW.rewire_sidewalk_endpoints(sidewalks, corners)
-    # the network is tiny (city-scale rows) but its plan is deep (UDF
-    # chains + CC fixpoints); materialize once so downstream branches do
-    # not re-evaluate the whole inference DAG per consumer (measured 13x
-    # re-evaluation in entry() without this)
-    return SW.union_network(gw, sidewalks, crosswalks).localCheckpoint(eager=True)
+    lats, lngs).
+
+    Every stage output is an eager local checkpoint, so each stage plans
+    and runs on materialized input.  Left lazy, the CC fixpoints and
+    python stages re-evaluate the whole chain above them (merge_nodes_gw's
+    eager CC input checkpoint alone ran it): at g=6 on a 4-core host the
+    lazy chain took 135-162 s, the staged one 27-40 s, same rows.  The
+    last checkpoint also keeps downstream consumers (PIP, kNN, tiles)
+    from re-running the inference per branch."""
+    def stage(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=True)
+
+    streets = stage(N.filter_streets(ways))
+    streets = stage(N.join_segmented_ways(streets))
+    inter = stage(N.intersections(streets))
+    segs = stage(N.split_streets(streets, inter))
+    gw = stage(N.geom_ways(nodes, segs))
+    pairs = stage(N.find_parallel_pairs(gw))
+    gw = stage(N.merge_parallel_pairs(gw, pairs))
+    gw = stage(N.merge_nodes_gw(gw))  # R8 in the reference position
+    gw = stage(N.simplify_gw(gw))
+    gw = stage(N.drop_short_gw(gw))
+    full_inter_gw = stage(N.geom_ways(nodes, streets))  # arms from unsplit streets
+    sidewalks = stage(SW.make_sidewalks(gw))
+    crosswalks = stage(SW.make_crosswalks(full_inter_gw, inter))
+    corners = stage(SW.crosswalk_corner_nodes(crosswalks))
+    sidewalks = stage(SW.rewire_sidewalk_endpoints(sidewalks, corners))
+    return stage(SW.union_network(gw, sidewalks, crosswalks))
 
 
 def run_graft(points: DataFrame, net: DataFrame, k: int = 1) -> dict[str, DataFrame]:

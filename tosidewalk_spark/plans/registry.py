@@ -289,9 +289,8 @@ def q_g6_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_g6_tiles() -> str:
-    s_sub = sqlfns.dlit(360.0 / float(2 ** (11 + 9)))
-    sub_idx = (f"(CAST(FLOOR((lat + 90.0) / {s_sub}) AS BIGINT) % 4) * 4 "
-               f"+ (CAST(FLOOR((lng + 180.0) / {s_sub}) AS BIGINT) % 4)")
+    sj, si = sqlfns.lattice_sql("lat", "lng", 11)
+    sub_idx = f"({sj} % 4) * 4 + ({si} % 4)"
     return f"""
     WITH pts AS (SELECT * FROM ({_duck_points(bbox=True)})),
     matched AS (SELECT DISTINCT url, entity FROM ({_duck_pip_pairs()})),
@@ -325,9 +324,8 @@ def q_g6_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_g6_vectorize() -> str:
-    s_sub = sqlfns.dlit(360.0 / float(2 ** (11 + 9)))
-    sub_idx = (f"(CAST(FLOOR((lat + 90.0) / {s_sub}) AS BIGINT) % 4) * 4 "
-               f"+ (CAST(FLOOR((lng + 180.0) / {s_sub}) AS BIGINT) % 4)")
+    sj, si = sqlfns.lattice_sql("lat", "lng", 11)
+    sub_idx = f"({sj} % 4) * 4 + ({si} % 4)"
     return f"""
     WITH pts AS (SELECT * FROM ({_duck_points(bbox=True)})),
     per_sub AS (SELECT cell9, {sub_idx} AS sub_idx, COUNT(*) AS n
@@ -1943,9 +1941,9 @@ _FS_CI_BASE = math.floor((-122.33 + 180.0) / _FS_S) - 32
 _FS_CJ_BASE = math.floor((47.60 + 90.0) / _FS_S) - 32
 # local coords land in [32-8, 32+8]; (0..32, 0..32) = south-west quadrant
 _FS_RANGES = {"ci": (0, 32), "cj": (0, 32)}
-_FS_CI = f"((cell9 % {sqlfns.POW2_28}) - {_FS_CI_BASE})"
-_FS_CJ = (f"(CAST(FLOOR((cell9 % {sqlfns.POW2_56}) / {sqlfns.POW2_28}) "
-          f"AS BIGINT) - {_FS_CJ_BASE})")
+_FS_J, _FS_I = sqlfns.cell_decode_sql("cell9")[1:]
+_FS_CI = f"({_FS_I} - {_FS_CI_BASE})"
+_FS_CJ = f"({_FS_J} - {_FS_CJ_BASE})"
 
 
 def q_g1_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3321,14 +3319,12 @@ def _compact_rect_cells(spark: SparkSession) -> DataFrame:
     i0, i1, j0, j1 = _COMPACT_RECT
     return (spark.range(i0, i1).selectExpr("id AS i")
             .crossJoin(spark.range(j0, j1).selectExpr("id AS j"))
-            .selectExpr(f"CAST(9 * {sqlfns.POW2_56} + j * {sqlfns.POW2_28}"
-                        f" + i AS LONG) AS cell"))
+            .selectExpr(f"{sqlfns.cell_pack_sql(9, 'j', 'i')} AS cell"))
 
 
 def _compact_rect_sql() -> str:
     i0, i1, j0, j1 = _COMPACT_RECT
-    return (f"SELECT CAST(9 * {sqlfns.POW2_56} + jj.j * {sqlfns.POW2_28}"
-            f" + ii.i AS BIGINT) AS cell"
+    return (f"SELECT {sqlfns.cell_pack_sql(9, 'jj.j', 'ii.i')} AS cell"
             f" FROM range({i0}, {i1}) ii(i), range({j0}, {j1}) jj(j)")
 
 
@@ -3341,7 +3337,7 @@ def o_g3_compact() -> str:
     """DuckDB twin: the identical promote-complete-quads rounds unrolled
     as a CTE chain (9->8->7->6), same parent arithmetic (sqlfns.parent_sql
     is dialect-portable)."""
-    res_of = f"CAST(FLOOR(cell / {sqlfns.POW2_56}) AS INT)"
+    res_of, _, _ = sqlfns.cell_decode_sql("cell")
     ctes = [f"c9 AS ({_compact_rect_sql()})"]
     cur = "c9"
     for r in range(9, 6, -1):
@@ -3403,8 +3399,7 @@ def o_g3_polyfill() -> str:
     clng = f"((i + 0.5e0) * {sqlfns.dlit(s)} - 180.0e0)"
     inside = SP.polygon_contains_sql(clat, clng, poly)
     return f"""
-    SELECT CAST(9 AS BIGINT) * {sqlfns.POW2_56} + j * {sqlfns.POW2_28} + i
-             AS cell
+    SELECT {sqlfns.cell_pack_sql(9, "j", "i")} AS cell
     FROM range({i0}, {i1 + 1}) ii(i), range({j0}, {j1 + 1}) jj(j)
     WHERE {inside}
     """
@@ -3423,9 +3418,7 @@ def o_g3_cells_geojson() -> str:
     """DuckDB twin: the compact chain (o_g3_compact verbatim, as a derived
     table) + the identical corner arithmetic with printf (the
     FORMAT_STRING C-contract pair, same as the R20 canonical export)."""
-    res = f"CAST(FLOOR(cell / {sqlfns.POW2_56}) AS INT)"
-    j = f"CAST(FLOOR((cell % {sqlfns.POW2_56}) / {sqlfns.POW2_28}) AS BIGINT)"
-    i = f"(cell % {sqlfns.POW2_28})"
+    res, j, i = sqlfns.cell_decode_sql("cell")
     from ..kernel import cells as C
     s = ("(CASE " + " ".join(
         f"WHEN {res} = {r} THEN {sqlfns.dlit(C.cell_size_deg(r))}"
@@ -3458,20 +3451,17 @@ def q_g3_focal_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def o_g3_focal_sum() -> str:
     """DuckDB twin: the shared point-derivation CTE, the same per-cell
     count, and the identical scatter-as-gather 9-offset expansion."""
-    j = f"CAST(FLOOR((cell % {sqlfns.POW2_56}) / {sqlfns.POW2_28}) AS BIGINT)"
-    i = f"(cell % {sqlfns.POW2_28})"
+    _, j, i = sqlfns.cell_decode_sql("cell")
+    nj, ni = f"{j} + dj.dj", f"{i} + di.di"
     return f"""
     WITH pts AS ({_duck_points()}),
     counts AS (SELECT cell9 AS cell, COUNT(*) AS n FROM pts GROUP BY cell9),
     scattered AS (
-      SELECT CAST(9 AS BIGINT) * {sqlfns.POW2_56}
-               + ({j} + dj.dj) * {sqlfns.POW2_28} + ({i} + di.di) AS cell,
-             n
+      SELECT {sqlfns.cell_pack_sql(9, nj, ni)} AS cell, n
       FROM counts,
            (SELECT unnest([-1, 0, 1]) AS di) di,
            (SELECT unnest([-1, 0, 1]) AS dj) dj
-      WHERE ({i} + di.di) >= 0 AND ({i} + di.di) < {sqlfns.POW2_28}
-        AND ({j} + dj.dj) >= 0 AND ({j} + dj.dj) < {sqlfns.POW2_28})
+      WHERE {sqlfns.in_field_sql(nj, ni)})
     SELECT cell, CAST(SUM(n) AS BIGINT) AS focal_sum
     FROM scattered GROUP BY cell
     """
@@ -3717,8 +3707,9 @@ def q_grid_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_grid_paths() -> str:
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
     cell9 = sqlfns.cell_sql("lat", "lng", 9)
+    ra, ja, ia = sqlfns.cell_decode_sql("cell_a")
+    _, jb, ib = sqlfns.cell_decode_sql("cell_b")
     off = (lambda ad: f"(CASE WHEN grid_dist = 0 THEN 0 ELSE "
            f"(2 * {ad} * step + grid_dist) // (2 * grid_dist) END)")
     return f"""
@@ -3726,22 +3717,16 @@ def o_grid_paths() -> str:
     e AS (SELECT DISTINCT entity AS pair_id, {cell9} AS cell_a,
                  CAST({_CENTER_CELL9} AS BIGINT) AS cell_b FROM p),
     m AS (SELECT pair_id, cell_a,
-                 ABS((cell_b % {P28}) - (cell_a % {P28})) AS adi,
-                 ABS(((cell_b % {P56}) // {P28})
-                     - ((cell_a % {P56}) // {P28})) AS adj,
-                 CASE WHEN (cell_b % {P28}) >= (cell_a % {P28})
-                      THEN 1 ELSE -1 END AS si,
-                 CASE WHEN ((cell_b % {P56}) // {P28})
-                           >= ((cell_a % {P56}) // {P28})
-                      THEN 1 ELSE -1 END AS sj
+                 ABS({ib} - {ia}) AS adi, ABS({jb} - {ja}) AS adj,
+                 CASE WHEN {ib} >= {ia} THEN 1 ELSE -1 END AS si,
+                 CASE WHEN {jb} >= {ja} THEN 1 ELSE -1 END AS sj
           FROM e),
     g AS (SELECT *, GREATEST(adi, adj) AS grid_dist FROM m),
     s AS (SELECT pair_id, cell_a, adi, adj, si, sj, grid_dist,
                  unnest(range(0, grid_dist + 1)) AS step FROM g)
     SELECT pair_id, grid_dist, step,
-           (cell_a // {P56}) * {P56}
-           + (((cell_a % {P56}) // {P28}) + sj * {off('adj')}) * {P28}
-           + ((cell_a % {P28}) + si * {off('adi')}) AS cell
+           {sqlfns.cell_pack_sql(ra, f"{ja} + sj * {off('adj')}",
+                                 f"{ia} + si * {off('adi')}")} AS cell
     FROM s
     """
 
@@ -3892,15 +3877,14 @@ def q_trajectory_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_trajectory_stats() -> str:
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
     ent = ("CONCAT('loc_', CAST(user_id AS VARCHAR), '_', "
            "CAST(event_id % 7 AS VARCHAR))")
     lat, lng = synth.entity_latlng_sql_duckdb(ent)
     cell = sqlfns.cell_sql(lat, lng, 9)
-    i, j = f"(cell % {P28})", f"((cell % {P56}) // {P28})"
-    pi, pj = f"(pc % {P28})", f"((pc % {P56}) // {P28})"
-    si, sj = f"(start_cell % {P28})", f"((start_cell % {P56}) // {P28})"
-    ei, ej = f"(end_cell % {P28})", f"((end_cell % {P56}) // {P28})"
+    _, j, i = sqlfns.cell_decode_sql("cell")
+    _, pj, pi = sqlfns.cell_decode_sql("pc")
+    _, sj, si = sqlfns.cell_decode_sql("start_cell")
+    _, ej, ei = sqlfns.cell_decode_sql("end_cell")
     w = "PARTITION BY traj_id ORDER BY ts, event_id"
     return f"""
     WITH p AS (SELECT user_id AS traj_id, ts, event_id,
@@ -3936,8 +3920,15 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_pts=5)
 
 
+def _chebyshev1(a: str, b: str) -> str:
+    """Oracle join predicate: cells ``a`` and ``b`` are Chebyshev-1
+    lattice neighbors (or equal)."""
+    _, ja, ia = sqlfns.cell_decode_sql(a)
+    _, jb, ib = sqlfns.cell_decode_sql(b)
+    return f"ABS({ia} - {ib}) <= 1 AND ABS({ja} - {jb}) <= 1"
+
+
 def o_grid_dbscan() -> str:
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
     cell = sqlfns.cell_sql("lat", "lng", 9)
     return f"""
     WITH RECURSIVE p AS ({_duck_points()}),
@@ -3945,9 +3936,7 @@ def o_grid_dbscan() -> str:
           FROM p GROUP BY 1),
     dense AS (SELECT * FROM c WHERE n_points >= 5),
     e AS (SELECT a.cell AS src, b.cell AS dst FROM dense a JOIN dense b
-          ON ABS((a.cell % {P28}) - (b.cell % {P28})) <= 1
-          AND ABS(((a.cell % {P56}) // {P28})
-                  - ((b.cell % {P56}) // {P28})) <= 1
+          ON {_chebyshev1("a.cell", "b.cell")}
           AND a.cell != b.cell),
     r(root, node) AS (
         SELECT cell, cell FROM dense
@@ -4005,7 +3994,6 @@ def q_hotspot_gi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_hotspot_gi() -> str:
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
     cell = sqlfns.cell_sql("lat", "lng", 9)
     z = sqlfns.gi_z_sql()
     return f"""
@@ -4015,9 +4003,7 @@ def o_hotspot_gi() -> str:
     f AS (SELECT a.cell, CAST(SUM(b.v) AS BIGINT) AS focal_sum,
                  CAST(COUNT(*) AS BIGINT) AS w
           FROM c a JOIN c b
-          ON ABS((a.cell % {P28}) - (b.cell % {P28})) <= 1
-          AND ABS(((a.cell % {P56}) // {P28})
-                  - ((b.cell % {P56}) // {P28})) <= 1
+          ON {_chebyshev1("a.cell", "b.cell")}
           GROUP BY a.cell),
     st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
                   CAST(SUM(v) AS BIGINT) AS sum_x,
@@ -4059,7 +4045,6 @@ def q_moran_i(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_moran_i() -> str:
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
     cell = sqlfns.cell_sql("lat", "lng", 9)
     return f"""
     WITH p AS ({_duck_points()}),
@@ -4068,9 +4053,7 @@ def o_moran_i() -> str:
     f AS (SELECT a.cell, CAST(SUM(b.v) AS BIGINT) AS fs,
                  CAST(COUNT(*) AS BIGINT) AS w
           FROM c a JOIN c b
-          ON ABS((a.cell % {P28}) - (b.cell % {P28})) <= 1
-          AND ABS(((a.cell % {P56}) // {P28})
-                  - ((b.cell % {P56}) // {P28})) <= 1
+          ON {_chebyshev1("a.cell", "b.cell")}
           GROUP BY a.cell),
     st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
                   CAST(SUM(v) AS BIGINT) AS sum_x FROM c),
@@ -4421,8 +4404,8 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_zonal_stats() -> str:
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
     cell = sqlfns.cell_sql("lat", "lng", 9)
+    _, j, i = sqlfns.cell_decode_sql("c.cell")
     zrows = " UNION ALL ".join(
         f"SELECT '{z}' AS zone_id, CAST({a} AS BIGINT) AS i_lo, "
         f"CAST({b} AS BIGINT) AS i_hi, CAST({c} AS BIGINT) AS j_lo, "
@@ -4437,9 +4420,8 @@ def o_zonal_stats() -> str:
                    CAST(SUM(v) AS BIGINT) AS v_sum,
                    MIN(v) AS v_min, MAX(v) AS v_max
             FROM c JOIN zs
-            ON (c.cell % {P28}) >= zs.i_lo AND (c.cell % {P28}) <= zs.i_hi
-            AND ((c.cell % {P56}) // {P28}) >= zs.j_lo
-            AND ((c.cell % {P56}) // {P28}) <= zs.j_hi
+            ON {i} >= zs.i_lo AND {i} <= zs.i_hi
+            AND {j} >= zs.j_lo AND {j} <= zs.j_hi
             GROUP BY zone_id)
     SELECT zs.zone_id, COALESCE(n_cells, CAST(0 AS BIGINT)) AS n_cells,
            COALESCE(v_sum, CAST(0 AS BIGINT)) AS v_sum, v_min, v_max
@@ -4464,7 +4446,6 @@ def q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def o_emerging_hotspots() -> str:
-    P56, P28 = sqlfns.POW2_56, sqlfns.POW2_28
     ent = ("CONCAT('loc_', CAST(user_id AS VARCHAR), '_', "
            "CAST(event_id % 7 AS VARCHAR))")
     lat, lng = synth.entity_latlng_sql_duckdb(ent)
@@ -4480,9 +4461,7 @@ def o_emerging_hotspots() -> str:
     -- only its neighbors have mass; the cell's own v that bin is 0)
     f AS (SELECT a.cell, b.bin, CAST(SUM(b.v) AS BIGINT) AS fs
           FROM cells a JOIN cb b
-          ON ABS((a.cell % {P28}) - (b.cell % {P28})) <= 1
-          AND ABS(((a.cell % {P56}) // {P28})
-                  - ((b.cell % {P56}) // {P28})) <= 1
+          ON {_chebyshev1("a.cell", "b.cell")}
           GROUP BY 1, 2),
     rng AS (SELECT MIN(bin) AS b0, MAX(bin) AS b1 FROM cb),
     dense AS (SELECT cells.cell,

@@ -39,24 +39,21 @@ _FILLER_REPEATS = 60
 # REPEAT+CONCAT+RTRIM costs ~4 large allocations per page, which is the
 # single worst scaler on a shared-memory box (allocation-rate bound at 32
 # threads); a constant array costs one lookup + one final concat per row.
-# Byte-identical to the r1 expression (RTRIM(REPEAT(CONCAT(...), 60)))
+# Byte-identical to the r1 expression
+# RTRIM(REPEAT(CONCAT('filler segment ', k, ' of page text corpus '), 60)).
 _FILLERS = [
     ("".join(f"filler segment {k} of page text corpus " for _ in range(_FILLER_REPEATS))).rstrip()
     for k in range(97)
 ]
 
 
-def pages(spark: SparkSession, n: int, filler_repeats: int = _FILLER_REPEATS) -> DataFrame:
+def pages(spark: SparkSession, n: int) -> DataFrame:
     """Common-Crawl-style pages table (FIXTURES.md §1 'pages').  The body
     carries ~1.5 KB of deterministic filler so per-page work (extraction,
     tokenization) is representative of real web pages, not 60-byte stubs."""
     ent = f"CONCAT('poi_', CAST((id * 7) % {N_ENTITIES} AS STRING))"
-    if filler_repeats == _FILLER_REPEATS:
-        filler_arr = "ARRAY(" + ",".join("'" + f + "'" for f in _FILLERS) + ")"
-        filler = f"ELEMENT_AT({filler_arr}, CAST(id % 97 AS INT) + 1)"
-    else:
-        filler = (f"RTRIM(REPEAT(CONCAT('filler segment ', CAST(id % 97 AS STRING), "
-                  f"' of page text corpus '), {filler_repeats}))")
+    filler_arr = "ARRAY(" + ",".join("'" + f + "'" for f in _FILLERS) + ")"
+    filler = f"ELEMENT_AT({filler_arr}, CAST(id % 97 AS INT) + 1)"
     text = (f"CONCAT('visit ', {ent}, ' near block ', CAST(id % 1000 AS STRING), "
             f"' in sector ', CAST(id % 37 AS STRING), ' ', {filler})")
     return spark.range(n).select(
@@ -91,10 +88,11 @@ def _geocode_from_entity(df: DataFrame) -> DataFrame:
     expensive polynomial hash is computed ONCE per row in its own Project
     (Catalyst keeps non-cheap expressions un-inlined across projects);
     inlining the full templates into one select re-evaluates the hash 4x —
-    measured 10x slower.  The lambda fold beats a CASE-unrolled variant
-    2.7x (sqlfns.polyhash_unrolled docstring), so the HOF stays; consumers
-    that need codegen-heavy stages downstream should materialize this
-    output (bench persists it).  Values identical to the DuckDB twin."""
+    measured 10x slower.  The lambda fold beat a CASE-unrolled variant
+    (one straight-line fold per string length) 2.7x at 10M rows, so the
+    HOF stays; consumers that need codegen-heavy stages downstream should
+    materialize this output (bench persists it).  Values identical to the
+    DuckDB twin."""
     h = df.select(
         "url", "entity",
         F.expr(sqlfns.polyhash_spark("entity")).alias("h1"))
