@@ -1,17 +1,23 @@
-"""Fixpoint operators keep their state in local checkpoints, not in the
-session's cache: while a result is alive and has been collected, Spark's
-CacheManager holds nothing for it.  A checkpoint lives as long as some
-plan reads it and is freed by Spark's cleaner afterwards, so no operator
-has to tie a cache's lifetime to its Python result object."""
+"""Operators keep re-read relations in local checkpoints (or in no cache
+at all), not in the session's cache: while a result is alive and has been
+collected, Spark's CacheManager holds nothing for it.  A checkpoint lives
+as long as some plan reads it and is freed by Spark's cleaner afterwards,
+so no operator has to tie a cache's lifetime to its Python result object."""
 import pytest
+from pyspark.sql import functions as F
 
-from tosidewalk_spark.operators import clustering, dedup, graph, text
+from tosidewalk_spark.functions import sqlfns
+from tosidewalk_spark.operators import (clustering, dedup, graph, network,
+                                        search, spatial, text)
+from tosidewalk_spark.sources import synth
 
 _EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (4, 3)]
 _EMB = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.01]),
         (3, [0.01, 1.0]), (4, [1.0, 0.01])]
 _DOCS = [(1, "the cat sat on the mat"), (2, "the cat sat on the mat"),
          (3, "the hat that ate then"), (4, "aaaa banana")]
+_PTS = [("u1", "e1", 47.6004, -122.3300), ("u2", "e2", 47.6000, -122.3303),
+        ("u3", "e3", 47.6010, -122.3290)]
 
 
 def _edges(spark):
@@ -26,6 +32,16 @@ def _docs(spark):
     return spark.createDataFrame(_DOCS, "doc_id long, text string")
 
 
+def _knn(spark, k):
+    nodes, ways = synth.micro_fixture(spark, "straight3")
+    bufs = spatial.street_buffers(
+        spatial.street_segments(network.geom_ways(nodes, ways)))
+    pts = (spark.createDataFrame(_PTS, "url string, entity string, "
+                                 "lat double, lng double")
+           .withColumn("cell9", F.expr(sqlfns.cell_sql("lat", "lng", 9))))
+    return spatial.knn_join(pts, spatial.segments_by_cell(bufs), k=k)
+
+
 CASES = {
     "pagerank": lambda s: graph.pagerank(_edges(s), n_iter=3),
     "hits": lambda s: graph.hits(_edges(s), n_iter=3),
@@ -36,6 +52,18 @@ CASES = {
     "semantic_dedup": lambda s: clustering.semantic_dedup(_emb(s), k=2, n_iter=2),
     "bpe_learn": lambda s: text.bpe_learn(_docs(s), n_merges=3),
     "dedup_clusters": lambda s: dedup.dedup_clusters(_docs(s)),
+    "knn_join_k1": lambda s: _knn(s, 1),
+    "knn_join_k3": lambda s: _knn(s, 3),
+    "triangle_count": lambda s: graph.triangle_count(_edges(s)),
+    "dsir_weights": lambda s: text.dsir_weights(
+        _docs(s), _docs(s).filter("doc_id % 2 = 1")),
+    "ccnet_buckets": lambda s: text.ccnet_buckets(
+        _docs(s).withColumn("lang", F.lit("en")),
+        _docs(s).filter("doc_id = 1")),
+    "phrase_search": lambda s: search.phrase_search(_docs(s), ["the", "cat"]),
+    "embedding_neardup_pairs": lambda s: dedup.embedding_neardup_pairs(
+        _emb(s), cos_threshold=0.9),
+    "containment_pairs": lambda s: dedup.containment_pairs(_docs(s)),
 }
 
 

@@ -436,10 +436,28 @@ def test_ccnet_buckets_window_runs_over_histogram_not_docs(spark):
     assert plan.count("Window [") == 1, plan[:3000]
     win_line = plan.split("Window [", 1)[1].split("\n")[0]
     assert "doc_id" not in win_line, win_line
-    # directly below the Window (before the cached document relation):
-    # the (lang, qscore) count histogram the running sum consumes
-    below = plan.split("Window [", 1)[1].split("InMemoryRelation")[0]
-    assert "Aggregate [lang" in below and "count(1)" in below, below
+    # directly below the Window (before any document-grain relation): the
+    # (lang, qscore) count histogram the running sum consumes is the first
+    # aggregate, and nothing between the two carries doc_id
+    above, hist = plan.split("Window [", 1)[1].split("Aggregate [", 1)
+    hist = hist.split("\n")[0]
+    assert hist.startswith("lang") and "count(1)" in hist, hist
+    assert "qscore" in hist.split("]")[0], hist
+    assert "doc_id" not in above.split("\n", 1)[1], above
+
+
+def test_registry_segments_survive_clear_cache(spark):
+    """The registry's shared grid segments are an eager local checkpoint,
+    not a cache: after ``spark.catalog.clearCache()`` they still scan the
+    checkpointed RDD instead of rebuilding the grid sidewalks."""
+    from tosidewalk_spark.plans import registry as R
+    n = R._grid_sidewalk_segments(spark).count()
+    spark.catalog.clearCache()
+    segs = R._grid_sidewalk_segments(spark)
+    plan = _executed_plan(segs)
+    assert plan.strip().startswith("*(1) Scan ExistingRDD"), plan
+    assert "\n" not in plan.strip(), plan
+    assert segs.count() == n
 
 
 def test_trajectory_stats_single_exchange_window_feeds_agg(spark):

@@ -113,21 +113,19 @@ def test_zorder_three_way(spark):
 EAST_EDGE_R19 = 1387108686840725503
 
 
-def _lattice_cells(margin: int = 0):
+def _lattice_cells():
     """(res, j, i) at res 9/13/18/19: random lattice points, the first and
     last rows, the first column and the last 6 columns before the east
-    edge — all ``margin`` cells inside the lattice bounds."""
+    edge."""
     rng = np.random.default_rng(19)
     rows = []
     for res in (9, 13, 18, 19):
         nj, ni = 2 ** (res + 8), 2 ** (res + 9)
-        js = np.concatenate([rng.integers(margin, nj - margin, 6),
-                             [margin, nj - 1 - margin, nj // 2 + 5]])
-        cols = ni - 1 - margin - np.arange(6)
-        is_ = np.concatenate([rng.integers(margin, ni - margin, 6), [margin], cols])
+        js = np.concatenate([rng.integers(0, nj, 6), [0, nj - 1, nj // 2 + 5]])
+        cols = ni - 1 - np.arange(6)
+        is_ = np.concatenate([rng.integers(0, ni, 6), [0], cols])
         rows += [(res, int(j), int(i)) for j in js for i in is_]
-    if margin == 0:
-        rows.append((19, 2 ** 26 + 5, 2 ** 28 - 1))  # EAST_EDGE_R19
+    rows.append((19, 2 ** 26 + 5, 2 ** 28 - 1))  # EAST_EDGE_R19
     pdf = pd.DataFrame(rows, columns=["res", "j", "i"]).astype(
         {"res": np.int32, "j": np.int64, "i": np.int64})
     pdf["cell"] = [cells.pack_ij(i, j, r) for r, j, i in rows]
@@ -187,10 +185,13 @@ def _disk_np(c: int, r_lat: int, r_lng: int) -> list[int]:
 
 def test_disk_three_way(spark):
     """disk_sql over decoded j/i == kernel.cells.disk, for square and
-    lat/lng-asymmetric radii; the cells keep 2 cells from the lattice
-    bounds, so every neighbor stays inside the 28-bit fields (past them
-    the kernel's bitwise pack and the SQL sum differ, and both alias)."""
-    pdf = _lattice_cells(margin=2)
+    lat/lng-asymmetric radii, up to the lattice edges: at i = 0 and
+    i = 2^28 - 1 (res 19) and at the first and last rows the neighbors
+    leave the 28-bit fields, and both packs add, so they alias to the
+    same ids."""
+    pdf = _lattice_cells()
+    edge = pdf[pdf["res"] == 19]["i"]
+    assert {0, 2 ** 28 - 1} <= set(edge)
     _, j, i = sqlfns.cell_decode_sql("cell")
     ci, cj = cells.cell_ij(pdf["cell"].to_numpy())
     staged = pdf.assign(dj=cj, di=ci)

@@ -11,16 +11,18 @@ size (~153 m of latitude) matches the H3 res-9 mean edge length (~174 m).
 Layout (64-bit cell id, all integer arithmetic — reproducible bit-for-bit
 in Spark SQL and DuckDB SQL):
 
-    cell = (res << 56) | (j << 28) | i
+    cell = res * 2**56 + j * 2**28 + i
     s(res) = 360 / 2**(res + 9)          # cell size in degrees
     j = floor((lat +  90) / s)           # row    (0 .. 180/s - 1)
     i = floor((lng + 180) / s)           # column (0 .. 360/s - 1)
 
 ``j < 2**(res+8)`` and ``i < 2**(res+9)``, so res <= 19 fits the 28-bit
-fields.  ``parent`` is a right-shift of (i, j); a ``ring`` at distance k is
-the Chebyshev ring, a ``disk`` the Chebyshev disk.  These definitions ARE
-the engine's semantics: join rows and tile assignments are defined by this
-index and frozen by golden tests (SURVEY.md §1.2).
+fields.  ``pack_ij`` adds, as the SQL pack does, so a neighbor offset past
+a lattice edge aliases to the same id in every engine.  ``parent`` is a
+right-shift of (i, j); a ``ring`` at distance k is the Chebyshev ring, a
+``disk`` the Chebyshev disk.  These definitions ARE the engine's semantics:
+join rows and tile assignments are defined by this index and frozen by
+golden tests (SURVEY.md §1.2).
 """
 
 from __future__ import annotations
@@ -43,8 +45,7 @@ def cell(lat, lng, res: int = DEFAULT_RES):
     s = cell_size_deg(res)
     j = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / s).astype(np.int64)
     i = np.floor((np.asarray(lng, dtype=np.float64) + 180.0) / s).astype(np.int64)
-    out = (np.int64(res) << RES_SHIFT) | (j << J_SHIFT) | i
-    return out if out.ndim else int(out)
+    return pack_ij(i, j, res)
 
 
 def cell_res(c):
@@ -71,20 +72,19 @@ def cell_center(c):
 
 
 def pack_ij(i, j, res: int):
+    """Cell id from its (res, j, i) fields — mirror of sqlfns.cell_pack_sql."""
     i = np.asarray(i, dtype=np.int64)
     j = np.asarray(j, dtype=np.int64)
-    out = (np.int64(res) << RES_SHIFT) | (j << J_SHIFT) | i
+    out = (np.int64(res) << RES_SHIFT) + (j << J_SHIFT) + i
     return out if out.ndim else int(out)
 
 
 def parent(c, parent_res: int):
     """Coarsen cell id(s) to ``parent_res`` (right-shift of i and j)."""
     c = np.asarray(c, dtype=np.int64)
-    res = (c >> RES_SHIFT).astype(np.int64)
-    d = res - np.int64(parent_res)
+    d = cell_res(c) - np.int64(parent_res)
     i, j = cell_ij(c)
-    out = (np.int64(parent_res) << RES_SHIFT) | ((j >> d) << J_SHIFT) | (i >> d)
-    return out if out.ndim else int(out)
+    return pack_ij(i >> d, j >> d, parent_res)
 
 
 def disk(c: int, k: int) -> np.ndarray:

@@ -258,15 +258,11 @@ def embedding_neardup_pairs(emb: DataFrame, cos_threshold: float = 0.95,
         "SQRT(AGGREGATE(v, CAST(0.0 AS DOUBLE), (a, x) -> a + x * x))"))
     e = e.withColumn("bucket", F.expr(
         similarity.lsh_signature_expr("v", n_planes=similarity.NEARDUP_PLANES)))
-    # persist the signed vectors: the 16-plane signature (16 x 64-element
+    # checkpoint the signed vectors: the 16-plane signature (16 x 64-element
     # aggregate lambdas per row) feeds THREE plan branches — the cap agg
     # and both self-join sides — which share no exchange, so without the
-    # cache the dominant map-side cost runs 3x (review r4).  Scoped to
-    # the returned DataFrame via weakref, same pattern as knn_join.
-    import weakref
-
-    from .spatial import _safe_unpersist
-    e = e.persist()
+    # checkpoint the dominant map-side cost runs 3x (review r4)
+    e = e.localCheckpoint(eager=False)
     ok = (e.groupBy("bucket").agg(F.count("*").alias("bn"))
           .filter(F.col("bn") <= max_bucket).select("bucket"))
     e2 = e.join(ok, "bucket", "left_semi")
@@ -275,12 +271,10 @@ def embedding_neardup_pairs(emb: DataFrame, cos_threshold: float = 0.95,
     b = e2.select(F.col("vec_id").alias("vec_b"), "bucket",
                   F.col("v").alias("vb"), F.col("norm").alias("nb"))
     dot = F.expr("AGGREGATE(ZIP_WITH(va, vb, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, x) -> a + x)")
-    result = (a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
-              .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 6))
-              .filter(F.col("cosine") >= cos_threshold)
-              .select("vec_a", "vec_b", "bucket", "cosine"))
-    weakref.finalize(result, _safe_unpersist, e)
-    return result
+    return (a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
+            .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 6))
+            .filter(F.col("cosine") >= cos_threshold)
+            .select("vec_a", "vec_b", "bucket", "cosine"))
 
 
 # --- 62-bit simhash + banded Hamming-radius blocking --------------------------
@@ -863,20 +857,18 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8,
     when EITHER direction clears ``threshold``, with both rounded
     containments returned so the caller can tell container from
     contained.  Output: (doc_a, doc_b, cont_ab, cont_ba)."""
-    import weakref
-
-    from .spatial import _safe_unpersist
     sh = (_spread(docs).select(
         "doc_id",
         F.expr(f"ARRAY_SORT(ARRAY_DISTINCT({_shingles('text', w)}))")
         .alias("toks"))
         .withColumn("nt", F.size("toks"))
-        # stage the shingle hashes INTO the cache (r6): the explode below
-        # feeds the df agg, the semi-join probe and both candidate sides —
-        # hashed lazily, the per-shingle polyhash re-ran on every branch
+        # stage the shingle hashes INTO the checkpoint (r6): the explode
+        # below feeds the df agg, the semi-join probe and both candidate
+        # sides — hashed lazily, the per-shingle polyhash re-ran on every
+        # branch (the plain plan measured ~25% slower at sf0.1)
         .withColumn("ghs", F.expr(
             "TRANSFORM(toks, t -> " + sqlfns.polyhash_spark("t") + ")"))
-        .persist())  # feeds the candidate explode AND both verify sides
+        .localCheckpoint(eager=False))  # feeds the explode AND both verify sides
     ex = sh.select("doc_id", F.explode("ghs").alias("gh"))
     rare = (ex.groupBy("gh").agg(F.count("*").alias("df"))
             .filter(F.col("df") <= max_df).select("gh"))
@@ -889,15 +881,13 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.8,
                   F.col("toks").alias("toks_a"), F.col("nt").alias("nt_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"),
                   F.col("toks").alias("toks_b"), F.col("nt").alias("nt_b"))
-    result = (cand.join(a, "doc_a").join(b, "doc_b")
-              .withColumn("inter",
-                          F.size(F.array_intersect("toks_a", "toks_b")))
-              .withColumn("cont_ab", F.round(F.col("inter") / F.col("nt_a"), 6))
-              .withColumn("cont_ba", F.round(F.col("inter") / F.col("nt_b"), 6))
-              .filter(F.expr(f"GREATEST(cont_ab, cont_ba) >= {threshold}"))
-              .select("doc_a", "doc_b", "cont_ab", "cont_ba"))
-    weakref.finalize(result, _safe_unpersist, sh)
-    return result
+    return (cand.join(a, "doc_a").join(b, "doc_b")
+            .withColumn("inter",
+                        F.size(F.array_intersect("toks_a", "toks_b")))
+            .withColumn("cont_ab", F.round(F.col("inter") / F.col("nt_a"), 6))
+            .withColumn("cont_ba", F.round(F.col("inter") / F.col("nt_b"), 6))
+            .filter(F.expr(f"GREATEST(cont_ab, cont_ba) >= {threshold}"))
+            .select("doc_a", "doc_b", "cont_ab", "cont_ba"))
 
 
 def line_dedup(docs: DataFrame) -> DataFrame:

@@ -37,12 +37,9 @@ and the Spark GraphX/Pregel formulation of it.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import _spread
-from .spatial import _safe_unpersist
 
 PR_SCALE = 1_000_000_000  # total fixed-point mass distributed over nodes
 PR_DAMPING_PCT = 85       # damping as an integer percentage (0.85)
@@ -207,18 +204,16 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     oriented = e.selectExpr(
         f"CASE WHEN {lower} THEN a ELSE b END AS src",
         f"CASE WHEN {lower} THEN b ELSE a END AS dst",
-        f"CASE WHEN {lower} THEN db ELSE da END AS ddst").persist()
+        f"CASE WHEN {lower} THEN db ELSE da END AS ddst")
     e1 = oriented.selectExpr("src", "dst AS x", "ddst AS dx")
     e2 = oriented.selectExpr("src", "dst AS y", "ddst AS dy")
     wedges = (e1.join(e2, "src")
               .filter("dx < dy OR (dx = dy AND x < y)"))
     tri = wedges.join(oriented.selectExpr("src AS x", "dst AS y"),
                       ["x", "y"], "left_semi")
-    result = (tri.selectExpr("EXPLODE(ARRAY(src, x, y)) AS node")
-              .groupBy("node")
-              .agg(F.count("*").cast("long").alias("n_tri")))
-    weakref.finalize(result, _safe_unpersist, oriented)
-    return result
+    return (tri.selectExpr("EXPLODE(ARRAY(src, x, y)) AS node")
+            .groupBy("node")
+            .agg(F.count("*").cast("long").alias("n_tri")))
 
 
 HITS_SCALE = 1_000_000  # L1 mass per score vector; see overflow note below

@@ -464,17 +464,19 @@ def remove_short_segments(nodes: DataFrame, ways: DataFrame,
             .select("way_id", "node_ids", "highway", "tags"))
 
 
+# gw-shaped rows: one resolved polyline per way
+_GW_SCHEMA = T.StructType([
+    T.StructField("way_id", T.LongType()),
+    T.StructField("node_ids", T.ArrayType(T.LongType())),
+    T.StructField("lats", T.ArrayType(T.DoubleType())),
+    T.StructField("lngs", T.ArrayType(T.DoubleType())),
+    T.StructField("highway", T.StringType()),
+])
+
+
 def simplify_gw(gw: DataFrame, tol_m: float = geom.DP_TOLERANCE_M) -> DataFrame:
     """R17 on gw-shaped rows (way_id, node_ids, lats, lngs, highway):
     Douglas-Peucker directly over the vertex arrays."""
-    schema = T.StructType([
-        T.StructField("way_id", T.LongType()),
-        T.StructField("node_ids", T.ArrayType(T.LongType())),
-        T.StructField("lats", T.ArrayType(T.DoubleType())),
-        T.StructField("lngs", T.ArrayType(T.DoubleType())),
-        T.StructField("highway", T.StringType()),
-    ])
-
     def dp(it):
         for pdf in it:
             if len(pdf) == 0:
@@ -488,9 +490,9 @@ def simplify_gw(gw: DataFrame, tol_m: float = geom.DP_TOLERANCE_M) -> DataFrame:
                     "node_ids": [int(x) for x, kk in zip(r.node_ids, keep) if kk],
                     "lats": la[keep].tolist(), "lngs": lg[keep].tolist(),
                     "highway": r.highway})
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            yield pd.DataFrame(rows, columns=_GW_SCHEMA.names)
 
-    return gw.select("way_id", "node_ids", "lats", "lngs", "highway").mapInPandas(dp, schema)
+    return gw.select(*_GW_SCHEMA.names).mapInPandas(dp, _GW_SCHEMA)
 
 
 def drop_short_gw(gw: DataFrame, min_len_m: float = geom.SHORT_SEGMENT_M) -> DataFrame:
@@ -500,15 +502,6 @@ def drop_short_gw(gw: DataFrame, min_len_m: float = geom.SHORT_SEGMENT_M) -> Dat
 
 
 # --- R6/R7 parallel segment detection + merge ---------------------------------------
-
-_MERGED_SCHEMA = T.StructType([
-    T.StructField("way_id", T.LongType()),
-    T.StructField("node_ids", T.ArrayType(T.LongType())),
-    T.StructField("lats", T.ArrayType(T.DoubleType())),
-    T.StructField("lngs", T.ArrayType(T.DoubleType())),
-    T.StructField("highway", T.StringType()),
-])
-
 
 def _mean_bearing(lats, lngs):
     x, y = geom.equirect_xy(np.asarray(lats), np.asarray(lngs), lats[0], lngs[0])
@@ -652,10 +645,12 @@ def merge_parallel_pairs(gw: DataFrame, pairs: DataFrame) -> DataFrame:
                 "lngs": ((rag + rbg) / 2.0).tolist(),
                 "highway": r.highway_a,
             })
-        return pd.DataFrame(out, columns=["way_id", "node_ids", "lats", "lngs", "highway"])
+        return pd.DataFrame(out, columns=_GW_SCHEMA.names)
 
-    merged = todo.groupBy("way_a").applyInPandas(lambda _, p: centerline(p), _MERGED_SCHEMA)
+    # best holds one row per way_a, so each row is merged on its own: a
+    # plain map, no shuffle into one-row groups
+    merged = todo.mapInPandas(
+        lambda it: (centerline(p) for p in it if len(p)), _GW_SCHEMA)
     drop = best.selectExpr("way_a AS way_id").union(best.selectExpr("way_b AS way_id"))
-    kept = gw.join(drop, "way_id", "left_anti") \
-             .select("way_id", "node_ids", "lats", "lngs", "highway")
+    kept = gw.join(drop, "way_id", "left_anti").select(*_GW_SCHEMA.names)
     return kept.unionByName(merged)

@@ -178,9 +178,9 @@ def phrase_search(docs: DataFrame, phrase: list[str],
     occurrence count — top ``k`` by (n_occur DESC, doc_id ASC), the
     deterministic total order.
 
-    Plan: the positional postings materialize ONCE per call (persist,
-    released via the weakref pattern when the result is dropped) and
-    each phrase term filters that cached relation — without the cache
+    Plan: the positional postings materialize ONCE per call (a lazy
+    local checkpoint, freed by Spark's cleaner once no plan reads it) and
+    each phrase term filters that checkpoint — without it
     each term's filter is an independent subtree, so the corpus was
     re-tokenized and re-exploded once per phrase term (ADVICE r5 #3);
     consecutive terms chain by the equi-join ``(doc_id, pos_i ==
@@ -193,25 +193,19 @@ def phrase_search(docs: DataFrame, phrase: list[str],
     "a a" occurrences) — the textbook positional-intersection
     semantics, and what the DuckDB twin computes."""
     assert len(phrase) >= 1, "phrase_search needs at least one term"
-    import weakref
-
-    from .spatial import _safe_unpersist
     post = positional_index(docs)
     if len(phrase) > 1:
-        post = post.persist()
+        post = post.localCheckpoint(eager=False)
     m = (post.filter(F.col("term") == phrase[0])
          .select("doc_id", "pos"))
     for i, term in enumerate(phrase[1:], start=1):
         nxt = (post.filter(F.col("term") == term)
                .selectExpr("doc_id", f"pos - {i} AS pos"))
         m = m.join(nxt, ["doc_id", "pos"])
-    result = (m.groupBy("doc_id")
-              .agg(F.count("*").cast("long").alias("n_occur"))
-              .orderBy(F.col("n_occur").desc(), F.col("doc_id").asc())
-              .limit(k))
-    if len(phrase) > 1:
-        weakref.finalize(result, _safe_unpersist, post)
-    return result
+    return (m.groupBy("doc_id")
+            .agg(F.count("*").cast("long").alias("n_occur"))
+            .orderBy(F.col("n_occur").desc(), F.col("doc_id").asc())
+            .limit(k))
 
 
 def phrase_duckdb_sql(phrase: list[str], k: int = 20) -> str:

@@ -24,8 +24,6 @@ Scale design:
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import sqlfns
@@ -230,8 +228,8 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
       key side of the semi/anti joins at runtime).
 
     Only phase-1's top-k rows (<= k per point; for k=1 exactly one row
-    per point, matched or not) are persisted for reuse across the
-    consumers — never the raw candidate set."""
+    per point, matched or not) are a lazy local checkpoint, read by both
+    the settled and the straggler branch — never the raw candidate set."""
     s = cells.cell_size_deg(res)
     # conservative meters-per-cell lower bound (lng edge at |lat|<=60)
     edge_min_m = s * geom.M_PER_DEG * 0.5
@@ -308,7 +306,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
         # segment), the struct-min rides a WHEN so unmatched rows
         # contribute nothing, and lat/lng/cell9 come back as FIRST()
         # (constant per point).  Settledness then degenerates to a row
-        # FILTER on this persisted aggregate — the r3 shape still
+        # FILTER on this checkpointed aggregate — the r3 shape still
         # anti-joined pts against the settled set, i.e. two corpus-wide
         # shuffles on (url, entity) purely to find the zero-candidate
         # points phase 1 had dropped (review r4: 4.3 -> ~2 s at sf0.1).
@@ -323,7 +321,14 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
                        F.first("lat").alias("lat"),
                        F.first("lng").alias("lng"),
                        F.first("cell9").alias("cell9"))
-                  .persist())
+                  # AQE coalesces this one-row-per-point aggregate to 1-2
+                  # partitions, and the stragglers' disk(max_ring) probe
+                  # EXPANDS every row (2·max_ring + 1)² times: spread it at
+                  # defaultParallelism (as dedup's band join does); without
+                  # it kNN on 5000 sf0.1 points ran ~40% slower
+                  .repartition(pts.sparkSession.sparkContext.defaultParallelism,
+                               "url", "entity")
+                  .localCheckpoint(eager=False))
         done = (phase1.filter(F.col("b").isNotNull()
                               & (F.col("b.dist_m") <= bound))
                 .select("url", "entity", "lat", "lng", "cell9",
@@ -335,7 +340,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
                                     | (F.col("b.dist_m") > bound))
                       .select("url", "entity", "lat", "lng", "cell9", *ji))
     else:
-        phase1 = topk(pts, first_radius).persist()
+        phase1 = topk(pts, first_radius).localCheckpoint(eager=False)
         settled = (phase1.groupBy("url", "entity")
                    .agg(F.max("dist_m").alias("kth"), F.count("*").alias("n"))
                    .filter((F.col("n") == k) & (F.col("kth") <= bound))
@@ -343,22 +348,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
         done = phase1.join(settled, ["url", "entity"], "left_semi")
         stragglers = pts.join(settled, ["url", "entity"], "left_anti")
     phase2 = topk(stragglers, max(max_ring, first_radius))
-    result = done.select(*cols).unionByName(phase2.select(*cols))
-    # Scope the phase-1 cache to the result: DataFrame persist is never
-    # auto-evicted (the CacheManager pins the plan), so long-lived sessions
-    # leaked one cache per knn_join call (VERDICT.md r2 'What's wrong' #3).
-    # When the returned DataFrame is garbage collected the cache releases;
-    # a plan derived from the result that outlives it merely recomputes
-    # phase1 from lineage (slower, never wrong).
-    weakref.finalize(result, _safe_unpersist, phase1)
-    return result
-
-
-def _safe_unpersist(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        pass  # session already stopped
+    return done.select(*cols).unionByName(phase2.select(*cols))
 
 
 # --- G6: raster coverage tiles -------------------------------------------------
@@ -1003,7 +993,7 @@ def map_match(pings: DataFrame, seg_cells: DataFrame, max_ring: int = 6,
     knn_join's unmatched rows directly).
 
     Plan: knn_join's two-phase cell probe does the heavy lifting (its
-    per-point top-1 is persisted inside), one point-keyed equi-join
+    per-point top-1 is a local checkpoint inside), one point-keyed equi-join
     brings ts back (knn carries only the (url, entity) point key), then
     a per-trajectory run-length collapse: LAG island detection + one
     map-side-combinable agg, the gap-and-island shape shared with

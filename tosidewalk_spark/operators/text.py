@@ -888,18 +888,15 @@ def dsir_weights(docs: DataFrame, target: DataFrame,
           .select(F.expr(bkt).alias("bucket"))
           .groupBy("bucket").agg(F.count("*").cast("long").alias("ct")))
     # ONE gram-hash pass over the candidate corpus: the per-doc bucket
-    # stream is persisted and feeds BOTH the raw model q (cr counts) and
-    # the per-doc scoring join — the old shape exploded + hashed the
-    # corpus twice (r6 optimization; weakref-scoped cache, knn pattern)
-    import weakref
-
-    from .spatial import _safe_unpersist
+    # stream is a lazy local checkpoint that feeds BOTH the raw model q
+    # (cr counts) and the per-doc scoring join — the old shape exploded +
+    # hashed the corpus twice (r6 optimization)
     doc_b = (_spread(docs)
              .select("doc_id", F.explode_outer(F.expr(grams)).alias("gram"))
              .select("doc_id",
                      F.when(F.col("gram").isNotNull(), F.expr(bkt))
                      .alias("bucket"))
-             .persist())
+             .localCheckpoint(eager=False))
     rg = (doc_b.filter(F.col("bucket").isNotNull())
           .groupBy("bucket").agg(F.count("*").cast("long").alias("cr")))
     tt = tg.agg(F.coalesce(F.sum("ct"), F.lit(0)).cast("long").alias("_tt"))
@@ -917,21 +914,19 @@ def dsir_weights(docs: DataFrame, target: DataFrame,
                      .alias("ct"),
                      F.expr(ratio_fx).alias("ratio_fx")))
     # gram IS NOT NULL ⟺ bucket IS NOT NULL by construction above, so the
-    # cached (doc_id, bucket) stream carries everything the scoring needs
-    result = (doc_b
-              .join(F.broadcast(model), "bucket", "left")
-              .groupBy("doc_id")
-              .agg(F.count("bucket").cast("long").alias("n_grams"),
-                   F.coalesce(
-                       F.sum(F.expr("CASE WHEN bucket IS NOT NULL AND ct > 0 "
-                                    "THEN 1 ELSE 0 END")), F.lit(0))
-                   .cast("long").alias("n_target_hit"),
-                   F.coalesce(
-                       F.sum(F.when(F.col("bucket").isNotNull(),
-                                    F.col("ratio_fx"))),
-                       F.lit(0).cast("long")).alias("score_fx")))
-    weakref.finalize(result, _safe_unpersist, doc_b)
-    return result
+    # checkpointed (doc_id, bucket) stream carries all the scoring needs
+    return (doc_b
+            .join(F.broadcast(model), "bucket", "left")
+            .groupBy("doc_id")
+            .agg(F.count("bucket").cast("long").alias("n_grams"),
+                 F.coalesce(
+                     F.sum(F.expr("CASE WHEN bucket IS NOT NULL AND ct > 0 "
+                                  "THEN 1 ELSE 0 END")), F.lit(0))
+                 .cast("long").alias("n_target_hit"),
+                 F.coalesce(
+                     F.sum(F.when(F.col("bucket").isNotNull(),
+                                  F.col("ratio_fx"))),
+                     F.lit(0).cast("long")).alias("score_fx")))
 
 
 MIX_SQRT_SCALE = 1_000      # fixed-point scale inside the integer sqrt
@@ -1322,9 +1317,6 @@ def ccnet_buckets(docs: DataFrame, ref: DataFrame,
     start.  Thresholds are one row per language, broadcast back.
 
     Output: (doc_id, lang, n_bigrams, qscore, bucket)."""
-    import weakref
-
-    from .spatial import _safe_unpersist
     assert scale % n_q == 0, (scale, n_q)
     sc = lm_fluency(docs, ref, scale=scale)
     scored = (docs.select("doc_id", "lang")
@@ -1332,8 +1324,7 @@ def ccnet_buckets(docs: DataFrame, ref: DataFrame,
               .select("doc_id", "lang", "n_bigrams", F.expr(
                   f"CASE WHEN n_bigrams = 0 THEN CAST(0 AS BIGINT) "
                   f"ELSE (score_fx DIV n_bigrams) DIV {scale // n_q} END")
-                  .alias("qscore"))
-              .persist())  # feeds the histogram AND the final labeling
+                  .alias("qscore")))
     hist = (scored.groupBy("lang", "qscore")
             .agg(F.count("*").cast("long").alias("c")))
     tot = hist.groupBy("lang").agg(F.sum("c").alias("n"))
@@ -1344,13 +1335,11 @@ def ccnet_buckets(docs: DataFrame, ref: DataFrame,
     thr = cum.groupBy("lang").agg(
         F.min(F.when(F.expr("cum * 3 >= n"), F.col("qscore"))).alias("t1"),
         F.min(F.when(F.expr("cum * 3 >= 2 * n"), F.col("qscore"))).alias("t2"))
-    result = (scored.join(F.broadcast(thr), "lang")
-              .select("doc_id", "lang", "n_bigrams", "qscore",
-                      F.expr("CASE WHEN qscore <= t1 THEN 'tail' "
-                             "WHEN qscore <= t2 THEN 'middle' "
-                             "ELSE 'head' END").alias("bucket")))
-    weakref.finalize(result, _safe_unpersist, scored)
-    return result
+    return (scored.join(F.broadcast(thr), "lang")
+            .select("doc_id", "lang", "n_bigrams", "qscore",
+                    F.expr("CASE WHEN qscore <= t1 THEN 'tail' "
+                           "WHEN qscore <= t2 THEN 'middle' "
+                           "ELSE 'head' END").alias("bucket")))
 
 
 def url_filter(pages: DataFrame, blocklist: DataFrame,

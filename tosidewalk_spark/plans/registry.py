@@ -90,8 +90,9 @@ def _grid_sidewalk_segments(spark: SparkSession) -> DataFrame:
     """Engine path: grid -> R1 filter -> R5 split -> R12/R13 sidewalks ->
     per-edge segments.  (No way-join / parallel-merge here: the oracle's
     closed form needs the plain grid; the full pipeline is exercised by
-    entry() and pytest.)  Persisted once per session — several registry
-    queries share this fixed build side."""
+    entry() and pytest.)  Built once per session as an eager local
+    checkpoint — several registry queries share this fixed build side, and
+    unlike a cache it survives ``spark.catalog.clearCache()``."""
     key = id(spark)
     if key not in _SEGMENT_CACHE:
         nodes, ways = synth.osm_grid(spark, g=G, with_noise_ways=True)
@@ -99,10 +100,8 @@ def _grid_sidewalk_segments(spark: SparkSession) -> DataFrame:
         segs = N.split_streets(streets)
         gw = N.geom_ways(nodes, segs)
         sw = SW.make_sidewalks(gw, offset_m=OFF_M)
-        cached = SP.street_segments(sw).persist()
-        cached.count()
         _SEGMENT_CACHE.clear()
-        _SEGMENT_CACHE[key] = cached
+        _SEGMENT_CACHE[key] = SP.street_segments(sw).localCheckpoint(eager=True)
     return _SEGMENT_CACHE[key]
 
 

@@ -26,14 +26,6 @@ LNG_STEP = GRID_SPACING_M / (111111.0 * math.cos(math.radians(CITY_LAT)))
 HIGHWAYS = ["residential", "primary", "secondary", "tertiary"]
 N_ENTITIES = 400  # distinct poi_k entities
 
-# Deterministic id-space bases (SURVEY.md §7 hard part 2: the reference used
-# mutable counters; we freeze a stable scheme instead).
-SW_WAY_BASE = 1_000_000_000
-SW_NODE_BASE = 1_000_000_000_000
-CW_WAY_BASE = 2_000_000_000
-CW_NODE_BASE = 2_000_000_000_000
-
-
 _FILLER_REPEATS = 60
 # the 97 distinct ~1.5 KB fillers as LITERALS: building them per row with
 # REPEAT+CONCAT+RTRIM costs ~4 large allocations per page, which is the
