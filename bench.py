@@ -1,772 +1,137 @@
-"""Benchmark harness — headline spatial-join + sidewalk-tiling throughput
-(pages/sec, the BASELINE.json metric) plus per-query timings, with the
-two-parallelism scaling evidence mandated by BASELINE.md (no real cluster
-in this sandbox: the same job at N and 4N affinity-pinned cores, default
-4 vs 16; efficiency = T_N / (4 * T_4N)).
+#!/usr/bin/env python3
+"""The headline benchmark, sized to the host that runs it: spatial-join +
+tiling throughput (pages/sec), N->4N scaling efficiency, and per-query
+timings.  It takes no flag:
 
-Measurement design (why it's shaped this way):
-- The throughput job is the DATA-scaled path: pages -> HTML text extract
-  -> entity geocode + cell encode -> PIP join vs sidewalk buffers ->
-  salted coverage tiles.  The street-network inference is a fixed-size
-  preprocessing (city network does not grow with pages), so it is built
-  and persisted untimed — exactly how a production run amortizes it.
-- Each session warms up with a small run first (JIT, Arrow init, python
-  worker spawn), then times the real job; reported seconds are warm.
+    python3 bench.py
 
-Prints ONE JSON line:
-  {"metric": ..., "value": <sec>, "unit": "sec", "queries": {...},
-   "sf": ..., "pages": N, "pages_per_sec": ...,
+- **Headline and scaling.**  Each leg is one child process running
+  perfbench's ``pages_pip_tiles`` workload (``LEG``), pinned to a set of
+  cores before its JVM starts; perfbench sizes ``local[C]``, the shuffle
+  partitions and its python workers from that affinity mask.  With M the
+  sorted affinity mask of this process and N = len(M) // 4, the small leg
+  pins the first N cores of M and the big leg the first 4N.  ``ROUNDS``
+  interleaved rounds alternate which leg goes first; efficiency =
+  min small wall / (4 * min big wall).  The headline is the big leg's best
+  sample.  With fewer than 4 cores there is no pair: one leg on the whole
+  mask gives the headline and ``scaling`` is null.
+- **Queries.**  After the legs, one Spark session runs every
+  ``plans.registry.QUERIES`` entry except the audit groups (which re-run
+  member queries already timed alone) at ``SPARK_GRAFT_SF_DIR`` (default:
+  the sf0.01 test data, where the oracle tests check every entry): one
+  untimed run, then one timed run into a ``noop`` sink.  An entry that
+  raises is listed in ``queries_failed``.
+
+A leg that exits non-zero or whose check fails stops the benchmark with
+the leg's stderr tail.  About 13 minutes on a 4-core host.  Prints one
+JSON line:
+  {"metric", "value": <sec>, "unit": "sec", "sf", "pages", "pages_per_sec",
    "scaling": {"cores_small", "cores_big", "small_sec", "big_sec",
-               "speedup", "efficiency", per-leg samples}}
-
-Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PAGES (default 1000000),
-SPARK_GRAFT_BENCH_SCALING=0 to skip the local[8] run.
+               "speedup", "efficiency", "samples_small", "samples_big"},
+   "queries": {name: sec}, "queries_failed": {name: error}}
 """
-
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from tosidewalk_spark.plans import registry
+from tosidewalk_spark.session import get_spark
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from tosidewalk_spark.operators import dedup, network as N, sidewalks as SW  # noqa: E402
-from tosidewalk_spark.operators import similarity, spatial as SP, text  # noqa: E402
-from tosidewalk_spark.operators import temporal as TP  # noqa: E402
-from tosidewalk_spark.plans import pipeline as PL  # noqa: E402
-from tosidewalk_spark.session import get_spark  # noqa: E402
-from tosidewalk_spark.functions import sqlfns as _sqlfns  # noqa: E402
-from tosidewalk_spark.sources import synth  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "20000000"))
-GRID = 24  # ~2.1 km city; hash-geocoded points span ~2.2 km
-RUN_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SCALING", "1") != "0"
-# N -> 4N scaling protocol: 2 vs 8 cores (the task directive's "N and 4N
-# cores").  NOT 8 vs 32: subscribing the full box measures this host's
-# shared memory-bandwidth ceiling (a parquet scan INVERTS there) and its
-# noisy-neighbor windows, not the plan — the measured N->4N curve is
-# monotone in box-share (2->8: 0.88-0.93, 4->16: 0.77-0.79, 8->32:
-# ~0.55; BENCH/BASELINE.md), which is the signature of a shared-hardware
-# artifact, not plan serialization.  2 vs 8 keeps both legs inside the
-# unshared region; legs are affinity-pinned (sched_setaffinity before the
-# JVM starts) and rounds are INTERLEAVED so a multi-minute host-noise
-# window cannot bias one leg (min per leg over all rounds).
-# The official legs are pinned AWAY from cores 0-1 since late r4: core 0
-# carries ~2x the IRQ traffic of high cores on this host
-# (/proc/interrupts: 8.5M on cpu0 vs ~4M on cpu16-31), and in BOTH
-# sustained-load r4 runs the high-core disjoint pair beat the cores-0-1
-# official pair measured minutes apart (0.88 vs 0.734; 0.849 vs 0.767) —
-# pinning the 2-core leg to 0-1 made the SMALL leg absorb IRQ+housekeeping
-# competition that the 8-core leg amortizes, biasing efficiency DOWN.
-# "16-17" vs "8-15" keeps N vs 4N, mutual disjointness, and distance from
-# core 0.  Ranges or plain counts both parse (_parse_cores).
-SCALING_CORES = (os.environ.get("SPARK_GRAFT_SCALING_SMALL", "16-17"),
-                 os.environ.get("SPARK_GRAFT_SCALING_BIG", "8-15"))
-# official-pair sample rounds, spread across the scaling phase (see main).
-# r3 lesson: 4 interleaved rounds were still not enough on this host — the
-# DRIVER's official pair landed every small-leg sample in a noisy window
-# (samples 31.4-45.1 s vs clean ~28-35 s) and recorded 0.794 while the
-# in-repo re-measures under the identical protocol read 0.883-0.914
-# (VERDICT.md r3 'Next round' #3).  6 rounds + the adaptive third
-# in-session sample (below) give each leg >= 12 time-separated chances to
-# catch a clean window.
-SCALING_ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "6"))
-# large enough that per-job fixed overhead (stage scheduling, broadcast
-# build) is <10% of the big leg — the Amdahl term that deflates efficiency
-SCALING_PAGES = int(os.environ.get("SPARK_GRAFT_SCALING_PAGES", "10000000"))
-# parquet-scan leg (ADVICE r1): measure the scan-inclusive path separately
-# so the generated-input headline can't be mistaken for scan throughput
-SCAN_PAGES = int(os.environ.get("SPARK_GRAFT_SCAN_PAGES", "1000000"))
-# official-round quiet gate: before each official-pair round, wait (up to
-# QUIET_WAIT_S, polling every 15 s) for the 1-min load average to drop
-# below QUIET_THRESH.  The three full r4 runs bracketed this: ambient
-# 0.4 -> official pair 0.986; sustained 3.3-4.7 -> 0.734; the wait turns
-# "hope the round lands in a quiet window" into "start each round in
-# one when the host allows", and per-sample ambient_load_* arrays in the
-# JSON show when it did not.
-QUIET_THRESH = float(os.environ.get("SPARK_GRAFT_QUIET_THRESH", "2.0"))
-QUIET_WAIT_S = float(os.environ.get("SPARK_GRAFT_QUIET_WAIT_S", "150"))
-# total wait budget across the whole phase: under SUSTAINED load (the
-# evening-run regime) waiting cannot help, so cap the aggregate cost at
-# ~7 min instead of rounds * QUIET_WAIT_S
-QUIET_TOTAL_S = float(os.environ.get("SPARK_GRAFT_QUIET_TOTAL_S", "450"))
+ROOT = Path(__file__).resolve().parent
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+LEG = [sys.executable, str(ROOT / "perfbench" / "run.py"), "--workload", "pages_pip_tiles",
+       "--seed", "0", "--seconds", "10", "--trace", "0"]
+ROUNDS = 3
 
 
-def _timed(fn):
-    t0 = time.perf_counter()
-    out = fn()
-    return out, round(time.perf_counter() - t0, 3)
+def leg_cores(mask) -> tuple[list[int], list[int]] | None:
+    """(small, big) core lists of the N->4N pair, or None below 4 cores."""
+    m = sorted(mask)
+    n = len(m) // 4
+    return (m[:n], m[:4 * n]) if n else None
 
 
-def build_buffers(spark):
-    """Fixed-size preprocessing: grid city -> street filter -> split ->
-    sidewalks -> buffers; persisted (production amortizes this per city)."""
-    nodes, ways = synth.osm_grid(spark, g=GRID)
-    gw = N.geom_ways(nodes, N.split_streets(N.filter_streets(ways)))
-    segments = SP.street_segments(SW.make_sidewalks(gw))
-    buffers = SP.street_buffers(segments, res=SP.PIP_COVER_RES).persist()
-    buffers.count()
-    return buffers
-
-
-def pages_throughput_job(spark, buffers, n_pages: int) -> None:
-    """The timed job: pages -> entity geocode + cell encode -> PIP join ->
-    salted tiles (the BASELINE 'spatial-join + sidewalk-tiling' path).
-    Pages are generated in-plan (splittable range + codegen) rather than
-    scanned from parquet: on this single-box sandbox a parquet scan of
-    ~KB text rows saturates shared memory bandwidth at ~8 cores and
-    INVERTS core-scaling (measured; see BENCH/BASELINE.md), which says
-    nothing about multi-node executor scaling where each node brings its
-    own bandwidth — generated input keeps the measured job
-    compute-representative.  The pages table carries `text` as an input
-    column [BASELINE.json:16], so the loop stays JVM-side; the HTML->text
-    extractor (G2, python) is timed separately in queries{} and gated by
-    the byte-identity tests."""
-    pages = synth.pages(spark, n_pages)
-    # persist the geocoded points: they feed BOTH the PIP probe and the
-    # tiles page-count aggregation — without a cache the synth+regex+hash
-    # chain evaluates once per consumer (a real pipeline writes this stage
-    # to parquet; run_staged does exactly that).  Materialization happens
-    # inside the timed job, so the measurement stays end-to-end.  (A
-    # repartition-based ReusedExchange boundary was tried instead and
-    # pathologically stalled the 4-core leg; the cache is the stable form.)
-    points = synth.geo_entities(spark, pages).persist()
+def parse_leg(cores: list[int], returncode: int, stdout: str, stderr: str) -> dict:
+    """perfbench's report line of a leg that exited 0 on ``cores`` with
+    every run correct; anything else exits the benchmark with the leg's
+    stderr tail."""
+    lines = stdout.strip().splitlines()
     try:
-        join_out = SP.pip_join(points, buffers, cover_res=SP.PIP_COVER_RES)
-        tiles = SP.coverage_tiles(points, join_out)
-        tiles.write.mode("overwrite").format("noop").save()
+        report, last = json.loads(lines[-2]), json.loads(lines[-1])
+        ok = (returncode == 0 and last["correct"] and last["failed"] == 0
+              and report["cores"] == len(cores))
+    except (IndexError, KeyError, ValueError):
+        ok = False
+    if not ok:
+        raise SystemExit(f"bench: leg on cores {cores} failed (exit {returncode}):\n"
+                         f"{stderr.strip()[-3000:]}")
+    return report
+
+
+def run_leg(cores: list[int]) -> tuple[int, float]:
+    """One perfbench process pinned to ``cores``: (pages, warm wall)."""
+    out = subprocess.run(LEG, cwd=ROOT, capture_output=True, text=True,
+                         preexec_fn=lambda: os.sched_setaffinity(0, cores))
+    report = parse_leg(cores, out.returncode, out.stdout, out.stderr)
+    return report["pages"], report["end_to_end"]["wall_s"]
+
+
+def scaling_record(small: list[int], big: list[int],
+                   samples_small: list[float], samples_big: list[float]) -> dict:
+    sec_s, sec_b = min(samples_small), min(samples_big)
+    return {"cores_small": small, "cores_big": big, "small_sec": sec_s, "big_sec": sec_b,
+            "speedup": round(sec_s / sec_b, 3), "efficiency": round(sec_s / (4 * sec_b), 3),
+            "samples_small": samples_small, "samples_big": samples_big}
+
+
+def run_legs(mask) -> tuple[int, float, dict | None]:
+    """(pages, best big-leg wall, scaling record or None)."""
+    pair = leg_cores(mask)
+    if pair is None:
+        return (*run_leg(sorted(mask)), None)
+    samples = ([], [])
+    for r in range(ROUNDS):
+        for i in (0, 1) if r % 2 == 0 else (1, 0):
+            pages, wall = run_leg(pair[i])
+            samples[i].append(wall)
+    return pages, min(samples[1]), scaling_record(*pair, *samples)
+
+
+def run_queries(sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
+    """Warm wall of every non-audit registry entry into a noop sink."""
+    # python workers import the library too
+    os.environ["PYTHONPATH"] = str(ROOT)
+    spark = get_spark("bench")
+    timings, failed = {}, {}
+    try:
+        for name, (query, _) in registry.QUERIES.items():
+            if name in registry._AUDIT_GROUPS:
+                continue
+            try:
+                query(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                t = time.perf_counter()
+                query(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                timings[name] = round(time.perf_counter() - t, 3)
+            except Exception as e:  # recorded, and the loop goes on
+                failed[name] = f"{type(e).__name__}: {str(e)[:300]}"
     finally:
-        points.unpersist()
-
-
-def _parse_cores(spec: str) -> list[int]:
-    """Core spec: "8" = cores 0..7; "8-15" = that explicit range (used for
-    the disjoint-core evidence legs, ADVICE.md r2)."""
-    if "-" in spec:
-        a, b = spec.split("-")
-        return list(range(int(a), int(b) + 1))
-    return list(range(int(spec)))
-
-
-def measured_session(core_spec: str, n_pages: int) -> float:
-    """One scaling leg.  MUST run in a fresh process: sched_setaffinity is
-    applied before the JVM starts so the Spark driver, executors and every
-    spawned python UDF worker inherit the mask.  Spark's local[N] caps JVM
-    task slots but NOT python UDF workers — unpinned, a local[8] job
-    borrows the other 24 cores for its pandas workers, which silently
-    inflates the small leg and deflates measured N->4N efficiency (round-1
-    driver run: 0.594 unpinned vs 0.861 pinned on the same plan).  The
-    affinity syscall needs no taskset binary and works under any harness."""
-    cores = _parse_cores(core_spec)
-    try:
-        os.sched_setaffinity(0, set(cores))
-    except AttributeError:
-        pass  # non-Linux: no affinity API, leg runs unpinned by design
-    except OSError as e:
-        # cores outside this host's range: FAIL the leg loudly rather than
-        # record an unpinned run as pinned/disjoint evidence (review r3)
-        raise RuntimeError(
-            f"cannot pin to cores {core_spec} on this host "
-            f"({os.cpu_count()} CPUs): {e}") from e
-    if hasattr(os, "sched_getaffinity") and os.sched_getaffinity(0) != set(cores):
-        raise RuntimeError(f"affinity verification failed for {core_spec}: "
-                           f"running on {sorted(os.sched_getaffinity(0))}")
-    n = len(cores)
-    spark = get_spark(f"bench{core_spec}", cpus=n, shuffle_partitions=2 * n)
-    buffers = build_buffers(spark)
-    pages_throughput_job(spark, buffers, 200_000)  # warmup: JIT + codegen
-    # min-of-2 with an ADAPTIVE third sample: sandbox timing noise is
-    # 3-4x and arrives in multi-minute windows, so when the two samples
-    # disagree by >15% at least one was noisy — take one more and keep the
-    # min.  Clean legs stay at 2 samples (no extra cost); noisy legs get a
-    # third chance inside the same pinned session.
-    ts = [_timed(lambda: pages_throughput_job(spark, buffers, n_pages))[1]
-          for _ in range(2)]
-    if max(ts) > 1.15 * min(ts):
-        ts.append(_timed(lambda: pages_throughput_job(spark, buffers, n_pages))[1])
-    spark.stop()
-    return min(ts)
-
-
-def _load1() -> float:
-    """1-minute load average, or -1 where unavailable."""
-    try:
-        return round(os.getloadavg()[0], 2)
-    except (AttributeError, OSError):
-        return -1.0
-
-
-def _wait_quiet(max_wait_s: float, thresh: float) -> float:
-    """Bounded wait for ambient host load to drop below `thresh` before an
-    official-pair round.  The bench is idle when this runs (every leg is a
-    subprocess that has exited), so load1 is external noise plus the
-    ~1-minute exponential decay of our own just-finished legs — either
-    way, a reading above thresh means a sample taken NOW lands in a noise
-    window, which is exactly what sank the r3 driver's official pair
-    (0.794 with every small-leg sample inflated).  Returns seconds waited;
-    gives up at max_wait_s so a permanently loaded host still produces a
-    record (annotated by the per-sample load arrays) instead of hanging."""
-    waited = 0.0
-    while waited < max_wait_s and _load1() >= thresh >= 0:
-        time.sleep(15)
-        waited += 15
-    return waited
-
-
-def measured_session_pinned(core_spec, n_pages: int) -> float:
-    """Run one scaling leg in a subprocess (fresh JVM + fresh affinity)."""
-    import subprocess
-    cmd = [sys.executable, os.path.abspath(__file__),
-           "--scaling-leg", str(core_spec), "--pages", str(n_pages)]
-    out = subprocess.run(cmd, capture_output=True, text=True)
-    if out.returncode != 0:
-        # surface the subprocess stderr (the affinity RuntimeError lives
-        # there) instead of a bare CalledProcessError — review r3
-        raise RuntimeError(
-            f"scaling leg {core_spec} failed:\n{out.stderr.strip()[-2000:]}")
-    return float(out.stdout.strip().splitlines()[-1])
-
-
-def pair_record(small_spec, big_spec, n_pages: int,
-                t_small: list[float], t_big: list[float],
-                loads_small: list[float] | None = None,
-                loads_big: list[float] | None = None) -> dict:
-    """min per leg over all samples -> N->4N efficiency record.  The
-    official `efficiency` is min-based (each leg's best observed time is
-    its capability; both legs sampled at >= SCALING_ROUNDS time-separated
-    points).  `efficiency_paired_median` is a cross-check: the median of
-    per-round small/big ratios — round-local pairing cancels noise windows
-    that inflate BOTH legs of a round, and a large gap between the two
-    numbers flags a measurement (not a plan) problem."""
-    sec_s, sec_b = min(t_small), min(t_big)
-    n_s = len(_parse_cores(str(small_spec)))
-    n_b = len(_parse_cores(str(big_spec)))
-    ratios = sorted(s / b for s, b in zip(t_small, t_big))
-    med = (ratios[len(ratios) // 2] if len(ratios) % 2
-           else (ratios[len(ratios) // 2 - 1] + ratios[len(ratios) // 2]) / 2)
-    rec = {"pages": n_pages,
-            "cores_small": str(small_spec), "cores_big": str(big_spec),
-            "n_small": n_s, "n_big": n_b,
-            "small_sec": sec_s, "big_sec": sec_b,
-            "pages_per_sec_small": round(n_pages / sec_s, 1),
-            "pages_per_sec_big": round(n_pages / sec_b, 1),
-            "speedup": round(sec_s / sec_b, 3),
-            "efficiency": round(sec_s / ((n_b / n_s) * sec_b), 3),
-            "efficiency_paired_median": round(med / (n_b / n_s), 3),
-            "samples_small": t_small, "samples_big": t_big}
-    # ambient 1-min load read just before each sample started: lets a
-    # reader (or the judge) see WHICH samples landed in external-noise
-    # windows without re-running anything
-    if loads_small is not None:
-        rec["ambient_load_small"] = loads_small
-    if loads_big is not None:
-        rec["ambient_load_big"] = loads_big
-    return rec
-
-
-def scaling_pair(small_spec, big_spec, n_pages: int, rounds: int = 1) -> dict:
-    """Interleaved pinned legs -> min per leg -> N->4N efficiency record."""
-    t_small, t_big, l_small, l_big = [], [], [], []
-    for _ in range(rounds):
-        l_small.append(_load1())
-        t_small.append(measured_session_pinned(small_spec, n_pages))
-        l_big.append(_load1())
-        t_big.append(measured_session_pinned(big_spec, n_pages))
-    return pair_record(small_spec, big_spec, n_pages, t_small, t_big,
-                       l_small, l_big)
-
-
-def parquet_scan_leg(spark, buffers, n_pages: int) -> dict:
-    """Scan-inclusive throughput: write the pages table to parquet once
-    (untimed), then time scan -> geocode -> PIP join -> tiles.  Reported
-    separately because on this single-box sandbox the scan path is bounded
-    by one machine's memory bandwidth (not representative of per-node
-    bandwidth on a cluster) — see BENCH/BASELINE.md."""
-    import shutil
-    import tempfile
-    d = tempfile.mkdtemp(prefix="bench_pages_")
-    try:
-        synth.pages(spark, n_pages).write.mode("overwrite").parquet(d)
-
-        def job():
-            pages = spark.read.parquet(d)
-            points = synth.geo_entities(spark, pages)
-            join_out = SP.pip_join(points, buffers, cover_res=SP.PIP_COVER_RES)
-            SP.coverage_tiles(points, join_out).write.mode("overwrite").format("noop").save()
-
-        job()  # warmup
-        secs = min(_timed(job)[1] for _ in range(2))
-        return {"pages": n_pages, "wall_sec": secs,
-                "pages_per_sec": round(n_pages / secs, 1)}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def run_queries(spark, buffers) -> dict[str, float]:
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    timings: dict[str, float] = {}
-    # per-query noise hygiene (VERDICT r4 'What's wrong' #3: the committed
-    # close-run carried g5_knn 16.2 s / lsh_topk 5.9 s that re-measures
-    # showed were host settling noise — the per-query phase had no quiet
-    # gate, so warmup AND both samples landed in one noise window).  Same
-    # discipline as the scaling phase, scaled down: a bounded shared wait
-    # budget before each query's timed samples, per-query ambient-load
-    # annotation, spread-triggered extra samples, and an end-of-phase
-    # re-measure of the queries whose samples were taken under load.
-    run_queries.ambient = {}
-    run_queries.remeasured = []
-    _fns: dict = {}
-    pq_budget = [float(os.environ.get("SPARK_GRAFT_PQ_QUIET_TOTAL_S", "300"))]
-
-    def _run_once(df_fn) -> float:
-        return _timed(
-            lambda: df_fn().write.mode("overwrite").format("noop").save())[1]
-
-    def bench(name, df_fn):
-        # one untimed warmup (codegen JIT, broadcast build, Arrow init) +
-        # min-of-2 timed runs: round 2 timed a single cold run and recorded
-        # a 2.3x phantom regression on extract_text that was host noise
-        # (VERDICT.md r2 perf section / 'Next round' #5)
-        _fns[name] = df_fn
-        df_fn().write.mode("overwrite").format("noop").save()
-        allowance = min(45.0, pq_budget[0])
-        pq_budget[0] -= _wait_quiet(allowance, QUIET_THRESH)
-        run_queries.ambient[name] = _load1()
-        samples = [_run_once(df_fn) for _ in range(2)]
-        # spread-triggered third sample: if the two samples disagree >2.5x,
-        # one of them was a window — a third cheap sample lets min() reject
-        # it instead of averaging it in
-        if max(samples) > 2.5 * min(samples):
-            samples.append(_run_once(df_fn))
-        timings[name] = min(samples)
-
-    pts = synth.geo_entities_from_documents(docs).persist()
-    pts.count()
-    nodes24, ways24 = synth.osm_grid(spark, g=GRID)
-    gw24 = N.geom_ways(nodes24, N.split_streets(N.filter_streets(ways24)))
-    seg_cells = SP.segments_by_cell(
-        SP.street_buffers(SP.street_segments(SW.make_sidewalks(gw24)))).persist()
-    seg_cells.count()
-    bench("g4_pip_join", lambda: SP.pip_join(pts, buffers, cover_res=SP.PIP_COVER_RES))
-    # first_radius=1: the points cloud extends ~1 km beyond the city, so
-    # phase 2 re-probes the outside points regardless — a 9-cell phase-1
-    # disk (vs 25) wastes less on them while still settling every in-city
-    # point (76 m bound > the 64 m worst-case nearest-sidewalk distance)
-    bench("g5_knn", lambda: SP.knn_join(pts, seg_cells, k=1, max_ring=4,
-                                        first_radius=1))
-    bench("g6_tiles", lambda: SP.coverage_tiles(pts, SP.pip_join(pts, buffers, cover_res=SP.PIP_COVER_RES)))
-    bench("minhash_lsh", lambda: dedup.minhash_lsh_pairs(docs))
-    bench("jaccard_pairs", lambda: dedup.jaccard_pairs(docs, 0.8))
-    bench("simhash", lambda: dedup.simhash(docs))
-    bench("embedding_neardup", lambda: dedup.embedding_neardup_pairs(emb, 0.9))
-    bench("ann_topk", lambda: similarity.brute_force_topk(emb, emb.filter("vec_id % 25 = 0"), k=5))
-    bench("lsh_topk", lambda: similarity.lsh_topk(emb, emb.filter("vec_id % 25 = 0"), k=5))
-    bench("simhash64_neardup", lambda: dedup.simhash_neardup_pairs(docs))
-    bench("lsh_topk_multiprobe",
-          lambda: similarity.lsh_topk_multiprobe(emb, emb.filter("vec_id % 25 = 0"), k=5))
-    bench("ivf_topk", lambda: similarity.ivf_topk(emb, emb.filter("vec_id % 17 = 0"), k=5))
-    bench("shingle_jaccard", lambda: dedup.shingle_jaccard_pairs(docs, 0.5))
-    bench("gemm_topk", lambda: similarity.gemm_topk(emb, emb.filter("vec_id % 25 = 0"), k=5))
-    bench("incremental_dedup", lambda: dedup.incremental_dedup(
-        docs.filter("doc_id % 7 = 3"), docs.filter("doc_id % 7 != 3")))
-    bench("corpus_build", lambda: PL.build_corpus(docs))
-    # r3 'Next round' #8: the only green operators without a bench leg.
-    # dedup_clusters includes the CC fixpoint loop (driver-side rounds),
-    # so its wall covers the whole graph-closure path, not just the pairs.
-    bench("dedup_clusters", lambda: dedup.dedup_clusters(docs))
-    bench("domain_stats", lambda: text.domain_stats(synth.pages(spark, 1_000_000)))
-    # r4 training-pipeline additions
-    bench("sequence_packing", lambda: text.pack_sequences(docs))
-    bench("decontaminate", lambda: dedup.decontaminate(
-        docs, docs.filter("doc_id % 97 = 0"), w=4))
-    bench("ngram_counts", lambda: text.ngram_counts(docs))
-    bench("pii_scrub", lambda: text.pii_scrub(docs))
-    bench("url_dedup", lambda: text.url_dedup(synth.pages(spark, 1_000_000)))
-    bench("normalize_text", lambda: text.normalize_text(docs))
-    bench("quality_score", lambda: text.quality_score(docs))
-    # r4 second wave: repetition filters, boilerplate stripper (planted
-    # line structure as in the oracle), the as-of join, fuzzy-dedup apply
-    bench("repetition_stats", lambda: text.repetition_stats(docs))
-    bench("remove_boilerplate", lambda: text.remove_boilerplate(
-        docs.selectExpr(
-            "doc_id",
-            "CONCAT('site', CAST(doc_id % 997 AS STRING), '.example') AS domain",
-            "CONCAT('nav header', CHR(10), 'body: ', text, CHR(10), "
-            "'(c) footer') AS text")))
-    bench("asof_join", lambda: TP.asof_join(
-        ev.filter("event_type = 'click'"),
-        ev.filter("event_type = 'view'").withColumnRenamed(
-            "event_id", "view_event_id"),
-        on=["user_id"], tiebreak="view_event_id"))
-    bench("dedup_keep", lambda: dedup.dedup_keep(docs))
-    bench("interval_join", lambda: TP.interval_join(
-        ev.filter("event_type = 'click'").selectExpr("event_id", "user_id", "ts"),
-        ev.filter("event_type = 'error'").selectExpr(
-            "event_id AS err_event_id", "user_id", "ts AS err_start",
-            "ts + INTERVAL 30 MINUTES AS err_end"),
-        on=["user_id"], left_ts="ts", right_start="err_start",
-        right_end="err_end", bucket_s=1800))
-    bench("cdc_chunks", lambda: text.cdc_chunks(docs))
-    bench("substring_dedup", lambda: dedup.substring_dedup(docs, k=6))
-    bench("quantize_embeddings", lambda: similarity.quantize_embeddings(emb))
-    bench("quantized_topk", lambda: similarity.quantized_topk(
-        emb, emb.filter("vec_id % 25 = 0"), k=5, shortlist=4))
-    bench("stratified_quota", lambda: text.stratified_quota(
-        docs, {"en": 1000, "de": 400, "fr": 200}))
-    bench("global_shuffle", lambda: text.global_shuffle(docs, n_shards=64))
-    bench("length_quantiles", lambda: text.length_quantiles(docs))
-    # r4 third wave: retrieval, bloom pre-screen, per-domain top-k
-    from tosidewalk_spark.operators import search as SRCH
-    bench("inverted_index", lambda: SRCH.inverted_index(docs))
-    bench("tfidf_topk", lambda: SRCH.tfidf_topk(
-        docs,
-        docs.filter("doc_id % 97 = 0").selectExpr(
-            "doc_id AS query_id",
-            f"EXPLODE(SLICE({text._tokens()}, 1, 8)) AS term"),
-        k=5))
-    bench("bloom_dedup", lambda: dedup.bloom_dedup(
-        docs.filter("doc_id % 7 = 3"), docs.filter("doc_id % 7 != 3")))
-    bench("domain_topk", lambda: text.domain_topk(
-        docs.selectExpr(
-            "doc_id",
-            "CONCAT('site', CAST(doc_id % 997 AS STRING), '.example') AS domain",
-            "lang", "text"), k=3))
-    # r4 fourth wave: web-graph PageRank + LM fluency + k-means
-    from tosidewalk_spark.operators import graph as GR
-    from tosidewalk_spark.operators import clustering as CL
-    bench("pagerank", lambda: GR.pagerank(GR.link_graph(docs), n_iter=5))
-    bench("kmeans_assign", lambda: CL.kmeans_assign(emb, k=8, n_iter=3))
-    bench("semantic_dedup", lambda: CL.semantic_dedup(
-        emb, k=8, n_iter=2, cos_threshold=0.4))
-    bench("lm_fluency", lambda: text.lm_fluency(
-        docs.filter("doc_id % 5 != 0"), docs.filter("doc_id % 5 = 0")))
-    bench("ccnet_buckets", lambda: text.ccnet_buckets(
-        docs.filter("doc_id % 5 != 0"), docs.filter("doc_id % 5 = 0")))
-    bench("url_filter", lambda: text.url_filter(
-        synth.pages(spark, 1_000_000),
-        spark.range(40).selectExpr(
-            "CONCAT('site', CAST(id * 31 % 997 AS STRING), "
-            "'.example') AS domain"),
-        bad_words=["7", "13"]))
-    bench("winnowing", lambda: dedup.winnowing(docs))
-    from tosidewalk_spark.plans import registry as _REG
-    bench("grid_paths", lambda: SP.grid_paths(
-        pts.selectExpr("entity AS pair_id", "cell9 AS cell_a",
-                       f"CAST({_REG._CENTER_CELL9} AS BIGINT) AS cell_b")
-        .distinct()))
-    bench("containment_pairs",
-          lambda: dedup.containment_pairs(docs, threshold=0.6))
-    bench("line_dedup", lambda: dedup.line_dedup(
-        docs.selectExpr("doc_id", f"{_REG._multiline_spark()} AS text")))
-    bench("bm25_topk", lambda: SRCH.bm25_topk(
-        docs,
-        docs.filter("doc_id % 97 = 0").selectExpr(
-            "doc_id AS query_id",
-            f"EXPLODE(SLICE({text._tokens()}, 1, 8)) AS term"),
-        k=5))
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    _traj_ent = ("CONCAT('loc_', CAST(user_id AS STRING), '_', "
-                 "CAST(event_id % 7 AS STRING))")
-    _tlat, _tlng = synth.entity_latlng_sql(_traj_ent)
-    bench("trajectory_stats", lambda: SP.trajectory_stats(
-        events.selectExpr(
-            "user_id AS traj_id", "ts", "event_id",
-            f"{_sqlfns.cell_sql(_tlat, _tlng, 9)} AS cell")))
-    bench("od_matrix", lambda: SP.od_matrix(
-        events.selectExpr(
-            "user_id AS traj_id", "ts", "event_id",
-            f"{_sqlfns.cell_sql(_tlat, _tlng, 9)} AS cell"),
-        parent_res=7, res=9))
-    bench("grid_dbscan", lambda: SP.grid_dbscan(
-        pts.selectExpr("cell9 AS cell"), min_pts=5))
-    bench("zonal_stats", lambda: SP.zonal_stats(
-        pts.selectExpr("cell9 AS cell").groupBy("cell")
-        .agg(F.count("*").cast("long").alias("v")),
-        spark.createDataFrame(
-            _REG._ZONES,
-            "zone_id string, i_lo long, i_hi long, j_lo long, j_hi long")))
-    bench("hotspot_gi", lambda: SP.hotspot_gi(
-        pts.selectExpr("cell9 AS cell").groupBy("cell")
-        .agg(F.count("*").alias("n")), k=1))
-    bench("moran_i", lambda: SP.moran_i(
-        pts.selectExpr("cell9 AS cell").groupBy("cell")
-        .agg(F.count("*").alias("n")), k=1))
-    bench("triangle_count", lambda: GR.triangle_count(GR.link_graph(docs)))
-    bench("hits", lambda: GR.hits(GR.link_graph(docs), n_iter=5))
-    bench("bfs_distances", lambda: GR.bfs_distances(
-        GR.link_graph(docs),
-        docs.filter("doc_id % 101 = 0").selectExpr("doc_id AS node_id"),
-        n_rounds=5))
-    bench("textrank", lambda: GR.textrank_keywords(docs, k=25, n_iter=5))
-    bench("label_propagation",
-          lambda: GR.label_propagation(GR.link_graph(docs), n_rounds=5))
-    bench("ts_resample", lambda: TP.ts_resample(events, bin_s=21600))
-    bench("ts_rate", lambda: TP.ts_rate(events))
-    bench("phrase_search",
-          lambda: SRCH.phrase_search(docs, ["order", "fast"], k=20))
-    bench("sessionize", lambda: TP.sessionize(events, gap_s=14400))
-    _mm_pings = events.selectExpr(
-        "user_id AS traj_id", "event_id", "ts",
-        f"{_tlat} AS lat", f"{_tlng} AS lng").filter(
-        f"lat > {_REG.LAT_LO} AND lat < {_REG.LAT_HI} "
-        f"AND lng > {_REG.LNG_LO} AND lng < {_REG.LNG_HI}").selectExpr(
-        "traj_id", "event_id", "ts", "lat", "lng",
-        f"{_sqlfns.cell_sql('lat', 'lng', 9)} AS cell9")
-    bench("map_match", lambda: SP.map_match(_mm_pings, seg_cells,
-                                            max_ring=6))
-    bench("emerging_hotspots", lambda: SP.emerging_hotspots(
-        events.selectExpr(
-            f"{_sqlfns.cell_sql(_tlat, _tlng, 9)} AS cell",
-            "CAST(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 "
-            "AS BIGINT) AS bin")
-        .groupBy("cell", "bin").agg(F.count("*").alias("v")), k=1))
-    bench("dsir_weights", lambda: text.dsir_weights(
-        docs, docs.filter("doc_id % 11 = 0")))
-    bench("dsir_sample", lambda: text.dsir_sample(
-        docs, docs.filter("doc_id % 11 = 0"), k=100))
-    bench("mixture_weights", lambda: text.mixture_weights(docs, budget=1000))
-    bench("hash_embed", lambda: text.hash_embed(docs))
-    from tosidewalk_spark.operators import multimodal as MM
-    phash_media = docs.filter(
-        "doc_id % 5 = 0 AND n_chars >= 8 AND "
-        "OCTET_LENGTH(SUBSTRING(text, 1, 8)) = 8").selectExpr(
-        "CONCAT('doc://', CAST(doc_id AS STRING)) AS url",
-        "'image' AS media_type",
-        "CAST(REPEAT(SUBSTRING(text, 1, 8), 16) AS BINARY) AS payload",
-        "64 AS width", "48 AS height", "1 AS n_frames")
-    bench("image_phash_dedup", lambda: MM.image_phash_dedup(phash_media))
-    bench("chunk_windows", lambda: text.chunk_windows(
-        docs, chunk_tokens=32, overlap=8))
-    bench("bpe_tokenize", lambda: text.bpe_tokenize(docs))
-    bench("bpe_learn", lambda: text.bpe_learn(docs))
-    from tosidewalk_spark.operators import sketch
-    bench("hll_distinct", lambda: sketch.hll_distinct(docs))
-    bench("cm_topk", lambda: sketch.cm_topk(docs))
-    bench("qsk_quantiles", lambda: sketch.qsk_quantiles(docs))
-    bench("gopher_rules", lambda: text.gopher_rules(docs))
-    # compact over a ~66k-cell covering (256x258 misaligned rectangle)
-    compact_cover = (spark.range(1000, 1256).selectExpr("id AS i")
-                     .crossJoin(spark.range(2001, 2259).selectExpr("id AS j"))
-                     .selectExpr(
-                         "CAST(9 * 72057594037927936 + j * 268435456 + i "
-                         "AS LONG) AS cell"))
-    bench("g3_compact", lambda: SP.compact_cells(compact_cover, res=9,
-                                                 min_res=5))
-    # city-scale polygon at res 11 (~0.02 deg across => ~50k candidates)
-    bench("g3_polyfill", lambda: SP.polyfill_cells(
-        spark, [(47.55, -122.40), (47.68, -122.37), (47.66, -122.28),
-                (47.57, -122.30)], res=11))
-    bench("g3_cells_geojson", lambda: SP.cells_to_geojson(compact_cover))
-    bench("g3_focal_sum", lambda: SP.focal_sum(
-        pts.groupBy(F.col("cell9").alias("cell"))
-        .agg(F.count("*").alias("n")), k=1))
-    bench("fetch_schedule", lambda: text.fetch_schedule(
-        docs.selectExpr(
-            "CONCAT('https://site', CAST(doc_id % 997 AS STRING), "
-            "'.example/p/', CAST(doc_id AS STRING)) AS url"), per_slot=2))
-    bench("extract_text_100k", lambda: text.extract_text(synth.pages(spark, 100_000)))
-    tiles_df = SP.coverage_tiles(
-        pts, SP.pip_join(pts, buffers, cover_res=SP.PIP_COVER_RES)).persist()
-    tiles_df.count()
-    bench("vectorize_tiles", lambda: SP.vectorize_tiles(tiles_df, threshold=2.0))
-    tiles_df.unpersist()
-    import shutil
-    import tempfile
-    from tosidewalk_spark.sources import warc
-    wdir = tempfile.mkdtemp(prefix="bench_warc_")
-    try:  # shard write is untimed setup; the timed leg is the scan path
-        warc.write_warc(synth.pages(spark, 100_000), wdir, shards=32).collect()
-        bench("warc_scan_100k", lambda: warc.scan_warc(spark, wdir))
-    finally:
-        shutil.rmtree(wdir, ignore_errors=True)
-    from tosidewalk_spark.sources import jsonl
-    jdir = tempfile.mkdtemp(prefix="bench_jsonl_")
-    try:
-        jsonl.write_jsonl(docs.select("doc_id", "lang", "text"), jdir,
-                          shards=32)
-        bench("jsonl_scan", lambda: jsonl.scan_jsonl(spark, jdir))
-    finally:
-        shutil.rmtree(jdir, ignore_errors=True)
-    # r4 fifth wave: catalog metadata ops.  Setup (untimed) writes a
-    # Z-ordered points table; catalog_skip_scan times the stats-pruned
-    # rectangle read (manifest planning + the few surviving files),
-    # catalog_cow_merge times a copy-on-write upsert end-to-end (candidate
-    # selection from key stats + rewrite + snapshot publish — an ACTION,
-    # timed directly, each round appending one more snapshot).
-    from tosidewalk_spark.plans import registry as REG
-    from tosidewalk_spark.sources.catalog import Catalog
-    cdir = tempfile.mkdtemp(prefix="bench_catalog_")
-    try:
-        cat_ = Catalog(spark, cdir)
-        zpts = pts.selectExpr(
-            "url", "entity", "lat", "lng", "cell9",
-            f"{REG._FS_CI} AS ci", f"{REG._FS_CJ} AS cj")
-        cat_.write("points", zpts, zorder_by=("ci", "cj"), target_files=32)
-        bench("catalog_skip_scan", lambda: cat_.scan("points", REG._FS_RANGES))
-        # the north-rule composition: metadata-pruned city scan -> PIP join
-        # (the join reads only the files whose z-blocks overlap the city)
-        bench("catalog_pip", lambda: SP.pip_join(
-            cat_.scan("points", REG._CP_RANGES), buffers,
-            cover_res=SP.PIP_COVER_RES))
-        docs3 = docs.select("doc_id", "lang", "n_chars")
-        cat_.write("docs", docs3.repartitionByRange(16, "doc_id")
-                   .sortWithinPartitions("doc_id"))
-        ups_ = docs3.filter("doc_id % 10 = 7").selectExpr(
-            "doc_id", "lang", "n_chars + 1 AS n_chars")
-        cat_.merge("docs", ups_, "doc_id")  # warmup
-        timings["catalog_cow_merge"] = min(
-            _timed(lambda: cat_.merge("docs", ups_, "doc_id"))[1]
-            for _ in range(2))
-    finally:
-        shutil.rmtree(cdir, ignore_errors=True)
-    # end-of-phase re-measure: any query whose samples were all taken at
-    # ambient load >= QUIET_THRESH gets one more quiet-gated sample now —
-    # by this point the window that inflated it has usually passed, and
-    # min() keeps whichever is honest.  Legs whose fixtures are already
-    # cleaned up (warc/jsonl shards, catalog warehouse) cannot re-run and
-    # keep their annotated record.
-    _gone = {"warc_scan_100k", "jsonl_scan", "catalog_skip_scan",
-             "catalog_pip", "catalog_cow_merge"}
-    flagged = [n for n, ld in run_queries.ambient.items()
-               if ld >= QUIET_THRESH and n in _fns and n not in _gone]
-    for name in flagged[:8]:
-        pq_budget[0] -= _wait_quiet(min(45.0, pq_budget[0]), QUIET_THRESH)
-        if _load1() >= QUIET_THRESH:
-            continue  # still loaded; annotation already tells the story
-        t = _run_once(_fns[name])
-        if t < timings[name]:
-            timings[name] = t
-            run_queries.remeasured.append(name)
-    pts.unpersist()
-    seg_cells.unpersist()
-    return timings
+        spark.stop()
+    return timings, failed
 
 
 def main() -> None:
-    if "--scaling-leg" in sys.argv:  # subprocess mode: print one float
-        i = sys.argv.index("--scaling-leg")
-        spec = sys.argv[i + 1]
-        j = sys.argv.index("--pages")
-        n = int(sys.argv[j + 1])
-        print(measured_session(spec, n))
-        return
-    spark = get_spark("bench", cpus=CPUS, shuffle_partitions=2 * CPUS)
-    buffers = build_buffers(spark)
-    pages_throughput_job(spark, buffers, 200_000)  # warmup
-    flag_sec = min(_timed(lambda: pages_throughput_job(spark, buffers, N_PAGES))[1]
-                   for _ in range(2))
-    scan = parquet_scan_leg(spark, buffers, SCAN_PAGES)
-    # SPARK_GRAFT_BENCH_QUERIES=0 skips the ~25-min per-query legs so a
-    # scaling-only re-run (headline + scan + official pair) fits inside a
-    # short quiet-host window; the default (full legs) is what the driver
-    # runs and what BENCH_r*_local.json records.
-    if os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "1") != "0":
-        queries = run_queries(spark, buffers)
-        queries_ambient = getattr(run_queries, "ambient", {})
-        queries_remeasured = getattr(run_queries, "remeasured", [])
-    else:
-        queries = {}
-        queries_ambient, queries_remeasured = {}, []
-    spark.stop()
-
-    scaling = curve = disjoint = None
-    if RUN_SCALING and SCALING_ROUNDS > 0:
-        small, big = SCALING_CORES
-        # Official pair sampled in rounds SPREAD ACROSS the whole scaling
-        # phase, interleaved with the curve/disjoint legs: this host's
-        # noise arrives in multi-minute windows (observed: the same
-        # 8-core/10M leg measuring 14.9 s and 8.6 s a few minutes apart),
-        # and back-to-back rounds can land every sample of a leg inside
-        # one window — min-per-leg only rejects noise if the samples are
-        # time-separated.  Curve legs double as the spacers.
-        t_small, t_big, l_small, l_big = [], [], [], []
-        waited = [0.0]
-
-        def official_round():
-            if len(t_small) >= SCALING_ROUNDS:
-                return
-            # bounded wait for a quiet ambient window before an OFFICIAL
-            # sample (the r3 driver's 0.794 came from every small-leg
-            # sample landing in load windows); curve/disjoint legs don't
-            # wait — they double as spacers either way
-            allowance = min(QUIET_WAIT_S, QUIET_TOTAL_S - waited[0])
-            waited[0] += _wait_quiet(allowance, QUIET_THRESH)
-            l_small.append(_load1())
-            t_small.append(measured_session_pinned(small, SCALING_PAGES))
-            l_big.append(_load1())
-            t_big.append(measured_session_pinned(big, SCALING_PAGES))
-
-        official_round()
-        # full N->4N curve at increasing box share (2->8, 4->16, 8->32):
-        # the monotone-decline-in-box-share evidence behind reporting 2->8
-        # as the cluster-representative pair (ADVICE.md r2: the 8->32 pair
-        # is in the official JSON too) — on one box the large legs share a
-        # memory controller that N separate cluster nodes would not
-        # rounds=2 since r5 (VERDICT r4 #7): with one round the curve's
-        # efficiency_paired_median degenerates to the single ratio and the
-        # "8->32 = host bandwidth ceiling" claim was asserted, not
-        # measured; two time-separated rounds give each curve entry a
-        # min-based AND a paired-median estimator plus per-sample ambient
-        # loads, same as the official pair
-        curve = [scaling_pair(4, 16, SCALING_PAGES, rounds=2)]
-        official_round()
-        curve.append(scaling_pair(8, 32, SCALING_PAGES, rounds=2))
-        official_round()
-        # disjoint-core legs (ADVICE.md r2): small leg on cores 24-25, big
-        # on 8-15 — no core overlap with each other, same efficiency as the
-        # overlapping official pair => the pairing, not core identity or
-        # cache residue, is what's measured.  TWO rounds since r4: the
-        # 1-round pair measured 0.935 and 0.698 on the same day purely on
-        # window noise — a single-sample leg cannot reject a window.
-        disjoint = scaling_pair("24-25", "8-15", SCALING_PAGES, rounds=2)
-        official_round()
-        while len(t_small) < SCALING_ROUNDS:  # extra rounds past the interleave points
-            waited[0] += _wait_quiet(
-                min(QUIET_WAIT_S, QUIET_TOTAL_S - waited[0]), QUIET_THRESH)
-            l_small.append(_load1())
-            t_small.append(measured_session_pinned(small, SCALING_PAGES))
-            l_big.append(_load1())
-            t_big.append(measured_session_pinned(big, SCALING_PAGES))
-        scaling = pair_record(small, big, SCALING_PAGES, t_small, t_big,
-                              l_small, l_big)
-        scaling["quiet_wait_s"] = round(waited[0], 1)
-
-    out = {
-        "metric": "spatial_join_tiling_wall_sec",
-        "value": flag_sec,
-        "unit": "sec",
-        "queries": queries,
-        "sf": SF_DIR.rstrip("/").split("sf")[-1],
-        "pages": N_PAGES,
-        "pages_per_sec": round(N_PAGES / flag_sec, 1),  # generated-input path
-        "parquet_scan": scan,  # scan-inclusive path, measured separately
-        # per-query hygiene record (VERDICT r4 #3): the 1-min load read
-        # just before each query's timed samples, and which queries the
-        # end-of-phase quiet re-measure improved — a reader can tell a
-        # plan regression from a noise window without re-running
-        "queries_ambient_load": queries_ambient,
-        "queries_remeasured": queries_remeasured,
-    }
-    # emit each scaling artifact iff it was measured: with
-    # SPARK_GRAFT_SCALING_ROUNDS=0 the old single `if scaling:` gate
-    # measured the multi-minute curve/disjoint legs and then silently
-    # discarded them (ADVICE.md r3)
-    if scaling is not None:
-        out["scaling"] = scaling
-    if curve is not None:
-        out["scaling_curve"] = curve
-    if disjoint is not None:
-        out["scaling_disjoint"] = disjoint
-    print(json.dumps(out))
+    pages, best, scaling = run_legs(os.sched_getaffinity(0))
+    queries, queries_failed = run_queries(SF_DIR)
+    print(json.dumps({
+        "metric": "spatial_join_tiling_wall_sec", "value": best, "unit": "sec",
+        "sf": SF_DIR.rstrip("/").split("sf")[-1], "pages": pages,
+        "pages_per_sec": round(pages / best, 1), "scaling": scaling,
+        "queries": queries, "queries_failed": queries_failed}))
 
 
 if __name__ == "__main__":

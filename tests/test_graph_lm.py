@@ -1,5 +1,6 @@
 """Unit tests for the r4 fourth-wave operators: fixed-point PageRank over
 the deterministic link graph, and reference-corpus bigram LM fluency."""
+import pytest
 from pyspark.sql import functions as F
 
 from tosidewalk_spark.operators import graph, text
@@ -258,6 +259,28 @@ def test_hits_l1_mass_and_coverage_on_link_graph(spark):
     # L1 normalisation leaks at most 1 unit of mass per node to floor
     assert S - agg.n <= agg.h <= S and S - agg.n <= agg.a <= S
     assert agg.n == docs.count()
+
+
+# star (1,0),(2,0),(3,0), two rounds: the round-2 authority rescale
+# multiplies a'(0) = scale by scale, so the largest scale that fits BIGINT
+# is floor(sqrt(2^63 - 1))
+HITS_SCALE_LIMIT = 3_037_000_499
+
+
+def test_hits_rescale_at_overflow_limit(spark):
+    out = {r.node_id: r for r in graph.hits(
+        _edges(spark, [(1, 0), (2, 0), (3, 0)]), n_iter=2,
+        scale=HITS_SCALE_LIMIT).collect()}
+    assert out[0].auth_fx == HITS_SCALE_LIMIT
+    assert {n: r.hub_fx for n, r in out.items()} == \
+        {0: 0, 1: HITS_SCALE_LIMIT // 3, 2: HITS_SCALE_LIMIT // 3,
+         3: HITS_SCALE_LIMIT // 3}
+
+
+def test_hits_rescale_past_overflow_limit_raises(spark):
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        graph.hits(_edges(spark, [(1, 0), (2, 0), (3, 0)]), n_iter=2,
+                   scale=HITS_SCALE_LIMIT + 1).collect()
 
 
 def test_bfs_distances_path_bounded_and_multisource(spark):

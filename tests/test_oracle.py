@@ -114,3 +114,17 @@ def test_audit_diagnose_names_failing_member(spark):
     assert {m["metric"] for m in mm} <= {"sum_n_emails", "sq_n_emails"}, mm
     for m in mm:
         assert m["spark"] is not None and m["duck"] is not None
+
+
+def test_phash_audit_fold_fits_bigint_at_sf01(spark):
+    """image_phash_dedup's 56-bit phash summed raw overflows BIGINT on the
+    1000 rows of sf0.1 (ANSI mode raises); the audit folds it mod-reduced,
+    like the other wide hash columns."""
+    from tosidewalk_spark.plans import registry as R
+
+    df = R.QUERIES["image_phash_dedup"][0](spark, "/root/testdata/sf0.1")
+    got = {r.metric: r.value
+           for r in R._audit_spark(df, "image_phash_dedup").collect()}
+    hashes = [r.phash for r in df.select("phash").collect()]
+    assert got["n_rows"] == len(hashes)
+    assert got["sm_phash"] == sum(h % R._AUDIT_SQ_MOD for h in hashes)

@@ -238,10 +238,10 @@ def hits(edges: DataFrame, n_iter: int = 5,
     indeg_max · scale², so scale = 10⁶ holds to indeg_max ≈ 9·10⁶; for
     crawl graphs with hotter hubs drop scale a decade (ranking
     unchanged, one fewer digit of score resolution).  Past that cliff
-    the engines DIVERGE, not merely degrade (ADVICE r5): Spark's
-    non-ANSI BIGINT multiply wraps silently (wrong ranks) while DuckDB
-    promotes the SUM to HUGEINT and raises on the out-of-range product
-    (hard error) — size `scale` to the graph's max in-degree.
+    both engines raise rather than return wrong ranks: ``get_spark``
+    leaves ANSI mode on (pyspark 4's default), so Spark's BIGINT multiply
+    fails with ARITHMETIC_OVERFLOW, and DuckDB raises on the
+    out-of-range product — size `scale` to the graph's max in-degree.
 
     Plan: each round is two join→hash-agg passes over the edges plus two
     1-row L1 totals that ride broadcasts (no driver collect).

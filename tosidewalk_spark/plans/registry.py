@@ -4606,7 +4606,7 @@ _AUDIT_SPECS: dict[str, list[tuple[str, str]]] = {
     "bpe_learn": [("merge_no", "i"), ("a", "s"), ("b", "s"),
                   ("pair_count", "i")],
     "jsonl_roundtrip": [("doc_id", "i"), ("lang", "s"), ("text", "s")],
-    "image_phash_dedup": [("url", "s"), ("phash", "i"), ("n_copies", "i"),
+    "image_phash_dedup": [("url", "s"), ("phash", "h"), ("n_copies", "i"),
                           ("keep", "b")],
     # --- second pass: demoted r1-r3 window entries -------------------------
     "fingerprint": [("doc_id", "i"), ("fingerprint", "h")],

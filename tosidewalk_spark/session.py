@@ -3,8 +3,9 @@
 AQE on (runtime skew-join + partition coalescing), Arrow on (pandas UDF
 batches).  Defaults are sized to the host that runs them: local[N] with N
 the cores in the process's affinity mask, driver memory a quarter of
-physical RAM, shuffle partitions 2N (at least 16).  SPARK_GRAFT_CPUS,
-SPARK_GRAFT_DRIVER_MEM and SPARK_GRAFT_SHUFFLE override them.
+physical RAM, shuffle partitions 2N (at least 16) unless the caller
+passes ``shuffle_partitions``.  SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM
+override the first two.
 """
 from __future__ import annotations
 
@@ -16,8 +17,7 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "tosidewalk-spark", cpus: str | int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
-    shuffle = shuffle_partitions or int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE", str(2 * max(int(cpus) if str(cpus).isdigit() else 32, 8))))
+    shuffle = shuffle_partitions or 2 * max(int(cpus), 8)
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if not driver_mem:
         # a quarter of physical RAM: a heap larger than the host lets the
