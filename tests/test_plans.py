@@ -2,6 +2,8 @@
 filters and column pruning reach the parquet scan, small build sides
 broadcast, aggregations are two-phase (map-side partial), and the hot
 expressions stay in whole-stage codegen."""
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -147,21 +149,34 @@ def test_simhash64_is_codegen_aggregate(spark):
         assert marker not in plan
 
 
-def test_knn_k1_fast_path_is_aggregation(spark):
-    """r3: k=1 kNN must plan as struct-min hash aggregation (map-side
-    combine), with no per-point window sort in the phase-1 path."""
+def _scans(plan: str) -> set:
+    """Checkpoint and cache scans of a plan, attribute ids stripped."""
+    return {re.sub(r"#\d+L?", "", line.strip(" +-:*()0123456789"))
+            for line in plan.splitlines()
+            if "ExistingRDD" in line or "InMemoryRelation" in line
+            or "InMemoryTableScan" in line}
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_knn_k1_fast_path_is_aggregation(spark, k):
+    """kNN is one plan: it reads no checkpoint or cache of its own (only
+    what its inputs read), and k=1 plans as a struct-min hash aggregation
+    (map-side combine) with no per-point window sort."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     pts = synth.geo_entities_from_documents(docs)
     nodes, ways = synth.osm_grid(spark, g=6)
     gw = N.geom_ways(nodes, N.split_streets(N.filter_streets(ways)))
     seg_cells = SP.segments_by_cell(SP.street_buffers(SP.street_segments(SW.make_sidewalks(gw))))
-    out = SP.knn_join(pts, seg_cells, k=1, max_ring=4, first_radius=1)
+    out = SP.knn_join(pts, seg_cells, k=k, max_ring=4)
     plan = _executed_plan(out)
-    assert "HashAggregate" in plan and "partial_" in plan
-    # no per-point rank window (the R5 running-sum window in the build-side
-    # street split is fine — it partitions by way_id, not by point)
-    assert "windowspecdefinition(url" not in plan, \
-        "k=1 path must not sort per point"
+    inputs = _scans(_executed_plan(pts)) | _scans(_executed_plan(seg_cells))
+    assert _scans(plan) <= inputs, _scans(plan) - inputs
+    if k == 1:
+        assert "HashAggregate" in plan and "partial_" in plan
+        # no per-point rank window (the R5 running-sum window in the
+        # build-side street split is fine — it partitions by way_id)
+        assert "windowspecdefinition(url" not in plan, \
+            "k=1 path must not sort per point"
 
 
 def test_pyfiles_zip_imports_standalone(tmp_path):

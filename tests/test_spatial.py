@@ -57,19 +57,44 @@ def test_pip_join_inside_outside(spark):
     assert out[0].dist_m == pytest.approx(5.0, rel=0.01)
 
 
-def test_knn_matches_bruteforce(spark):
+def _in_grid_points(rng):
+    return [(float(47.60 + rng.uniform(0, 4) * synth.LAT_STEP),
+             float(-122.33 + rng.uniform(0, 4) * synth.LNG_STEP)) for _ in range(20)]
+
+
+def _outside_points(rng):
+    """300-800 m beyond one side of the g=5 grid's bbox (cycling E, W, N,
+    S): most of the network is far, and every point's candidates come from
+    disk cells well away from its own."""
+    lat0, lng0 = 47.60, -122.33
+    lat1, lng1 = lat0 + 4 * synth.LAT_STEP, lng0 + 4 * synth.LNG_STEP
+    out = []
+    for i in range(20):
+        off = rng.uniform(300.0, 800.0)
+        lat = lat0 + rng.uniform(0, 4) * synth.LAT_STEP
+        lng = lng0 + rng.uniform(0, 4) * synth.LNG_STEP
+        # start on that side's edge of the grid, then step outward
+        lat, lng, dx, dy = [(lat, lng1, off, 0.0), (lat, lng0, -off, 0.0),
+                            (lat1, lng, 0.0, off), (lat0, lng, 0.0, -off)][i % 4]
+        plat, plng = geom.latlng_offset(lat, lng, dx, dy)
+        out.append((float(plat), float(plng)))
+    return out
+
+
+@pytest.mark.parametrize("where", ["in_grid", "outside"])
+@pytest.mark.parametrize("k", [1, 3])
+def test_knn_matches_bruteforce(spark, k, where):
     # 20 hash-placed points vs the grid-city sidewalk network
     nodes, ways = synth.osm_grid(spark, g=5, with_noise_ways=False)
     gw = N.geom_ways(nodes, N.split_streets(ways))
     sw = SW.make_sidewalks(gw)
     segs = SP.street_segments(sw.withColumn("kind", F.lit("sidewalk")))
     bufs = SP.street_buffers(segs)
-    rng = np.random.default_rng(3)
-    rows = [(f"u{i}", f"e{i}",
-             float(47.60 + rng.uniform(0, 4) * synth.LAT_STEP),
-             float(-122.33 + rng.uniform(0, 4) * synth.LNG_STEP)) for i in range(20)]
+    place = _in_grid_points if where == "in_grid" else _outside_points
+    rows = [(f"u{i}", f"e{i}", plat, plng)
+            for i, (plat, plng) in enumerate(place(np.random.default_rng(3)))]
     pts = _points(spark, rows)
-    knn = SP.knn_join(pts, SP.segments_by_cell(bufs), k=2).collect()
+    knn = SP.knn_join(pts, SP.segments_by_cell(bufs), k=k).collect()
     # brute force with the numpy kernel
     seg_rows = segs.collect()
     a = np.array([[s.alat, s.alng, s.blat, s.blng] for s in seg_rows])
@@ -79,12 +104,18 @@ def test_knn_matches_bruteforce(spark):
     for r in knn:
         got.setdefault(r.url, []).append((r.knn_rank, r.segment_id, r.dist_m))
     assert len(got) == 20
+    # knn_join is exact when the k-th neighbor lies in disk(max_ring=8),
+    # whose east-west reach is at least 8 lng cell edges (~823 m here)
+    reach_m = 8 * cells.cell_size_deg(9) * geom.M_PER_DEG * float(
+        geom.coslat(max(r[2] for r in rows)))
     for (u, e, plat, plng) in rows:
         d = geom.point_segment_dist_m(plat, plng, a[:, 0], a[:, 1], a[:, 2], a[:, 3])
-        order = np.lexsort((sid, wid, np.round(d, 9)))
-        want = [int(sid[order[0]]), int(sid[order[1]])]
-        have = [s for _, s, _ in sorted(got[u])]
-        assert have == want, f"{u}: {have} != {want}"
+        order = np.lexsort((sid, wid, np.round(d, 9)))[:k]
+        assert d[order[-1]] < reach_m, f"{u}: k-th neighbor beyond disk(8)"
+        have = sorted(got[u])
+        assert [rk for rk, _, _ in have] == list(range(1, k + 1))
+        assert [s for _, s, _ in have] == [int(x) for x in sid[order]], u
+        assert [dm for _, _, dm in have] == pytest.approx(d[order].tolist(), abs=1e-6)
 
 
 def test_knn_rank_and_distance_sane(spark):
@@ -96,6 +127,13 @@ def test_knn_rank_and_distance_sane(spark):
     out = SP.knn_join(pts, SP.segments_by_cell(bufs), k=1).collect()
     assert len(out) == 1 and out[0].knn_rank == 1
     assert out[0].dist_m == pytest.approx(30.0, rel=0.01)
+    # straight3 has 2 segments: k=3 returns both (the cells' k-th bound is
+    # NULL, so nothing is pruned), ranked 1 and 2
+    out3 = sorted(SP.knn_join(pts, SP.segments_by_cell(bufs), k=3).collect(),
+                  key=lambda r: r.knn_rank)
+    assert [r.knn_rank for r in out3] == [1, 2]
+    assert out3[0].dist_m == pytest.approx(30.0, rel=0.01)
+    assert out3[0].dist_m <= out3[1].dist_m
 
 
 def test_tiles_counts_and_raster(spark):

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
 
 from ..functions import sqlfns
@@ -115,7 +115,8 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
     present in ``labels`` (labels start as ids and min-propagation only
     moves existing labels around), so the self-join always finds the
     parent row.  Driver-side fixpoint loop (SURVEY.md §3.2); each round is
-    two shuffles; localCheckpoint cuts lineage per round.
+    two shuffles and ONE action: its eager localCheckpoint cuts lineage
+    and reports the round's changed-label count through an Observation.
 
     One-hop MIN-CONTRACTION before the fixpoint (r4): map every node to
     L(v) = min(v, min neighbor) and run the loop on the QUOTIENT graph
@@ -162,9 +163,9 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
             .groupBy("src").agg(F.min("nbr_component").alias("nbr_component"))
         )
         # carry the pre-round label through the round so convergence is a
-        # row-local FILTER over the checkpointed result — the old shape
-        # re-joined new vs old labels purely to count changes, one extra
-        # join + shuffle per round (r6 optimization; labels unchanged)
+        # row-local count observed while the round checkpoints — the old
+        # shape re-joined new vs old labels purely to count changes, one
+        # extra join + shuffle per round (r6 optimization; labels unchanged)
         stepped = (
             labels.join(neighbor_min.withColumnRenamed("src", "id"), "id", "left")
             .select("id", F.col("component").alias("_old"),
@@ -183,17 +184,18 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
         # (both are O(log diameter), the non-convergence guard is intact).
         jump_map = labels.select(F.col("id").alias("component"),
                                  F.col("component").alias("jmp"))
-        new_labels = (
+        obs = Observation()
+        labels = (
             stepped.join(jump_map, "component", "left")
             .select("id", "_old",
                     F.least("component",
                             F.coalesce("jmp", F.col("component"))).alias("component"))
+            .observe(obs, F.sum(F.expr("CAST(component != _old AS BIGINT)"))
+                     .alias("changed"))
             .localCheckpoint(eager=True)
+            .select("id", "component")
         )
-        changed = (new_labels
-                   .filter(F.col("component") != F.col("_old"))
-                   .limit(1).count())
-        labels = new_labels.select("id", "component")
+        changed = obs.get["changed"] or 0  # NULL sum: no labels at all
         if changed == 0:
             break
     if changed != 0:

@@ -3,8 +3,8 @@
 These are the operators the north rule adds on top of the reference
 pipeline [BASELINE.json:14]: cell encoding of geocoded page entities,
 point-in-polygon join of entity points against street-buffer polygons,
-kNN matching to the nearest inferred sidewalk segment via cell-ring
-expansion, and per-cell raster coverage tiles.
+kNN matching to the nearest inferred sidewalk segment via a per-cell
+candidate table, and per-cell raster coverage tiles.
 
 Scale design:
 - The spatial join is compiled to a cell equi-join (build side: polyfill
@@ -12,10 +12,10 @@ Scale design:
   ray-casting refine — Catalyst picks broadcast vs SMJ, AQE handles skew
   coarsely, and dense-cell skew is handled explicitly by the salted
   aggregation in G6/G7.
-- kNN is a two-phase declarative plan: one disk-probe equi-join settles
-  nearly all points with a provable ring lower bound; only stragglers get
-  a wider second probe.  Results are EXACTLY the brute-force top-k (the
-  DuckDB oracle checks this).
+- kNN is one declarative plan: each distinct point cell probes its disk
+  once against the segment cover, the per-cell candidates are pruned by a
+  provable distance bound, and points equi-join their own cell.  Results
+  are EXACTLY the brute-force top-k (the DuckDB oracle checks this).
 - EVERYTHING here is pure Spark SQL in whole-stage codegen — buffer
   corners, cell covers, ray-cast containment and point-segment distance
   are shared sqlfns templates with bit-identical numpy and DuckDB twins.
@@ -195,7 +195,7 @@ def pip_join(points: DataFrame, buffers: DataFrame,
                     "way_id", "segment_id", F.expr(dist).alias("dist_m")))
 
 
-# --- G5: kNN via cell-ring expansion -----------------------------------------
+# --- G5: kNN via a per-cell candidate table ----------------------------------
 
 def segments_by_cell(buffers: DataFrame) -> DataFrame:
     """Segment cover keyed by cell — the reusable build side for kNN."""
@@ -205,150 +205,99 @@ def segments_by_cell(buffers: DataFrame) -> DataFrame:
 
 
 def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
-             max_ring: int = 8, first_radius: int = 2,
-             res: int = cells.DEFAULT_RES) -> DataFrame:
+             max_ring: int = 8, res: int = cells.DEFAULT_RES) -> DataFrame:
     """G5: for each point, the k nearest segments by point-to-segment
     distance.  Exact: equals brute-force top-k (ties broken by
     (dist, way_id, segment_id)) whenever the k-th neighbor lies within
-    disk(max_ring); points with fewer candidates there return what exists.
+    disk(max_ring); points with fewer candidates there return what exists,
+    points with none return no row.
 
-    Two-phase declarative plan (VERDICT.md round-1 'What's wrong' #1 — the
-    old driver-side ring fixpoint re-windowed and localCheckpoint-ed the
-    FULL accumulated candidate set every round):
+    One plan over a per-CELL candidate table.  The small side is the
+    points' distinct lattice cells (the 5000 sf0.1 document points fall in
+    31 res-9 cells), so the ring expansion runs once per cell, not once
+    per point:
 
-    - Phase 1 probes every point's Chebyshev disk(first_radius) in ONE cell
-      equi-join and ranks candidates; a point is settled when it has k
-      candidates and its k-th distance is <= first_radius * (minimum cell
-      edge), so no unexplored segment can beat it.  At realistic density
-      this settles ~all points.
-    - Phase 2 re-probes only the stragglers with disk(max_ring) in one more
-      join.  With zero stragglers the phase-2 subtree is an empty join —
-      no driver-side loop, no isEmpty() action, no checkpoint; the whole
-      operator is a single Catalyst plan (AQE broadcasts the tiny settled-
-      key side of the semi/anti joins at runtime).
+    1. each distinct point cell c explodes disk(c, max_ring) against the
+       broadcast segment cover, deduplicated on (c, segment);
+    2. the table is pruned per cell in each segment's own planar frame
+       (the cm/mx/my/s2 staging of dist_m).  Distance to a segment is
+       1-Lipschitz there, so every point p of c has |d(p, s) - d_c(s)| <= h,
+       with d_c the distance from c's centre and h the cell's half-diagonal
+       0.5·sqrt((s_deg·cm)² + (s_deg·M)²).  Segment s is dropped when
+       d_c(s) - h exceeds the k-th smallest d_c(s') + h over c's segments
+       (plus 1e-6 m of rounding slack): k other segments are then strictly
+       nearer for EVERY point of c.  A cell with fewer than k segments
+       keeps them all (its k-th value is NULL);
+    3. points equi-join the pruned table on their cell and rank by the
+       exact dist_m — k=1 as a struct-min hash aggregation, k>1 as one
+       row_number window.  The table is distinct per (cell, segment), so
+       candidates need no per-point dedup.
 
-    Only phase-1's top-k rows (<= k per point; for k=1 exactly one row
-    per point, matched or not) are a lazy local checkpoint, read by both
-    the settled and the straggler branch — never the raw candidate set."""
-    s = cells.cell_size_deg(res)
-    # conservative meters-per-cell lower bound (lng edge at |lat|<=60)
-    edge_min_m = s * geom.M_PER_DEG * 0.5
-    # the point's lattice coords staged once as _pj/_pi, so the probe
-    # disks (sqlfns.disk_sql) are pure integer arithmetic over them
-    pj, pi = sqlfns.lattice_sql("lat", "lng", res)
-    ji = [F.expr(pj).alias("_pj"), F.expr(pi).alias("_pi")]
-    pts = points.select("url", "entity", "lat", "lng", "cell9", *ji)
-
-    def probe(r: int) -> F.Column:
-        return F.explode(F.expr(sqlfns.disk_sql("_pj", "_pi", res, r)))
-
+    Each point's candidate universe is therefore exactly the segments that
+    cover a cell of disk(cell(p), max_ring), less segments that cannot
+    reach its top k."""
+    s = sqlfns.dlit(cells.cell_size_deg(res))
+    M = sqlfns.M
     # per-segment frame staged on the tiny build side (same JIT-limit
     # rationale and bit-identical arithmetic as pip_join)
-    M = sqlfns.M
     sc = (seg_cells
           .withColumn("cm", F.expr(f"({sqlfns.coslat_sql('alat')} * {M})"))
           .withColumn("mx", F.expr("(blng - alng) * cm"))
           .withColumn("my", F.expr(f"(blat - alat) * {M}"))
           .withColumn("s2", F.expr("mx * mx + my * my + 1e-300")))
-    px = "((lng - alng) * cm)"
-    py = f"((lat - alat) * {M})"
-    t_c = f"LEAST(GREATEST(({px} * mx + {py} * my) / s2, 0.0e0), 1.0e0)"
-    # (e)*(e), not POWER(e,2) — see seg_dist_sql (cross-engine fuzz)
-    kx = f"({px} - ({t_c}) * mx)"
-    ky = f"({py} - ({t_c}) * my)"
-    dist_expr = F.expr(f"SQRT({kx} * {kx} + {ky} * {ky})")
-    wd = Window.partitionBy("url", "entity").orderBy("segment_id")
-    wk = Window.partitionBy("url", "entity").orderBy("dist_m", "way_id", "segment_id")
-    cols = ["url", "entity", "lat", "lng", "cell9",
-            "way_id", "segment_id", "dist_m", "knn_rank"]
 
-    def topk(src: DataFrame, r_hi: int) -> DataFrame:
-        # broadcast the segment-cover side: the fixed-size city network —
-        # the points side is the data-scaled one and must stream
-        cand = (src.withColumn("cell", probe(r_hi))
-                .join(F.broadcast(sc), "cell")
-                .select("url", "entity", "lat", "lng", "cell9",
-                        "way_id", "segment_id", dist_expr.alias("dist_m")))
-        if k == 1:
-            # k=1 fast path: lexicographic struct-min == the (dist_m,
-            # way_id, segment_id) tie-break of the window path, but runs as
-            # a hash aggregation with MAP-SIDE COMBINE — the shuffle carries
-            # one row per (point, map partition) instead of every candidate,
-            # and the per-segment dedup window is unnecessary (duplicate
-            # candidate rows cannot change a min).  lat/lng/cell9 ride in
-            # the struct after the ordering keys (constant per group).
-            return (cand.groupBy("url", "entity")
-                    .agg(F.min(F.struct("dist_m", "way_id", "segment_id",
-                                        "lat", "lng", "cell9")).alias("b"))
-                    .select("url", "entity",
-                            F.col("b.lat").alias("lat"),
-                            F.col("b.lng").alias("lng"),
-                            F.col("b.cell9").alias("cell9"),
-                            F.col("b.way_id").alias("way_id"),
-                            F.col("b.segment_id").alias("segment_id"),
-                            F.col("b.dist_m").alias("dist_m"),
-                            F.lit(1).alias("knn_rank")))
-        # ONE shuffle on (url, entity) serves both the per-segment dedup (a
-        # segment covering several probed cells appears once per cell; the
-        # duplicate rows are identical) and the rank window — the second
-        # window re-sorts within partitions but does not re-shuffle.
-        dedup = (cand.withColumn("_prev", F.lag("segment_id").over(wd))
-                 .filter(F.col("_prev").isNull()
-                         | (F.col("_prev") != F.col("segment_id")))
-                 .drop("_prev"))
-        return (dedup.withColumn("knn_rank", F.row_number().over(wk))
-                .filter(F.col("knn_rank") <= k))
+    def dist(lat: str, lng: str) -> F.Column:
+        px = f"(({lng} - alng) * cm)"
+        py = f"(({lat} - alat) * {M})"
+        t_c = f"LEAST(GREATEST(({px} * mx + {py} * my) / s2, 0.0e0), 1.0e0)"
+        # (e)*(e), not POWER(e,2) — see seg_dist_sql (cross-engine fuzz)
+        kx = f"({px} - ({t_c}) * mx)"
+        ky = f"({py} - ({t_c}) * my)"
+        return F.expr(f"SQRT({kx} * {kx} + {ky} * {ky})")
 
-    bound = first_radius * edge_min_m
+    # the point's lattice coords staged once as _pj/_pi: the cell key, and
+    # the disk (sqlfns.disk_sql) is pure integer arithmetic over them
+    pj, pi = sqlfns.lattice_sql("lat", "lng", res)
+    pts = points.select("url", "entity", "lat", "lng", "cell9",
+                        F.expr(pj).alias("_pj"), F.expr(pi).alias("_pi"))
+    frame = ["way_id", "segment_id", "alat", "alng", "cm", "mx", "my", "s2"]
+    hi = F.col("_dc") + F.col("_h")
+    wc = (Window.partitionBy("_pj", "_pi").orderBy(hi)
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    table = (pts.select("_pj", "_pi").distinct()
+             .select("_pj", "_pi",
+                     F.expr(f"(_pj + 0.5e0) * {s} - 90.0e0").alias("_clat"),
+                     F.expr(f"(_pi + 0.5e0) * {s} - 180.0e0").alias("_clng"),
+                     F.explode(F.expr(sqlfns.disk_sql("_pj", "_pi", res, max_ring)))
+                     .alias("cell"))
+             # broadcast the segment-cover side: the fixed-size city network
+             .join(F.broadcast(sc), "cell")
+             .dropDuplicates(["_pj", "_pi", "segment_id"])
+             .select("_pj", "_pi", *frame, dist("_clat", "_clng").alias("_dc"),
+                     F.expr(f"0.5e0 * SQRT(({s} * cm) * ({s} * cm) "
+                            f"+ ({s} * {M}) * ({s} * {M}))").alias("_h"))
+             .withColumn("_kth", F.nth_value(hi, k).over(wc))
+             .filter(F.col("_kth").isNull()
+                     | (F.col("_dc") - F.col("_h") <= F.col("_kth") + 1e-6))
+             .select("_pj", "_pi", *frame))
+    cand = (pts.join(table, ["_pj", "_pi"])
+            .select("url", "entity", "lat", "lng", "cell9", "way_id",
+                    "segment_id", dist("lat", "lng").alias("dist_m")))
     if k == 1:
-        # k=1 phase 1 keeps EVERY point: the probe rows LEFT-join the
-        # broadcast segment cover (unmatched rows survive with NULL
-        # segment), the struct-min rides a WHEN so unmatched rows
-        # contribute nothing, and lat/lng/cell9 come back as FIRST()
-        # (constant per point).  Settledness then degenerates to a row
-        # FILTER on this checkpointed aggregate — the r3 shape still
-        # anti-joined pts against the settled set, i.e. two corpus-wide
-        # shuffles on (url, entity) purely to find the zero-candidate
-        # points phase 1 had dropped (review r4: 4.3 -> ~2 s at sf0.1).
-        cand = (pts.withColumn("cell", probe(first_radius))
-                .join(F.broadcast(sc), "cell", "left")
-                .select("url", "entity", "lat", "lng", "cell9",
-                        "way_id", "segment_id", dist_expr.alias("dist_m")))
-        phase1 = (cand.groupBy("url", "entity")
-                  .agg(F.min(F.when(F.col("segment_id").isNotNull(),
-                                    F.struct("dist_m", "way_id", "segment_id")))
-                       .alias("b"),
-                       F.first("lat").alias("lat"),
-                       F.first("lng").alias("lng"),
-                       F.first("cell9").alias("cell9"))
-                  # AQE coalesces this one-row-per-point aggregate to 1-2
-                  # partitions, and the stragglers' disk(max_ring) probe
-                  # EXPANDS every row (2·max_ring + 1)² times: spread it at
-                  # defaultParallelism (as dedup's band join does); without
-                  # it kNN on 5000 sf0.1 points ran ~40% slower
-                  .repartition(pts.sparkSession.sparkContext.defaultParallelism,
-                               "url", "entity")
-                  .localCheckpoint(eager=False))
-        done = (phase1.filter(F.col("b").isNotNull()
-                              & (F.col("b.dist_m") <= bound))
-                .select("url", "entity", "lat", "lng", "cell9",
-                        F.col("b.way_id").alias("way_id"),
-                        F.col("b.segment_id").alias("segment_id"),
-                        F.col("b.dist_m").alias("dist_m"),
+        # lexicographic struct-min == the (dist_m, way_id, segment_id)
+        # tie-break of the window, but runs as a hash aggregation with
+        # MAP-SIDE COMBINE: the shuffle carries one row per (point, map
+        # partition) instead of every candidate.  lat/lng/cell9 ride in the
+        # struct after the ordering keys (constant per point).
+        return (cand.groupBy("url", "entity")
+                .agg(F.min(F.struct("dist_m", "way_id", "segment_id",
+                                    "lat", "lng", "cell9")).alias("b"))
+                .select("url", "entity", "b.lat", "b.lng", "b.cell9",
+                        "b.way_id", "b.segment_id", "b.dist_m",
                         F.lit(1).alias("knn_rank")))
-        stragglers = (phase1.filter(F.col("b").isNull()
-                                    | (F.col("b.dist_m") > bound))
-                      .select("url", "entity", "lat", "lng", "cell9", *ji))
-    else:
-        phase1 = topk(pts, first_radius).localCheckpoint(eager=False)
-        settled = (phase1.groupBy("url", "entity")
-                   .agg(F.max("dist_m").alias("kth"), F.count("*").alias("n"))
-                   .filter((F.col("n") == k) & (F.col("kth") <= bound))
-                   .select("url", "entity"))
-        done = phase1.join(settled, ["url", "entity"], "left_semi")
-        stragglers = pts.join(settled, ["url", "entity"], "left_anti")
-    phase2 = topk(stragglers, max(max_ring, first_radius))
-    return done.select(*cols).unionByName(phase2.select(*cols))
+    wk = Window.partitionBy("url", "entity").orderBy("dist_m", "way_id", "segment_id")
+    return (cand.withColumn("knn_rank", F.row_number().over(wk))
+            .filter(F.col("knn_rank") <= k))
 
 
 # --- G6: raster coverage tiles -------------------------------------------------
@@ -974,31 +923,30 @@ def moran_i(cell_counts: DataFrame, k: int = 1,
 
 
 def map_match(pings: DataFrame, seg_cells: DataFrame, max_ring: int = 6,
-              first_radius: int = 2,
               res: int = cells.DEFAULT_RES) -> DataFrame:
     """Trajectory -> street-network map matching, the north-rule
     composition of G5 and the mobility rollups: snap every ping to its
     nearest sidewalk segment (knn_join k=1 — EXACT nearest within
-    disk(max_ring), same settledness proof), then collapse consecutive
-    same-segment pings of a trajectory into TRAVERSALS — the
-    (which segment, when, how long) table a sidewalk-usage analysis
-    consumes.  Nearest-segment snapping is the standard geometric
-    map-matching baseline (the HMM refinement of Newson & Krumm 2009
-    would slot in as a per-trajectory transition re-score over exactly
-    this candidate table).
+    disk(max_ring)), then collapse consecutive same-segment pings of a
+    trajectory into TRAVERSALS — the (which segment, when, how long)
+    table a sidewalk-usage analysis consumes.  Nearest-segment snapping is
+    the standard geometric map-matching baseline (the HMM refinement of
+    Newson & Krumm 2009 would slot in as a per-trajectory transition
+    re-score over exactly this candidate table).
 
     Input: (traj_id BIGINT, event_id BIGINT unique within trajectory,
     ts TIMESTAMP, lat, lng, cell9).  Pings whose disk(max_ring) holds no
-    segment are dropped (out-of-coverage — callers wanting them keep
-    knn_join's unmatched rows directly).
+    segment are dropped (out-of-coverage: knn_join returns no row for
+    them).
 
-    Plan: knn_join's two-phase cell probe does the heavy lifting (its
-    per-point top-1 is a local checkpoint inside), one point-keyed equi-join
-    brings ts back (knn carries only the (url, entity) point key), then
-    a per-trajectory run-length collapse: LAG island detection + one
-    map-side-combinable agg, the gap-and-island shape shared with
-    vectorize_tiles.  Both windows partition on traj_id — bounded by
-    the longest single trajectory, the same per-key bound as
+    Plan: knn_join does the heavy lifting (each ping's cell equi-joins a
+    per-cell candidate table pruned so that no dropped segment can be
+    nearest to any point of the cell, then a struct-min per ping), one
+    point-keyed equi-join brings ts back (knn carries only the (url,
+    entity) point key), then a per-trajectory run-length collapse: LAG
+    island detection + one map-side-combinable agg, the gap-and-island
+    shape shared with vectorize_tiles.  Both windows partition on traj_id
+    — bounded by the longest single trajectory, the same per-key bound as
     trajectory_stats (a trajectory is a device's ping stream; millions
     of rows per device would be a data bug, not a skew case).
 
@@ -1009,9 +957,7 @@ def map_match(pings: DataFrame, seg_cells: DataFrame, max_ring: int = 6,
     pts = pings.selectExpr("CAST(traj_id AS STRING) AS url",
                            "CAST(event_id AS STRING) AS entity",
                            "lat", "lng", "cell9")
-    snapped = (knn_join(pts, seg_cells, k=1, max_ring=max_ring,
-                        first_radius=first_radius, res=res)
-               .filter(F.col("way_id").isNotNull())
+    snapped = (knn_join(pts, seg_cells, k=1, max_ring=max_ring, res=res)
                .selectExpr("CAST(url AS BIGINT) AS traj_id",
                            "CAST(entity AS BIGINT) AS event_id",
                            "way_id", "segment_id"))
