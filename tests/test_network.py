@@ -2,6 +2,7 @@
 import numpy as np
 import pytest
 
+from tosidewalk_spark.kernel import geom
 from tosidewalk_spark.operators import network as N
 from tosidewalk_spark.sources import synth
 
@@ -50,7 +51,12 @@ def test_connected_components_long_chain(spark):
     # returned partial components — VERDICT.md r2 'What's wrong' #1)
     from pyspark.sql import functions as F
     edges = spark.range(199).selectExpr("id AS src", "id + 1 AS dst")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet().toArray())
     comp = N.connected_components(edges)
+    # the edge list, the quotient graph and every superseded round's labels
+    # are released on return; only the two checkpoints comp reads stay
+    assert len(set(persisted().keySet().toArray()) - before) == 2
     agg = comp.agg(F.countDistinct("component").alias("n"),
                    F.count("*").alias("c")).collect()[0]
     assert agg.n == 1 and agg.c == 200
@@ -106,6 +112,25 @@ def test_join_ways_long_fragment_chain(spark):
         j = r.way_id // 39
         assert r.way_id == j * 39
         assert list(r.node_ids) == [j * 40 + i for i in range(40)]
+
+
+def test_join_segmented_ways_shuffled_reversed_fragments(spark):
+    """End to end: chains cut into fragments, shuffled and reversed, merge
+    back to one way per chain in the brute-force walk's orientation."""
+    rng = np.random.default_rng(11)
+    rows, want = [], {}
+    for c in range(12):
+        path = list(range(c * 100, c * 100 + 10))
+        frags = [path[k:k + 4] for k in range(0, 9, 3)]
+        frags = [f[::-1] if rng.random() < 0.5 else f for f in frags]
+        ids = [int(w) for w in rng.permutation(3) + c * 10]
+        ws = dict(zip(ids, frags))
+        want[min(ids)] = _walk(ws)
+        rows += [(w, f, "residential", {"c": str(c)}) for w, f in ws.items()]
+    ways = spark.createDataFrame(
+        rows, "way_id long, node_ids array<long>, highway string, tags map<string,string>")
+    got = {r.way_id: list(r.node_ids) for r in N.join_segmented_ways(ways).collect()}
+    assert got == want
 
 
 def test_split_street(spark):
@@ -204,3 +229,160 @@ def test_parallel_ignores_perpendicular(spark):
     nodes, _ = synth.micro_fixture(spark, "t_intersection")
     gw = N.geom_ways(nodes, ways)
     assert N.find_parallel_pairs(gw).count() == 0
+
+
+_GW_SCHEMA = ("way_id long, node_ids array<long>, lats array<double>, "
+              "lngs array<double>, highway string")
+
+
+def test_simplify_gw_sql_matches_kernel(spark):
+    """The SQL Douglas-Peucker keeps exactly kernel.douglas_peucker_mask's
+    vertices, bit for bit: seeded random polylines of 2-39 vertices at
+    several wiggle scales around the 0.5 m tolerance, plus n = 2, a
+    collinear way, duplicate vertices and an all-duplicate way (seg2 = 0)."""
+    rng = np.random.default_rng(17)
+    ways = []
+    for w in range(300):
+        n = int(rng.integers(2, 40))
+        lat = 47.6 + np.cumsum(rng.uniform(0, 2e-5, n))
+        lng = -122.33 + np.cumsum(rng.uniform(-1e-5, 1e-5, n))
+        lat = lat + rng.normal(0, [1e-7, 3e-6, 1e-5][w % 3], n)
+        if w % 5 == 0 and n > 3:  # duplicate vertices
+            k = int(rng.integers(1, n - 1))
+            lat[k], lng[k] = lat[k - 1], lng[k - 1]
+        ways.append((lat.tolist(), lng.tolist()))
+    ways.append(([47.6, 47.601], [-122.33, -122.33]))
+    ways.append(([47.6 + 1e-4 * k for k in range(7)], [-122.33 + 2e-4 * k for k in range(7)]))
+    ways.append(([47.6, 47.6001, 47.6001, 47.6001, 47.6], [-122.33, -122.33, -122.33, -122.3301, -122.33]))
+    ways.append(([47.6] * 4, [-122.33] * 4))
+    gw = spark.createDataFrame(
+        [(w, list(range(w * 100, w * 100 + len(la))), la, lg, "residential")
+         for w, (la, lg) in enumerate(ways)], _GW_SCHEMA)
+    got = {r.way_id: (list(r.node_ids), r.lats, r.lngs) for r in N.simplify_gw(gw).collect()}
+    want = {}
+    for w, (la, lg) in enumerate(ways):
+        keep = geom.douglas_peucker_mask(la, lg, geom.DP_TOLERANCE_M)
+        want[w] = ([w * 100 + k for k in range(len(la)) if keep[k]],
+                   np.asarray(la)[keep].tolist(), np.asarray(lg)[keep].tolist())
+    assert got == want
+    # the cases exercise both outcomes: some interior vertices go, some stay
+    assert 0 < sum(len(v[0]) for v in want.values()) - 2 * len(ways) < sum(
+        len(la) for la, _ in ways) - 2 * len(ways)
+
+
+def _lane(lat0, lng0, n, dlat, dlng, wiggle, rng):
+    lat = lat0 + dlat * np.arange(n) + rng.normal(0, wiggle, n)
+    lng = lng0 + dlng * np.arange(n) + rng.normal(0, wiggle, n)
+    return lat.tolist(), lng.tolist()
+
+
+def test_merge_parallel_pairs_matches_kernel(spark):
+    """The SQL centerline is bit-equal to kernel.parallel_centerline:
+    seeded lane pairs with unequal vertex counts, reversed partners and
+    duplicate vertices, merged through a given pair list."""
+    rng = np.random.default_rng(29)
+    lanes, pairs = {}, []
+    for p in range(40):
+        lat0, lng0 = 47.6 + 0.01 * p, -122.33
+        na, nb = int(rng.integers(2, 12)), int(rng.integers(2, 12))
+        a = _lane(lat0, lng0, na, 1e-4, 1e-5, 2e-6, rng)
+        b = _lane(lat0, lng0 + 2e-4, nb, 1e-4 * (na - 1) / max(nb - 1, 1), 1e-5, 2e-6, rng)
+        if p % 3 == 1:  # reversed partner
+            b = (b[0][::-1], b[1][::-1])
+        if p % 4 == 2 and nb > 2:  # duplicate vertex
+            b[0][1], b[1][1] = b[0][0], b[1][0]
+        lanes[2 * p + 10], lanes[2 * p + 11] = a, b
+        pairs.append((2 * p + 10, 2 * p + 11, 1.0))
+    lanes[500] = ([47.9, 47.901], [-122.2, -122.2])  # unpaired: kept as is
+    gw = spark.createDataFrame(
+        [(w, list(range(w * 100, w * 100 + len(la))), la, lg, "primary")
+         for w, (la, lg) in lanes.items()], _GW_SCHEMA)
+    pdf = spark.createDataFrame(pairs, "way_a long, way_b long, sep_m double")
+    got = {r.way_id: (list(r.node_ids), r.lats, r.lngs)
+           for r in N.merge_parallel_pairs(gw, pdf).collect()}
+    want = {500: (list(range(50000, 50002)), *lanes[500])}
+    for wa, wb, _ in pairs:
+        lat, lng = geom.parallel_centerline(*lanes[wa], *lanes[wb])
+        want[wa] = ([N.PARALLEL_NODE_BASE + wa * 10_000 + i for i in range(lat.size)],
+                    lat.tolist(), lng.tolist())
+    assert got == want
+
+
+def test_merge_parallel_pairs_node_id_capacity_limit(spark):
+    """Centerline node ids give each merged way 10,000 slots: a 10,000-vertex
+    centerline fits, a 10,001-vertex one fails loudly."""
+    def merged(n):
+        gw = spark.createDataFrame(
+            [(1, list(range(n)), [47.6 + 1e-7 * k for k in range(n)], [-122.33] * n, "primary"),
+             (2, [n, n + 1], [47.6, 47.6 + 1e-7 * (n - 1)], [-122.3298] * 2, "primary")],
+            _GW_SCHEMA)
+        pairs = spark.createDataFrame([(1, 2, 15.0)], "way_a long, way_b long, sep_m double")
+        return N.merge_parallel_pairs(gw, pairs)
+
+    rows = merged(10_000).collect()
+    assert len(rows) == 1 and len(rows[0].node_ids) == 10_000
+    assert rows[0].node_ids[-1] == N.PARALLEL_NODE_BASE + 1 * 10_000 + 9_999
+    with pytest.raises(Exception, match="10001 centerline vertices overflow the node-id scheme"):
+        merged(10_001).collect()
+
+
+def _walk(ws):
+    """Brute-force chain merge of one component's {way_id: node_ids}: the
+    walk join_segmented_ways must reproduce; None when it cannot cover
+    every way."""
+    at = {}
+    for wid, ids in ws.items():
+        at.setdefault(ids[0], []).append(wid)
+        at.setdefault(ids[-1], []).append(wid)
+    terminals = sorted(n for n, w in at.items() if len(w) == 1)
+    cur = terminals[0] if terminals else min(at)
+    merged, used = [], set()
+    while True:
+        nxt = [w for w in at[cur] if w not in used]
+        if not nxt:
+            break
+        wid = min(nxt)
+        used.add(wid)
+        ids = ws[wid][::-1] if ws[wid][-1] == cur else ws[wid]
+        merged.extend(ids if not merged else ids[1:])
+        cur = ids[-1]
+    return merged if len(used) == len(ws) else None
+
+
+def test_merge_chains_matches_bruteforce(spark):
+    """The SQL chain walk against the python walk: seeded chains cut into
+    shuffled, randomly reversed fragments, a cycle, a closed way, and a Y
+    whose walk cannot cover its ways (the component keeps its ways)."""
+    rng = np.random.default_rng(5)
+    comps = []
+    base = 0
+    for c in range(30):
+        path = list(range(base, base + int(rng.integers(3, 25))))
+        base += 1000
+        cuts = sorted(rng.choice(np.arange(1, len(path) - 1),
+                                 size=int(rng.integers(1, len(path) - 1)), replace=False))
+        frags = [path[a:b + 1] for a, b in zip([0, *cuts], [*cuts, len(path) - 1])]
+        if c % 4 == 3:  # a cycle: the last fragment returns to the start
+            frags.append([path[-1], base - 1, path[0]])
+        frags = [f[::-1] if rng.random() < 0.5 else f for f in frags]
+        ids = rng.permutation(len(frags)) + c * 100
+        comps.append({int(w): f for w, f in zip(ids, frags)})
+    comps.append({5000: [1, 2], 5001: [2, 3], 5002: [2, 4]})           # Y: falls back
+    comps.append({5100: [9, 8, 7, 9], 5101: [9, 6]})                    # closed way
+    comps.append({5200: [20, 21]})                                      # single way
+    rows = [(wid, ids, "residential", {"name": str(wid)}, min(ws))
+            for ws in comps for wid, ids in ws.items()]
+    tagged = spark.createDataFrame(
+        rows, "way_id long, node_ids array<long>, highway string, "
+              "tags map<string,string>, component long")
+    got = {r.way_id: (list(r.node_ids), r.tags["name"]) for r in N.merge_chains(tagged).collect()}
+    want = {}
+    for ws in comps:
+        m = _walk(ws) if len(ws) > 1 else list(next(iter(ws.values())))
+        if m is None:
+            want.update({w: (ids, str(w)) for w, ids in ws.items()})
+        else:
+            want[min(ws)] = (m, str(min(ws)))
+    assert any(_walk(ws) is None for ws in comps)
+    assert got == want
+

@@ -62,6 +62,30 @@ def test_pip_join_path_has_no_python(spark):
         assert marker not in plan, f"python stage {marker} in PIP path"
 
 
+@pytest.mark.parametrize("stage", ["join_segmented_ways", "merge_parallel_pairs",
+                                   "simplify_gw", "make_crosswalks"])
+def test_build_network_geometry_stages_have_no_python(spark, stage):
+    """The four build_network stages that ran pandas UDFs are SQL now: their
+    executed plans on the micro fixtures start no python worker."""
+    def gw(name):
+        nodes, ways = synth.micro_fixture(spark, name)
+        return N.geom_ways(nodes, ways)
+
+    if stage == "join_segmented_ways":
+        df = N.join_segmented_ways(synth.micro_fixture(spark, "segmented_street")[1])
+    elif stage == "merge_parallel_pairs":
+        lanes = gw("parallel_lanes")
+        df = N.merge_parallel_pairs(lanes, N.find_parallel_pairs(lanes))
+    elif stage == "simplify_gw":
+        df = N.simplify_gw(gw("zigzag_redundant"))
+    else:
+        df = SW.make_crosswalks(gw("four_way"), None)
+    plan = _executed_plan(df)
+    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                   "FlatMapGroupsInPandas"):
+        assert marker not in plan, (stage, marker)
+
+
 def test_tiles_two_phase_aggregation(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     pts = synth.geo_entities_from_documents(docs)
@@ -700,3 +724,4 @@ def test_search_topk_salted_two_phase(spark):
         assert len(win_lines) == 2, plan[:3000]
         assert any("_salt" in w for w in win_lines), win_lines
         assert all("term" not in w for w in win_lines), win_lines
+

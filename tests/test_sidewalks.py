@@ -169,3 +169,79 @@ def test_union_and_geojson(spark):
     f = json.loads(feats[0].feature)
     assert f["type"] == "Feature" and f["geometry"]["type"] == "LineString"
     assert len(f["geometry"]["coordinates"][0]) == 2
+
+
+_STAR_SCHEMA = ("way_id long, node_ids array<long>, lats array<double>, "
+                "lngs array<double>, highway string")
+
+
+def _stars(spark, stars):
+    """gw rows for intersections given as (node_id, clat, clng, arms): one
+    two-vertex way [centre, arm] per arm, arm nodes numbered per star."""
+    rows = []
+    for nid, clat, clng, arms in stars:
+        for k, (alat, alng) in enumerate(arms):
+            rows.append((nid * 1000 + k, [nid, nid * 1000 + k],
+                         [float(clat), float(alat)], [float(clng), float(alng)],
+                         "residential"))
+    return spark.createDataFrame(rows, _STAR_SCHEMA)
+
+
+def _kernel_crosswalks(stars, dist_m=geom.CROSSWALK_OFFSET_M):
+    out = {}
+    for nid, clat, clng, arms in stars:
+        klat, klng, _ = geom.crosswalk_corners(
+            clat, clng, [a[0] for a in arms], [a[1] for a in arms], dist_m)
+        m = len(klat)
+        for k in range(m):
+            k2 = (k + 1) % m
+            out[SW.CW_WAY_BASE + nid * 100 + k] = (
+                nid, [SW.CW_NODE_BASE + nid * 100 + k, SW.CW_NODE_BASE + nid * 100 + k2],
+                [float(klat[k]), float(klat[k2])], [float(klng[k]), float(klng[k2])])
+    return out
+
+
+def test_make_crosswalks_sql_matches_kernel(spark):
+    """The SQL crosswalks are bit-equal to kernel.crosswalk_corners: seeded
+    random intersections of 3-8 arms at random bearings and lengths, plus
+    opposite arms (the degenerate-bisector branch), a zero-length arm and
+    arms on one bearing (the sort's tie-break)."""
+    rng = np.random.default_rng(8)
+    stars = []
+    for nid in range(1, 41):
+        clat, clng = 47.6 + rng.uniform(-0.05, 0.05), -122.33 + rng.uniform(-0.05, 0.05)
+        m = int(rng.integers(3, 9))
+        ang = rng.uniform(-np.pi, np.pi, m)
+        r = rng.uniform(1e-5, 1e-3, m)
+        stars.append((nid, clat, clng, [(clat + r[k] * np.sin(ang[k]),
+                                         clng + r[k] * np.cos(ang[k])) for k in range(m)]))
+    c = (47.61, -122.31)
+    stars.append((50, *c, [(c[0] + 4e-4, c[1]), (c[0] - 4e-4, c[1]), (c[0], c[1] + 3e-4)]))
+    stars.append((51, *c, [(c[0], c[1] - 2e-4), (c[0], c[1] + 5e-4),
+                           (c[0] + 1e-4, c[1]), (c[0] - 3e-4, c[1])]))
+    stars.append((52, *c, [c, (c[0] + 2e-4, c[1] + 1e-4), (c[0] - 1e-4, c[1] + 3e-4)]))
+    # three arms on bearing 0 (atan2(0, x >= 0) = 0): two due east, the
+    # longer one first, then a zero-length arm, whose unit vector (0, 0)
+    # makes the corners depend on the tie order
+    stars.append((53, *c, [(c[0], c[1] + 5e-4), (c[0], c[1] + 2e-4), c,
+                           (c[0] + 3e-4, c[1]), (c[0] - 2e-4, c[1] - 1e-4)]))
+    got = {r.way_id: (r.intersection_node_id, list(r.node_ids), r.lats, r.lngs)
+           for r in SW.make_crosswalks(_stars(spark, stars), None).collect()}
+    want = _kernel_crosswalks(stars)
+    assert len(want) == sum(len(s[3]) for s in stars)
+    assert got == want
+
+
+def test_make_crosswalks_arm_capacity_limit(spark):
+    """Crosswalk ids give each intersection 100 slots: 100 arms fit, 101
+    fail loudly instead of colliding with the next node's ids."""
+    def star(m):
+        return [(7, 47.6, -122.33, [(47.6 + 1e-4 * np.sin(2 * np.pi * k / m),
+                                     -122.33 + 1e-4 * np.cos(2 * np.pi * k / m))
+                                    for k in range(m)])]
+
+    rows = SW.make_crosswalks(_stars(spark, star(100)), None).collect()
+    assert len(rows) == 100
+    assert max(r.way_id for r in rows) == SW.CW_WAY_BASE + 7 * 100 + 99
+    with pytest.raises(Exception, match="101 arms overflow the crosswalk id scheme"):
+        SW.make_crosswalks(_stars(spark, star(101)), None).collect()

@@ -133,6 +133,13 @@ def haversine_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> str:
     )
 
 
+def let_sql(value: str, name: str, body: str) -> str:
+    """``let name = value in body``: a one-element TRANSFORM binds the
+    lambda variable ``name``, so ``value`` is evaluated once however often
+    ``body`` reads it.  Spark SQL."""
+    return f"TRANSFORM(ARRAY({value}), {name} -> {body})[0]"
+
+
 RAD = "0.017453292519943295e0"
 
 
@@ -144,6 +151,17 @@ def coslat_sql(lat: str) -> str:
     t2 = f"({t} * {t})"
     return (f"(1.0e0 + {t2} * (-0.5e0 + {t2} * (0.041666666666666664e0 "
             f"+ {t2} * (-0.001388888888888889e0 + {t2} * 2.48015873015873e-05))))")
+
+
+def equirect_xy_sql(lat: str, lng: str, lat0: str, lng0: str,
+                    cs: str | None = None) -> tuple[str, str]:
+    """(x, y) meters of (lat, lng) in the frame anchored at (lat0, lng0) —
+    twin of kernel.geom.equirect_xy in its op order, x = ((lng - lng0) *
+    cos(lat0)) * M and y = (lat - lat0) * M, which the numpy-twin operators
+    need to stay bit-identical.  ``cs`` names an already computed cos(lat0)
+    (a staged column); by default it is coslat_sql(lat0)."""
+    c = coslat_sql(lat0) if cs is None else cs
+    return f"((({lng}) - ({lng0})) * {c} * {M})", f"((({lat}) - ({lat0})) * {M})"
 
 
 def equirect_dist_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> str:

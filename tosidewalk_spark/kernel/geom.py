@@ -7,7 +7,8 @@ methods: ``latlng.py § LatLng.distance_to/angle_to/vector`` (R9),
 ``utilities.py § latlng_offset`` (R10), ``ToSidewalk.py §
 make_sidewalk_nodes`` (R12), ``ToSidewalk.py § make_crosswalk_node`` (R15),
 ``network.py § Network.simplify`` Douglas-Peucker (R17).  Here each is a
-vectorized numpy function; the Spark pandas UDFs call exactly this code, so
+vectorized numpy function.  The Spark operators run SQL twins of this
+code in the same op order, and the tests pin them bit-equal to it, so
 Spark-vs-kernel equality tests distribution bugs independently of geometry
 (SURVEY.md §5.2).
 
@@ -150,7 +151,7 @@ def crosswalk_corners(center_lat, center_lng, arm_lats, arm_lngs,
     corner node between each pair of angularly-adjacent arms
     (ToSidewalk.py § make_crosswalk_node semantics).
 
-    Arms are sorted CCW by bearing (R14).  Corner k sits at
+    Arms are sorted CCW by bearing, ties by (x, y) (R14).  Corner k sits at
     center + dist_m * normalize(u_k + u_{k+1}); if the two arms are nearly
     opposite (bisector degenerate), the corner uses the perpendicular of
     arm k instead.  Returns (corner_lats, corner_lngs, arm_order) where
@@ -160,7 +161,9 @@ def crosswalk_corners(center_lat, center_lng, arm_lats, arm_lngs,
     alngs = np.asarray(arm_lngs, dtype=np.float64)
     x, y = equirect_xy(alats, alngs, center_lat, center_lng)
     ang = np.arctan2(y, x)
-    order = np.argsort(ang, kind="stable")      # R14 angular sort, CCW
+    # R14 angular sort, CCW; equal bearings fall to x, then y, so the
+    # order does not depend on the order the arms come in
+    order = np.lexsort((y, x, ang))
     x, y = x[order], y[order]
     r = np.sqrt(x * x + y * y)
     r = np.where(r == 0.0, 1.0, r)
@@ -214,6 +217,38 @@ def douglas_peucker_mask(lats, lngs, tol_m=DP_TOLERANCE_M):
             stack.append((a, idx))
             stack.append((idx, b))
     return keep
+
+
+# --- R7: parallel-pair centerline -----------------------------------------
+
+def parallel_centerline(lats_a, lngs_a, lats_b, lngs_b):
+    """Pointwise-midpoint centerline of two parallel polylines (R7): b is
+    reversed when its chord bearing opposes a's, both are resampled by arc
+    length at k = max(n_a, n_b) evenly spaced fractions, and the samples
+    are averaged.  Returns (lats, lngs).  Arc length is
+    sqrt(dx*dx + dy*dy), not np.hypot, for the reason buffer_segment
+    gives: the SQL twin in operators/network.py matches it bit-for-bit."""
+    la, ga = np.asarray(lats_a, dtype=np.float64), np.asarray(lngs_a, dtype=np.float64)
+    lb, gb = np.asarray(lats_b, dtype=np.float64), np.asarray(lngs_b, dtype=np.float64)
+
+    def bearing(ls, gs):
+        x, y = equirect_xy(ls, gs, ls[0], gs[0])
+        return np.arctan2(y[-1] - y[0], x[-1] - x[0])
+
+    if np.cos(bearing(la, ga) - bearing(lb, gb)) < 0:
+        lb, gb = lb[::-1], gb[::-1]
+    t = np.linspace(0.0, 1.0, max(la.size, lb.size))
+
+    def resample(ls, gs):
+        x, y = equirect_xy(ls, gs, ls[0], gs[0])
+        dx, dy = np.diff(x), np.diff(y)
+        d = np.concatenate([[0.0], np.cumsum(np.sqrt(dx * dx + dy * dy))])
+        tt = d / d[-1] if d[-1] > 0 else d
+        return np.interp(t, tt, ls), np.interp(t, tt, gs)
+
+    ral, rag = resample(la, ga)
+    rbl, rbg = resample(lb, gb)
+    return (ral + rbl) / 2.0, (rag + rbg) / 2.0
 
 
 # --- G4: point-in-polygon + segment buffers --------------------------------

@@ -21,17 +21,18 @@ fixpoint loops (R4/R8 connected components) run genuinely log-diameter
 rounds (min-label propagation alternated with pointer jumping) with
 localCheckpoint per round to cut lineage, and raise on non-convergence;
 candidate generation for spatial self-joins (R6, R8) is cell-bucketed so
-the join is an equi-join, never a cross.
+the join is an equi-join, never a cross.  Per-way geometry (R4 chain
+merge, R7 centerline, R17 Douglas-Peucker) is SQL higher-order functions
+over the gathered arrays, evaluated in the numpy kernel twin's op order
+so the two stay bit-identical; no stage starts a python worker.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window, functions as F
-from pyspark.sql import types as T
 
 from ..functions import sqlfns
+from ..functions.sqlfns import let_sql
 from ..kernel import cells, geom
 
 STREET_WHITELIST = [
@@ -94,6 +95,16 @@ def intersections(ways: DataFrame) -> DataFrame:
     )
 
 
+def release_checkpoints(*dfs: DataFrame) -> None:
+    """Unpersist local checkpoints (DataFrames returned by
+    ``localCheckpoint``) that nothing lazy reads any more.  Left to the
+    JVM, a finished query's checkpoints stay persisted until a GC makes
+    them unreachable and Spark's cleaner thread catches up, which can be
+    long after the query returned."""
+    for df in dfs:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 # --- connected-components fixpoint (shared by R4 and R8) ----------------------
 
 def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataFrame:
@@ -117,6 +128,9 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
     parent row.  Driver-side fixpoint loop (SURVEY.md §3.2); each round is
     two shuffles and ONE action: its eager localCheckpoint cuts lineage
     and reports the round's changed-label count through an Observation.
+    A checkpoint nothing reads any more (the edge list, the quotient
+    graph, a superseded round's labels) is released at once, so only the
+    two the result reads stay persisted.
 
     One-hop MIN-CONTRACTION before the fixpoint (r4): map every node to
     L(v) = min(v, min neighbor) and run the loop on the QUOTIENT graph
@@ -150,11 +164,13 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
            .select(F.col("lsrc").alias("src"), F.col("ldst").alias("dst"))
            .filter(F.col("src") != F.col("dst")).distinct()
            .localCheckpoint(eager=True))  # symmetric: built from symmetric sym
+    release_checkpoints(e0)  # read only by contract and sym, both materialized
     labels = (
         sym.select(F.col("src").alias("id")).distinct()
         .withColumn("component", F.col("id"))
         .localCheckpoint(eager=True)
     )
+    held = labels  # the checkpoint behind labels, released a round later
     changed = 1
     for _ in range(max_rounds):
         neighbor_min = (
@@ -185,7 +201,7 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
         jump_map = labels.select(F.col("id").alias("component"),
                                  F.col("component").alias("jmp"))
         obs = Observation()
-        labels = (
+        cp = (
             stepped.join(jump_map, "component", "left")
             .select("id", "_old",
                     F.least("component",
@@ -193,8 +209,9 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
             .observe(obs, F.sum(F.expr("CAST(component != _old AS BIGINT)"))
                      .alias("changed"))
             .localCheckpoint(eager=True)
-            .select("id", "component")
         )
+        release_checkpoints(held)
+        held, labels = cp, cp.select("id", "component")
         changed = obs.get["changed"] or 0  # NULL sum: no labels at all
         if changed == 0:
             break
@@ -203,6 +220,7 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
             f"connected_components did not converge within {max_rounds} rounds "
             f"(graph diameter beyond 2^{max_rounds}?) — refusing to return "
             f"partially merged components")
+    release_checkpoints(sym)
     # pull the quotient components back to the original nodes; a label
     # absent from the quotient graph means its whole component collapsed
     # in the contraction step — it is its own component id
@@ -213,58 +231,43 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
 
 # --- R4 street segmentation cleanup / way joining -----------------------------
 
-_MERGE_SCHEMA = T.StructType([
-    T.StructField("way_id", T.LongType()),
-    T.StructField("node_ids", T.ArrayType(T.LongType())),
-    T.StructField("highway", T.StringType()),
-    T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-])
-
-
-def _chain_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Merge a component of endpoint-chained ways into one ordered way.
-    Groups are tiny (a handful of OSM fragments), so plain python here is
-    not a hot path; determinism: output id = min way_id, orientation starts
-    from the chain end containing the smallest terminal node."""
-    if len(pdf) == 1:
-        r = pdf.iloc[0]
-        return pd.DataFrame([{"way_id": r.way_id, "node_ids": list(r.node_ids),
-                              "highway": r.highway, "tags": r.tags}])
-    seqs = {int(r.way_id): list(r.node_ids) for r in pdf.itertuples()}
-    # endpoint -> ways incident at that endpoint
-    from collections import defaultdict
-    at = defaultdict(list)
-    for wid, ids in seqs.items():
-        at[ids[0]].append(wid)
-        at[ids[-1]].append(wid)
-    terminals = sorted(n for n, ws in at.items() if len(ws) == 1)
-    start = terminals[0] if terminals else min(at)
-    merged, used = [], set()
-    cur = start
-    while True:
-        nxt = [w for w in at[cur] if w not in used]
-        if not nxt:
-            break
-        wid = min(nxt)
-        used.add(wid)
-        ids = seqs[wid]
-        if ids[-1] == cur:
-            ids = ids[::-1]
-        merged.extend(ids if not merged else ids[1:])
-        cur = ids[-1]
-    if len(used) < len(seqs):  # non-chain topology: bail out, keep originals
-        return pd.DataFrame([{"way_id": r.way_id, "node_ids": list(r.node_ids),
-                              "highway": r.highway, "tags": r.tags} for r in pdf.itertuples()])
-    first = pdf.loc[pdf.way_id.idxmin()]
-    return pd.DataFrame([{"way_id": int(pdf.way_id.min()), "node_ids": merged,
-                          "highway": first.highway, "tags": first.tags}])
+# the chain walk over s, one component's ways sorted by way_id, so the min
+# unused incident way is the first one in array order.  Start: the min
+# node that ends one way only, else the min endpoint; a closed way counts
+# twice at its node.
+_ENDS = "FLATTEN(TRANSFORM(s, w -> ARRAY(w.node_ids[0], ELEMENT_AT(w.node_ids, -1))))"
+_START = let_sql(_ENDS, "ends", "COALESCE(ARRAY_MIN(FILTER(ends, e -> "
+                "SIZE(FILTER(ends, f -> f = e)) = 1)), ARRAY_MIN(ends))")
+_NEXT = ("ARRAY_MIN(FILTER(SEQUENCE(0, SIZE(s) - 1), q -> NOT st.used[q] AND "
+         "(s[q].node_ids[0] = st.cur OR ELEMENT_AT(s[q].node_ids, -1) = st.cur)))")
+_STEP = let_sql(_NEXT, "j", "CASE WHEN j IS NULL THEN st ELSE " + let_sql(
+    "IF(ELEMENT_AT(s[j].node_ids, -1) = st.cur, REVERSE(s[j].node_ids), s[j].node_ids)", "o",
+    "NAMED_STRUCT('cur', ELEMENT_AT(o, -1), "
+    "'used', TRANSFORM(st.used, (u, q) -> u OR q = j), "
+    "'ids', IF(SIZE(st.ids) = 0, o, CONCAT(st.ids, SLICE(o, 2, SIZE(o) - 1))))") + " END")
+_WALK = (f"AGGREGATE(SEQUENCE(1, SIZE(s)), NAMED_STRUCT('cur', {_START}, "
+         f"'used', TRANSFORM(s, w -> FALSE), 'ids', CAST(ARRAY() AS ARRAY<BIGINT>)), "
+         f"(st, step) -> {_STEP})")
+_CHAIN_MERGE = let_sql(
+    "ARRAY_SORT(ws, (l, r) -> CASE WHEN l.way_id < r.way_id THEN -1 "
+    "WHEN l.way_id > r.way_id THEN 1 ELSE 0 END)", "s",
+    let_sql(_WALK, "m",
+            "IF(EXISTS(m.used, u -> NOT u), ws, ARRAY(NAMED_STRUCT('way_id', s[0].way_id, "
+            "'node_ids', m.ids, 'highway', s[0].highway, 'tags', s[0].tags)))"))
 
 
 def join_segmented_ways(ways: DataFrame) -> DataFrame:
     """R4: merge consecutive ways that share an endpoint node used by
     exactly those two ways and carrying the same highway class (reference:
     clean_street_segmentation).  Plan: endpoint self-join -> CC -> per-
-    component ordered chain merge in applyInPandas."""
+    component chain merge as one SQL AGGREGATE walk.
+
+    The walk starts at the min terminal node (an endpoint of one way), or
+    at the min endpoint when there is none (a cycle), and each step takes
+    the min unused way incident at the current node, oriented to continue
+    from it.  A component the walk cannot cover (not a chain) keeps its
+    original ways.  The merged way takes the min way_id and that way's
+    highway and tags.  Single-way components skip the walk."""
     ends = ways.select(
         "way_id", "highway",
         F.explode(F.array(F.element_at("node_ids", 1), F.element_at("node_ids", -1))).alias("node_id"),
@@ -283,13 +286,22 @@ def join_segmented_ways(ways: DataFrame) -> DataFrame:
     # as an extra Spark job on EVERY call just to short-circuit the rare
     # empty case (VERDICT.md r3 'What's wrong' #4).  An empty edge list
     # falls out naturally: CC converges in one round on zero rows, every
-    # way becomes its own component, and _chain_merge returns single-way
-    # groups unchanged.
+    # way becomes its own component, and single-way groups pass
+    # through unchanged.
     comp = connected_components(pairs)
     tagged = ways.join(comp.withColumnRenamed("id", "way_id"), "way_id", "left") \
                  .withColumn("component", F.coalesce("component", "way_id"))
-    return tagged.groupBy("component").applyInPandas(
-        lambda _, pdf: _chain_merge(pdf.drop(columns=["component"])), _MERGE_SCHEMA)
+    return merge_chains(tagged)
+
+
+def merge_chains(tagged: DataFrame) -> DataFrame:
+    """One way per chain ``component`` of (way_id, node_ids, highway, tags,
+    component) rows; a component that is not a chain keeps its ways."""
+    groups = tagged.groupBy("component").agg(
+        F.collect_list(F.struct("way_id", "node_ids", "highway", "tags")).alias("ws"))
+    merged = groups.select(F.explode(F.expr(
+        f"CASE WHEN SIZE(ws) = 1 THEN ws ELSE {_CHAIN_MERGE} END")).alias("w"))
+    return merged.select("w.way_id", "w.node_ids", "w.highway", "w.tags")
 
 
 # --- R5 street splitting -------------------------------------------------------
@@ -467,34 +479,61 @@ def remove_short_segments(nodes: DataFrame, ways: DataFrame,
 
 
 # gw-shaped rows: one resolved polyline per way
-_GW_SCHEMA = T.StructType([
-    T.StructField("way_id", T.LongType()),
-    T.StructField("node_ids", T.ArrayType(T.LongType())),
-    T.StructField("lats", T.ArrayType(T.DoubleType())),
-    T.StructField("lngs", T.ArrayType(T.DoubleType())),
-    T.StructField("highway", T.StringType()),
-])
+_GW_COLS = ["way_id", "node_ids", "lats", "lngs", "highway"]
+
+
+def _dp_keep_sql(tol_m: float) -> str:
+    """Douglas-Peucker keep mask over staged _xs/_ys (the way's equirect
+    frame) — kernel.douglas_peucker_mask as one AGGREGATE.  The state is
+    (stack of open intervals, keep mask); each step pops one interval,
+    takes its first max d2 (strict >, the np.argmax tie rule) and, above
+    tol_m², keeps that vertex and pushes both halves.  Only intervals with
+    an interior vertex are pushed, so at most 2n steps run."""
+    tol2 = sqlfns.dlit(tol_m * tol_m)
+    seg2 = "(g.mx * g.mx + g.my * g.my)"
+    t = f"LEAST(GREATEST((p.x * g.mx + p.y * g.my) / {seg2}, 0.0e0), 1.0e0)"
+    d2 = (f"CASE WHEN {seg2} = 0.0e0 THEN p.x * p.x + p.y * p.y ELSE "
+          + let_sql(t, "t", "(p.x - t * g.mx) * (p.x - t * g.mx) "
+                            "+ (p.y - t * g.my) * (p.y - t * g.my)") + " END")
+    # interior vertices p and chord m relative to the interval's start a
+    pts = ("TRANSFORM(SEQUENCE(iv.a + 1, iv.b - 1), i -> NAMED_STRUCT("
+           "'i', i, 'x', _xs[i] - _xs[iv.a], 'y', _ys[i] - _ys[iv.a]))")
+    frame = "NAMED_STRUCT('mx', _xs[iv.b] - _xs[iv.a], 'my', _ys[iv.b] - _ys[iv.a])"
+    rest = "SLICE(st.stk, 1, SIZE(st.stk) - 1)"
+    split = (f"IF(s.d > {tol2}, NAMED_STRUCT("
+             f"'stk', CONCAT({rest}, FILTER(ARRAY(NAMED_STRUCT('a', iv.a, 'b', s.i), "
+             f"NAMED_STRUCT('a', s.i, 'b', iv.b)), v -> v.b - v.a >= 2)), "
+             f"'keep', TRANSFORM(st.keep, (k, q) -> k OR q = s.i)), "
+             f"NAMED_STRUCT('stk', {rest}, 'keep', st.keep))")
+    argmax = let_sql(frame, "g", (
+        f"AGGREGATE(TRANSFORM({pts}, p -> NAMED_STRUCT('d', {d2}, 'i', p.i)), "
+        f"NAMED_STRUCT('d', -1.0e0, 'i', -1), (s, e) -> IF(e.d > s.d, e, s), s -> {split})"))
+    step = ("CASE WHEN SIZE(st.stk) = 0 THEN st ELSE "
+            + let_sql("st.stk[SIZE(st.stk) - 1]", "iv", argmax) + " END")
+    return ("AGGREGATE(SEQUENCE(1, 2 * SIZE(_xs)), NAMED_STRUCT("
+            "'stk', ARRAY(NAMED_STRUCT('a', 0, 'b', SIZE(_xs) - 1)), "
+            "'keep', TRANSFORM(_xs, (x, q) -> q = 0 OR q = SIZE(_xs) - 1)), "
+            f"(st, step) -> {step}).keep")
 
 
 def simplify_gw(gw: DataFrame, tol_m: float = geom.DP_TOLERANCE_M) -> DataFrame:
     """R17 on gw-shaped rows (way_id, node_ids, lats, lngs, highway):
-    Douglas-Peucker directly over the vertex arrays."""
-    def dp(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                la, lg = np.asarray(r.lats), np.asarray(r.lngs)
-                keep = geom.douglas_peucker_mask(la, lg, tol_m)
-                rows.append({
-                    "way_id": r.way_id,
-                    "node_ids": [int(x) for x, kk in zip(r.node_ids, keep) if kk],
-                    "lats": la[keep].tolist(), "lngs": lg[keep].tolist(),
-                    "highway": r.highway})
-            yield pd.DataFrame(rows, columns=_GW_SCHEMA.names)
+    Douglas-Peucker directly over the vertex arrays, pure Spark SQL and
+    bit-identical to kernel.douglas_peucker_mask (same frame, same clip and
+    seg2 = 0 arithmetic).  Ways of <= 2 vertices pass through untouched."""
+    # the way's equirect frame at its first vertex
+    x, y = sqlfns.equirect_xy_sql("a", "g", "lats[0]", "lngs[0]", cs="_cs")
+    xy = (gw.select(*_GW_COLS, F.expr(sqlfns.coslat_sql("lats[0]")).alias("_cs"))
+          .select(*_GW_COLS, F.expr(f"TRANSFORM(lngs, g -> {x})").alias("_xs"),
+                  F.expr(f"TRANSFORM(lats, a -> {y})").alias("_ys")))
+    kept = xy.select(*_GW_COLS, F.expr(
+        f"CASE WHEN SIZE(lats) > 2 THEN {_dp_keep_sql(tol_m)} END").alias("_keep"))
 
-    return gw.select(*_GW_SCHEMA.names).mapInPandas(dp, _GW_SCHEMA)
+    def keep(col: str) -> F.Column:
+        return F.expr(f"CASE WHEN _keep IS NULL THEN {col} "
+                      f"ELSE FILTER({col}, (v, q) -> _keep[q]) END").alias(col)
+
+    return kept.select("way_id", keep("node_ids"), keep("lats"), keep("lngs"), "highway")
 
 
 def drop_short_gw(gw: DataFrame, min_len_m: float = geom.SHORT_SEGMENT_M) -> DataFrame:
@@ -504,11 +543,6 @@ def drop_short_gw(gw: DataFrame, min_len_m: float = geom.SHORT_SEGMENT_M) -> Dat
 
 
 # --- R6/R7 parallel segment detection + merge ---------------------------------------
-
-def _mean_bearing(lats, lngs):
-    x, y = geom.equirect_xy(np.asarray(lats), np.asarray(lngs), lats[0], lngs[0])
-    return float(np.arctan2(y[-1] - y[0], x[-1] - x[0]))
-
 
 def _endpoint_cols(side: str) -> list:
     """Scalar endpoint/midpoint columns for one side of the parallel-pair
@@ -528,7 +562,7 @@ def find_parallel_pairs(gw: DataFrame,
                         angle_rad: float = geom.PARALLEL_ANGLE_RAD) -> DataFrame:
     """R6: candidate pairs via a cell-bucket equi-join on vertex cells,
     refined by the exact heading/separation/overlap predicate in pure Spark
-    SQL (whole-stage codegen; the round-1 pandas-UDF refine looped per row,
+    SQL (whole-stage codegen; the round-1 python-UDF refine looped per row,
     VERDICT.md 'What's wrong' #4) — the reference's only theta-join,
     compiled to equi-join + scalar refine.
 
@@ -559,13 +593,12 @@ def find_parallel_pairs(gw: DataFrame,
             .dropDuplicates(["way_a", "way_b"]))
 
     # exact refine, all scalar SQL over the endpoint/midpoint columns:
-    M = sqlfns.M
     pi = sqlfns.dlit(_math.pi)
 
     def bearing(side: str) -> str:
-        c = sqlfns.coslat_sql(f"flat_{side}")
-        return (f"ATAN2((llat_{side} - flat_{side}) * {M}, "
-                f"(llng_{side} - flng_{side}) * {c} * {M})")
+        x, y = sqlfns.equirect_xy_sql(f"llat_{side}", f"llng_{side}",
+                                      f"flat_{side}", f"flng_{side}")
+        return f"ATAN2({y}, {x})"
 
     # separation: min distance from a's middle vertex to b's segments
     seg_d = sqlfns.seg_dist_sql("mlat_a", "mlng_a",
@@ -576,13 +609,9 @@ def find_parallel_pairs(gw: DataFrame,
            f"ELSE CAST(NULL AS DOUBLE) END")
     # overlap: b's endpoints projected onto a's chord (frame anchored at
     # a's first vertex — same arithmetic the numpy kernel twin uses)
-    ca = sqlfns.coslat_sql("flat_a")
-    cx = f"((llng_a - flng_a) * {ca} * {M})"
-    cy = f"((llat_a - flat_a) * {M})"
-    x2 = f"((flng_b - flng_a) * {ca} * {M})"
-    y2 = f"((flat_b - flat_a) * {M})"
-    x3 = f"((llng_b - flng_a) * {ca} * {M})"
-    y3 = f"((llat_b - flat_a) * {M})"
+    cx, cy = sqlfns.equirect_xy_sql("llat_a", "llng_a", "flat_a", "flng_a")
+    x2, y2 = sqlfns.equirect_xy_sql("flat_b", "flng_b", "flat_a", "flng_a")
+    x3, y3 = sqlfns.equirect_xy_sql("llat_b", "llng_b", "flat_a", "flng_a")
     L2 = f"({cx} * {cx} + {cy} * {cy})"
     t0 = f"(({x2} * {cx} + {y2} * {cy}) / {L2})"
     t1 = f"(({x3} * {cx} + {y3} * {cy}) / {L2})"
@@ -602,12 +631,42 @@ def find_parallel_pairs(gw: DataFrame,
             .select("way_a", "way_b", "sep_m"))
 
 
+def _resample_sql(lats: str, lngs: str) -> str:
+    """struct<lats, lngs>: the polyline resampled by arc length at the
+    fractions in lambda variable ``t`` — kernel.parallel_centerline's
+    resample: cumulative sqrt(dx² + dy²) in the polyline's own frame,
+    divided by its total unless that is 0, then np.interp's cases with
+    j = the last knot <= x."""
+    x, y = sqlfns.equirect_xy_sql("a", "g", f"{lats}[0]", f"{lngs}[0]")
+    frame = (f"NAMED_STRUCT('xs', TRANSFORM({lngs}, g -> {x}), "
+             f"'ys', TRANSFORM({lats}, a -> {y}))")
+    dx, dy = "(f.xs[q] - f.xs[q - 1])", "(f.ys[q] - f.ys[q - 1])"
+    seg = (f"CASE WHEN SIZE({lats}) >= 2 THEN TRANSFORM(SEQUENCE(1, SIZE({lats}) - 1), "
+           f"q -> SQRT({dx} * {dx} + {dy} * {dy})) ELSE CAST(ARRAY() AS ARRAY<DOUBLE>) END")
+    cum = f"AGGREGATE({seg}, ARRAY(0.0e0), (acc, v) -> CONCAT(acc, ARRAY(ELEMENT_AT(acc, -1) + v)))"
+    tt = let_sql(frame, "f", let_sql(cum, "d", "CASE WHEN ELEMENT_AT(d, -1) > 0.0e0 "
+                                    "THEN TRANSFORM(d, v -> v / ELEMENT_AT(d, -1)) ELSE d END"))
+
+    def interp(fp: str) -> str:
+        return (f"ZIP_WITH(t, js, (x, j) -> CASE WHEN j < 0 THEN {fp}[0] "
+                f"WHEN j = SIZE({fp}) - 1 THEN {fp}[j] WHEN tt[j] = x THEN {fp}[j] "
+                f"ELSE ({fp}[j + 1] - {fp}[j]) / (tt[j + 1] - tt[j]) * (x - tt[j]) "
+                f"+ {fp}[j] END)")
+
+    return let_sql(tt, "tt", let_sql(
+        "TRANSFORM(t, x -> SIZE(FILTER(tt, v -> v <= x)) - 1)", "js",
+        f"NAMED_STRUCT('lats', {interp(lats)}, 'lngs', {interp(lngs)})"))
+
+
 def merge_parallel_pairs(gw: DataFrame, pairs: DataFrame) -> DataFrame:
-    """R7: replace each matched pair with a pointwise-midpoint centerline.
+    """R7: replace each matched pair with a pointwise-midpoint centerline,
+    pure Spark SQL and bit-identical to kernel.parallel_centerline.
     Greedy mutual-best matching keeps each segment in at most one merge
     (window row_number by (sep, partner)); merged id = min(way_a, way_b),
-    fresh deterministic node ids.  Originals are anti-joined out, merged
-    rows unioned in — the reference's in-place rewiring as set ops."""
+    fresh deterministic node ids PARALLEL_NODE_BASE + id*10000 + i (a
+    centerline of more than 10,000 vertices fails loudly instead of
+    colliding with id + 1's).  Originals are anti-joined out, merged rows
+    unioned in — the reference's in-place rewiring as set ops."""
     wa = Window.partitionBy("way_a").orderBy("sep_m", "way_b")
     wb = Window.partitionBy("way_b").orderBy("sep_m", "way_a")
     best = (pairs.withColumn("ra", F.row_number().over(wa))
@@ -620,39 +679,39 @@ def merge_parallel_pairs(gw: DataFrame, pairs: DataFrame) -> DataFrame:
                    F.col("lngs").alias("lngs_b"))
     todo = best.join(ga, "way_a").join(gb, "way_b")
 
-    def centerline(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples():
-            la, ga_ = np.asarray(r.lats_a), np.asarray(r.lngs_a)
-            lb, gb_ = np.asarray(r.lats_b), np.asarray(r.lngs_b)
-            ba, bb = _mean_bearing(la, ga_), _mean_bearing(lb, gb_)
-            if np.cos(ba - bb) < 0:       # orient b like a
-                lb, gb_ = lb[::-1], gb_[::-1]
-            k = max(la.size, lb.size)
-            t = np.linspace(0.0, 1.0, k)
+    def bearing(s: str) -> str:
+        # chord bearing in the lane's frame, where y[0] = x[0] = 0 exactly
+        x, y = sqlfns.equirect_xy_sql(f"ELEMENT_AT(lats_{s}, -1)", f"ELEMENT_AT(lngs_{s}, -1)",
+                                      f"lats_{s}[0]", f"lngs_{s}[0]")
+        return f"ATAN2({y}, {x})"
 
-            def resample(ls, gs):
-                x, y = geom.equirect_xy(ls, gs, ls[0], gs[0])
-                d = np.concatenate([[0.0], np.cumsum(np.hypot(np.diff(x), np.diff(y)))])
-                tt = d / d[-1] if d[-1] > 0 else d
-                return np.interp(t, tt, ls), np.interp(t, tt, gs)
-
-            ral, rag = resample(la, ga_)
-            rbl, rbg = resample(lb, gb_)
-            wid = int(min(r.way_a, r.way_b))
-            out.append({
-                "way_id": wid,
-                "node_ids": [PARALLEL_NODE_BASE + wid * 10_000 + i for i in range(k)],
-                "lats": ((ral + rbl) / 2.0).tolist(),
-                "lngs": ((rag + rbg) / 2.0).tolist(),
-                "highway": r.highway_a,
-            })
-        return pd.DataFrame(out, columns=_GW_SCHEMA.names)
-
-    # best holds one row per way_a, so each row is merged on its own: a
-    # plain map, no shuffle into one-row groups
-    merged = todo.mapInPandas(
-        lambda it: (centerline(p) for p in it if len(p)), _GW_SCHEMA)
+    # orient b like a, then k = max(n_a, n_b) samples at np.linspace's
+    # i * (1 / (k - 1)), the last one exactly 1.0
+    lanes = todo.select(
+        F.least("way_a", "way_b").alias("way_id"), F.col("highway_a").alias("highway"),
+        "lats_a", "lngs_a", "lats_b", "lngs_b",
+        F.expr(f"COS({bearing('a')} - {bearing('b')}) < 0.0e0").alias("_flip"),
+        F.greatest(F.size("lats_a"), F.size("lats_b")).alias("_k"))
+    lanes = lanes.select(
+        "way_id", "highway", "lats_a", "lngs_a", "_k",
+        F.expr("IF(_flip, REVERSE(lats_b), lats_b)").alias("lats_b"),
+        F.expr("IF(_flip, REVERSE(lngs_b), lngs_b)").alias("lngs_b"))
+    lanes = lanes.filter(F.expr(
+        "ASSERT_TRUE(_k <= 10000, CONCAT('way ', CAST(way_id AS STRING), ': ', "
+        "CAST(_k AS STRING), ' centerline vertices overflow the node-id scheme')) IS NULL"))
+    t = ("TRANSFORM(SEQUENCE(0, _k - 1), i -> CASE WHEN i = _k - 1 THEN 1.0e0 "
+         "ELSE i * (1.0e0 / (_k - 1)) END)")
+    mid = "ZIP_WITH(ra.{0}, rb.{0}, (p, q) -> (p + q) / 2.0e0)"
+    center = let_sql(t, "t", let_sql(_resample_sql("lats_a", "lngs_a"), "ra", let_sql(
+        _resample_sql("lats_b", "lngs_b"), "rb",
+        f"NAMED_STRUCT('lats', {mid.format('lats')}, 'lngs', {mid.format('lngs')})")))
+    merged = lanes.select(
+        "way_id", "highway",
+        F.expr(f"TRANSFORM(SEQUENCE(0, _k - 1), i -> "
+               f"{PARALLEL_NODE_BASE} + way_id * 10000 + i)").alias("node_ids"),
+        F.expr(center).alias("_c"))
+    merged = merged.select("way_id", "node_ids", F.col("_c.lats").alias("lats"),
+                           F.col("_c.lngs").alias("lngs"), "highway")
     drop = best.selectExpr("way_a AS way_id").union(best.selectExpr("way_b AS way_id"))
-    kept = gw.join(drop, "way_id", "left_anti").select(*_GW_SCHEMA.names)
+    kept = gw.join(drop, "way_id", "left_anti").select(*_GW_COLS)
     return kept.unionByName(merged)

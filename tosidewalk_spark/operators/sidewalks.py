@@ -7,21 +7,19 @@ SURVEY.md §0): ``ToSidewalk.py § make_sidewalk_nodes`` (R12),
 connect_crosswalk_nodes / swap_nodes`` (R16), ``ToSidewalk.py § main``
 union (R19), ``network.py § export`` (R20).
 
-Sidewalk offsets are pure SQL over the gathered vertex arrays; crosswalk
-geometry runs in GROUPED_MAP pandas UDFs calling the numpy kernel (no
-per-row Python — BASELINE.json:16) with single intersections as groups,
-so UDF group size is trivially bounded at any data scale.  Id assignment
-is a pure function of input ids (SURVEY.md §7 hard part 2), so output is
-independent of partitioning and parallelism.
+Sidewalk offsets and crosswalk corners are pure SQL over the gathered
+vertex arrays (no python worker — BASELINE.json:16), each evaluated in
+its numpy kernel twin's op order so the two stay bit-identical.  Id
+assignment is a pure function of input ids (SURVEY.md §7 hard part 2), so
+output is independent of partitioning and parallelism.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql import types as T
 
 from ..functions import sqlfns
+from ..functions.sqlfns import let_sql
 from ..kernel import geom
 from . import network as N
 
@@ -35,11 +33,10 @@ SNAP_DIST_M = 8.0  # sidewalk endpoint -> crosswalk corner splice radius
 def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> DataFrame:
     """R12+R13: two sidewalk polylines per street way, offset +-offset_m
     perpendicular via the bisector method — pure Spark SQL, bit-identical
-    to kernel.offset_polyline (r6 rewrite of the applyInPandas form,
-    pinned equal to the kernel by
-    tests/test_sidewalks.py::test_make_sidewalks_sql_matches_pandas).
+    to kernel.offset_polyline (r6 rewrite of the grouped-map UDF form,
+    pinned equal to the kernel by tests/test_sidewalks.py).
 
-    Why SQL: the pandas form was the ONLY python stage in the bench's
+    Why SQL: the UDF form was the ONLY python stage in the bench's
     buffers chain, so every fresh session paid the python-worker spawn +
     Arrow init (~2.6 s/session, x25 sessions across the scaling legs) and
     the groupBy(way_id) shuffle — the SQL form is a narrow projection +
@@ -62,11 +59,10 @@ def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> D
                     F.size("lats").alias("_n"),
                     # scalar anchor cos(lat0) — computed once per way
                     F.expr(sqlfns.coslat_sql("ELEMENT_AT(lats, 1)")).alias("_cs")))
-    # equirect_xy: x = ((lng - lng0) * cs) * M ; y = (lat - lat0) * M
-    xy = base.select(
-        "*",
-        F.expr(f"TRANSFORM(lngs, g -> (g - ELEMENT_AT(lngs, 1)) * _cs * {M})").alias("_xs"),
-        F.expr(f"TRANSFORM(lats, a -> (a - ELEMENT_AT(lats, 1)) * {M})").alias("_ys"))
+    # the way's equirect frame at its first vertex
+    x, y = sqlfns.equirect_xy_sql("a", "g", "ELEMENT_AT(lats, 1)", "ELEMENT_AT(lngs, 1)", cs="_cs")
+    xy = base.select("*", F.expr(f"TRANSFORM(lngs, g -> {x})").alias("_xs"),
+                     F.expr(f"TRANSFORM(lats, a -> {y})").alias("_ys"))
     # per-segment deltas, guarded lengths, unit directions (np.diff order)
     dxy = xy.select(
         "*",
@@ -133,72 +129,74 @@ def make_sidewalks(gw: DataFrame, offset_m: float = geom.SIDEWALK_OFFSET_M) -> D
 
 # --- R14/R15/R16: crosswalks ---------------------------------------------------
 
-_CW_SCHEMA = T.StructType([
-    T.StructField("way_id", T.LongType()),
-    T.StructField("intersection_node_id", T.LongType()),
-    T.StructField("node_ids", T.ArrayType(T.LongType())),
-    T.StructField("lats", T.ArrayType(T.DoubleType())),
-    T.StructField("lngs", T.ArrayType(T.DoubleType())),
-])
-
-
-def intersection_arms(gw: DataFrame, inter: DataFrame, min_degree: int = 3) -> DataFrame:
-    """For each intersection node of arm-degree >= min_degree, one row per
-    adjacent vertex (arm): (node_id, clat, clng, arm_lat, arm_lng).
-    Derived relationally from the exploded way-vertex table: the arm of an
-    intersection along a way is the previous/next vertex in that way."""
-    wn = gw.select(
-        "way_id",
-        F.posexplode(F.arrays_zip("node_ids", "lats", "lngs")).alias("seq", "v"))
-    wn = wn.select("way_id", "seq", F.col("v.node_ids").alias("node_id"),
-                   F.col("v.lats").alias("lat"), F.col("v.lngs").alias("lng"))
-    w = Window.partitionBy("way_id").orderBy("seq")
-    nb = wn.select(
-        "way_id", "seq", "node_id", "lat", "lng",
-        F.lag("lat").over(w).alias("prev_lat"), F.lag("lng").over(w).alias("prev_lng"),
-        F.lead("lat").over(w).alias("next_lat"), F.lead("lng").over(w).alias("next_lng"))
-    arms = nb.select(
-        "node_id", F.col("lat").alias("clat"), F.col("lng").alias("clng"),
-        F.explode(F.array(
-            F.struct(F.col("prev_lat").alias("alat"), F.col("prev_lng").alias("alng")),
-            F.struct(F.col("next_lat").alias("alat"), F.col("next_lng").alias("alng")),
-        )).alias("arm"),
-    ).filter(F.col("arm.alat").isNotNull()).select(
-        "node_id", "clat", "clng",
-        F.col("arm.alat").alias("arm_lat"), F.col("arm.alng").alias("arm_lng"))
-    eligible = (arms.groupBy("node_id").agg(F.count("*").alias("arm_count"))
-                .filter(F.col("arm_count") >= min_degree).select("node_id"))
-    return arms.join(eligible, "node_id")
-
-
 def make_crosswalks(gw: DataFrame, inter: DataFrame,
                     dist_m: float = geom.CROSSWALK_OFFSET_M) -> DataFrame:
-    """R14+R15+R16a: per eligible intersection, sort arms CCW by bearing,
-    place one corner node per adjacent arm pair on the bisector at dist_m,
-    connect consecutive corners into a crosswalk ring.  Deterministic ids:
-    corner k of intersection n -> CW_NODE_BASE + n*100 + k, crosswalk way
-    k -> CW_WAY_BASE + n*100 + k."""
-    arms = intersection_arms(gw, inter)
+    """R14+R15+R16a: per intersection of arm-degree >= 3, sort arms CCW by
+    bearing, place one corner node per adjacent arm pair on the bisector
+    at dist_m, connect consecutive corners into a crosswalk ring.
+    Deterministic ids: corner k of intersection n -> CW_NODE_BASE + n*100
+    + k, crosswalk way k -> CW_WAY_BASE + n*100 + k; an intersection with
+    more than 100 arms fails loudly instead of colliding with n + 1's ids.
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        nid = int(pdf["node_id"].iloc[0])
-        clat, clng = float(pdf["clat"].iloc[0]), float(pdf["clng"].iloc[0])
-        klat, klng, _ = geom.crosswalk_corners(
-            clat, clng, pdf["arm_lat"].to_numpy(), pdf["arm_lng"].to_numpy(), dist_m)
-        m = len(klat)
-        for k in range(m):
-            k2 = (k + 1) % m
-            out.append({
-                "way_id": CW_WAY_BASE + nid * 100 + k,
-                "intersection_node_id": nid,
-                "node_ids": [CW_NODE_BASE + nid * 100 + k, CW_NODE_BASE + nid * 100 + k2],
-                "lats": [float(klat[k]), float(klat[k2])],
-                "lngs": [float(klng[k]), float(klng[k2])],
-            })
-        return pd.DataFrame(out, columns=[f.name for f in _CW_SCHEMA.fields])
-
-    return arms.groupBy("node_id").applyInPandas(lambda _, p: build(p), _CW_SCHEMA)
+    Pure Spark SQL, bit-identical to kernel.crosswalk_corners (pinned by
+    tests/test_sidewalks.py).  The arms of vertex i of a way are its array
+    neighbours i - 1 and i + 1, so one groupBy(node_id) gathers every
+    intersection's arms; the corners are per-row array functions in the
+    kernel's op order.  ``inter`` is unused: arm-degree >= 3 is decided
+    here, on the arms themselves."""
+    M = sqlfns.M
+    d = sqlfns.dlit(dist_m)
+    arm = "NAMED_STRUCT('lat', lats[{k}], 'lng', lngs[{k}])"
+    verts = gw.select("lats", "lngs", F.size("lats").alias("_n"),
+                      F.posexplode("node_ids").alias("_i", "node_id"))
+    arms = verts.select(
+        "node_id", F.expr("lats[_i]").alias("clat"), F.expr("lngs[_i]").alias("clng"),
+        F.expr(f"FILTER(ARRAY(CASE WHEN _i > 0 THEN {arm.format(k='_i - 1')} END, "
+               f"CASE WHEN _i < _n - 1 THEN {arm.format(k='_i + 1')} END), "
+               f"a -> a IS NOT NULL)").alias("arms"))
+    inters = (arms.groupBy("node_id")
+              .agg(F.min("clat").alias("clat"), F.min("clng").alias("clng"),
+                   F.flatten(F.collect_list("arms")).alias("arms"))
+              .filter(F.size("arms") >= 3)
+              .filter(F.expr(
+                  "ASSERT_TRUE(SIZE(arms) <= 100, CONCAT('intersection ', "
+                  "CAST(node_id AS STRING), ': ', CAST(SIZE(arms) AS STRING), "
+                  "' arms overflow the crosswalk id scheme')) IS NULL"))
+              .select("node_id", "clat", "clng", "arms", F.size("arms").alias("_m"),
+                      F.expr(sqlfns.coslat_sql("clat")).alias("_cs")))
+    # equirect_xy around the centre, then the R14 sort on atan2 (ties,
+    # i.e. equal bearings, fall to x then y, as in the kernel's lexsort)
+    x, y = sqlfns.equirect_xy_sql("a.lat", "a.lng", "clat", "clng", cs="_cs")
+    srt = ("ARRAY_SORT(TRANSFORM(arms, a -> " + let_sql(
+        f"NAMED_STRUCT('x', {x}, 'y', {y})", "p",
+        "NAMED_STRUCT('ang', ATAN2(p.y, p.x), 'x', p.x, 'y', p.y)") + "))")
+    # unit arm vectors; a zero-length arm divides by 1
+    unit = ("TRANSFORM(srt, p -> " + let_sql(
+        "CASE WHEN SQRT(p.x * p.x + p.y * p.y) = 0.0e0 THEN 1.0e0 "
+        "ELSE SQRT(p.x * p.x + p.y * p.y) END", "r",
+        "NAMED_STRUCT('ux', p.x / r, 'uy', p.y / r)") + ")")
+    # bisector of arm k and its CCW neighbour (k + 1) % m; bl < 1e-6
+    # (opposite arms) takes the perpendicular (-uy, ux) of arm k over bl = 1,
+    # whose division is exact and so left out; unproject: clat + cy / M,
+    # clng + cx / (M * cs)
+    bis = ("NAMED_STRUCT('ux', u[k].ux, 'uy', u[k].uy, "
+           "'bx', u[k].ux + u[(k + 1) % _m].ux, 'by', u[k].uy + u[(k + 1) % _m].uy)")
+    corner = let_sql(bis, "v", let_sql(
+        "SQRT(v.bx * v.bx + v.by * v.by)", "bl",
+        f"CASE WHEN bl < 1.0e-6 THEN NAMED_STRUCT("
+        f"'lat', clat + (v.ux * {d}) / {M}, 'lng', clng + (-v.uy * {d}) / ({M} * _cs)) "
+        f"ELSE NAMED_STRUCT('lat', clat + (v.by / bl * {d}) / {M}, "
+        f"'lng', clng + (v.bx / bl * {d}) / ({M} * _cs)) END"))
+    corners = inters.select("node_id", "_m", F.expr(let_sql(srt, "srt", let_sql(
+        unit, "u", f"TRANSFORM(SEQUENCE(0, _m - 1), k -> {corner})"))).alias("_c"))
+    ring = corners.select("node_id", "_m", "_c", F.posexplode("_c").alias("k", "c"))
+    return ring.select(
+        F.expr(f"{CW_WAY_BASE} + node_id * 100 + k").alias("way_id"),
+        F.col("node_id").alias("intersection_node_id"),
+        F.expr(f"ARRAY({CW_NODE_BASE} + node_id * 100 + k, "
+               f"{CW_NODE_BASE} + node_id * 100 + (k + 1) % _m)").alias("node_ids"),
+        F.expr("ARRAY(c.lat, _c[(k + 1) % _m].lat)").alias("lats"),
+        F.expr("ARRAY(c.lng, _c[(k + 1) % _m].lng)").alias("lngs"))
 
 
 def crosswalk_corner_nodes(crosswalks: DataFrame) -> DataFrame:

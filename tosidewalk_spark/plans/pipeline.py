@@ -30,10 +30,11 @@ def build_network(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     lats, lngs).
 
     Every stage output is an eager local checkpoint, so each stage plans
-    and runs on materialized input.  Left lazy, the CC fixpoints and
-    python stages re-evaluate the whole chain above them (merge_nodes_gw's
-    eager CC input checkpoint alone ran it): at g=6 on a 4-core host the
-    lazy chain took 135-162 s, the staged one 27-40 s, same rows.  The
+    and runs on materialized input.  Left lazy, the CC fixpoints
+    re-evaluate the whole chain above them (merge_nodes_gw's eager CC
+    input checkpoint alone ran it): at g=6 on a 4-core host the lazy chain
+    took 135-162 s, the staged one 27-40 s, same rows.  Every stage is
+    Spark SQL, so the chain starts no python worker.  The
     last checkpoint also keeps downstream consumers (PIP, kNN, tiles)
     from re-running the inference per branch."""
     def stage(df: DataFrame) -> DataFrame:
