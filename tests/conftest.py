@@ -23,10 +23,14 @@ def _persisted_rdds(at_most: int | None = None, wait_s: float = 30.0) -> int:
     local checkpoint nothing reads any more is unpersisted by Spark's
     cleaner thread after a JVM GC.  The JVM keeps the plan of the last
     DataFrame ``collect()`` reachable until the next one, so a one-row
-    collect goes first, and a staged write's plan stayed reachable for
-    ~17 s after it returned, so with ``at_most`` the count is polled until
-    it drops that far or ``wait_s`` passes.  The registry's shared grid
-    segments are one session-long checkpoint by design and do not count."""
+    collect goes first, and the cleaner unpersists asynchronously, so
+    with ``at_most`` the count is polled until it drops that far or
+    ``wait_s`` passes.  The registry's shared grid segments are one
+    session-long checkpoint by design and do not count.  The count reads
+    SparkContext's weak-valued map directly:
+    ``getPersistentRDDs()`` returns a copy that py4j's gateway keeps bound
+    (and with it every RDD it names) until its finalizer thread detaches
+    it, so the next ``System.gc()`` would still find them reachable."""
     spark = SparkSession.getActiveSession()
     if spark is None:
         return 0
@@ -37,7 +41,7 @@ def _persisted_rdds(at_most: int | None = None, wait_s: float = 30.0) -> int:
     while True:
         gc.collect()
         spark.sparkContext._jvm.java.lang.System.gc()
-        n = jsc.getPersistentRDDs().size()
+        n = jsc.sc().persistentRdds().size()
         n -= len(registry._SEGMENT_CACHE) if registry else 0
         if at_most is None or n <= at_most or time.monotonic() > deadline:
             return n

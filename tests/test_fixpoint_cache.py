@@ -73,3 +73,18 @@ def test_fixpoint_operator_leaves_cache_manager_empty(spark, name):
     result = CASES[name](spark)
     assert result.collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+
+
+def test_leak_count_sees_a_live_persist(spark):
+    """The module leak check has teeth: a live persisted DataFrame raises
+    the count it reads by one, and unpersisting it brings it back."""
+    from conftest import _persisted_rdds
+    # let the cleaner drop what earlier tests left, so the count is steady
+    before = _persisted_rdds(at_most=0, wait_s=10.0)
+    df = spark.range(10).persist()
+    try:
+        df.count()
+        assert _persisted_rdds() == before + 1
+    finally:
+        df.unpersist(blocking=True)
+    assert _persisted_rdds(at_most=before) == before

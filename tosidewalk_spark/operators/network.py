@@ -282,12 +282,11 @@ def join_segmented_ways(ways: DataFrame) -> DataFrame:
         .select(F.element_at(F.array_sort("ws"), 1).alias("src"),
                 F.element_at(F.array_sort("ws"), 2).alias("dst"))
     )
-    # no isEmpty() pre-probe: it cost a full evaluation of the pairs plan
-    # as an extra Spark job on EVERY call just to short-circuit the rare
-    # empty case (VERDICT.md r3 'What's wrong' #4).  An empty edge list
-    # falls out naturally: CC converges in one round on zero rows, every
-    # way becomes its own component, and single-way groups pass
-    # through unchanged.
+    # no emptiness probe: it would evaluate the pairs plan as an extra
+    # job on every call to short-circuit the rare empty case.  An empty
+    # edge list falls out naturally: CC converges in one round on zero
+    # rows, every way becomes its own component, and single-way groups
+    # pass through unchanged.
     comp = connected_components(pairs)
     tagged = ways.join(comp.withColumnRenamed("id", "way_id"), "way_id", "left") \
                  .withColumn("component", F.coalesce("component", "way_id"))
@@ -356,9 +355,8 @@ def _node_merge_remap(pts: DataFrame, threshold_m: float) -> DataFrame:
     disk-1 neighborhood covers it) — an equi-join, never a cross join;
     cluster merge = connected components; canonical id = min(node_id).
     Empty when no pair is within threshold — callers coalesce through it,
-    no driver-side emptiness probe (VERDICT.md r3 'What's wrong' #4: the
-    old cand.isEmpty() guard evaluated the whole candidate plan as an
-    extra job per call)."""
+    with no driver-side emptiness probe (an extra job over the whole
+    candidate plan per call)."""
     res = 13  # 9.5 m cells > 5 m threshold
     j, i = sqlfns.lattice_sql("lat", "lng", res)
     left = (pts.select("*", F.expr(j).alias("_j"), F.expr(i).alias("_i"))
