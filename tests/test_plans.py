@@ -7,6 +7,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from tosidewalk_spark.functions import sqlfns
+from tosidewalk_spark.kernel import cells
 from tosidewalk_spark.operators import network as N, sidewalks as SW, spatial as SP
 from tosidewalk_spark.sources import synth
 
@@ -86,18 +88,94 @@ def test_build_network_geometry_stages_have_no_python(spark, stage):
         assert marker not in plan, (stage, marker)
 
 
-def test_tiles_two_phase_aggregation(spark):
+def _final_nodes(df) -> list:
+    """Every node of ``df``'s final adaptive plan after a collect, walking
+    into each query stage's exchange."""
+    df.collect()
+    nodes, todo = [], [df._jdf.queryExecution().executedPlan().finalPhysicalPlan()]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(node.plan())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _joins(nodes) -> int:
+    return sum("Join" in _kind(n) for n in nodes)
+
+
+_SUB_KEYED = re.compile(r"hashpartitioning\(cell9#\d+L, sub_idx#\d+L, \d+\)")
+
+
+def test_tiles_one_aggregation_plan(spark):
+    """coverage_tiles is one aggregation over points and matches: it adds
+    no join and no salt column, and every shuffle it plans carries
+    map-side partial aggregates, not raw rows."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     pts = synth.geo_entities_from_documents(docs)
     nodes, ways = synth.osm_grid(spark, g=6)
     gw = N.geom_ways(nodes, N.split_streets(N.filter_streets(ways)))
     bufs = SP.street_buffers(SP.street_segments(SW.make_sidewalks(gw)),
                              res=SP.PIP_COVER_RES)
-    tiles = SP.coverage_tiles(pts, SP.pip_join(pts, bufs, cover_res=SP.PIP_COVER_RES))
-    plan = _executed_plan(tiles)
-    # partial (map-side) + final aggregates on both agg paths
-    assert plan.count("HashAggregate") >= 4
-    assert "partial_" in plan
+    matches = SP.pip_join(pts, bufs, cover_res=SP.PIP_COVER_RES)
+    tiles = SP.coverage_tiles(pts, matches)
+    plan = _final_nodes(tiles)
+    # every join in the plan is one the matches' own plan already has
+    assert _joins(plan) == _joins(_final_nodes(matches)) > 0
+    assert not any(re.search(r"\bsalt#", n.simpleString(1000)) for n in plan)
+    # the shuffles tiles plans are keyed by cell9 (the network build side
+    # under the matches has its own)
+    exchanges = [n for n in plan if _kind(n) == "ShuffleExchangeExec" and
+                 n.outputPartitioning().toString().startswith("hashpartitioning(cell9#")]
+    assert any(_SUB_KEYED.fullmatch(e.outputPartitioning().toString()) for e in exchanges)
+    for e in exchanges:
+        below = e.child()
+        while _kind(below) in ("WholeStageCodegenExec", "InputAdapter"):
+            below = below.child()
+        assert "Aggregate" in _kind(below), _kind(below)
+        assert "partial_" in below.simpleString(1000), below.simpleString(1000)
+
+
+def test_tiles_hot_cell_combines_map_side(spark):
+    """80,000 points in ONE res-9 cell, spread evenly over its 16
+    sub-cells and 8 input partitions, every third point matched: the tiles
+    are the closed-form counts, and the (cell9, sub_idx) shuffle reads at
+    most one row per sub-cell per map task — the hot cell never reaches it
+    as raw rows."""
+    n, parts = 80_000, 8
+    s_sub = sqlfns.dlit(cells.cell_size_deg(cells.DEFAULT_RES + 2))
+    hot = cells.cell(47.6, -122.33, cells.DEFAULT_RES)
+    i9, j9 = (int(x) * SP.N_SUB for x in cells.cell_ij(hot))
+    # point id sits at the centre of sub-cell id % 16 (row-major)
+    pts = (spark.range(0, n, 1, parts)
+           .select("id", F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+                   F.concat(F.lit("poi_"), (F.col("id") % 7).cast("string")).alias("entity"),
+                   F.expr(f"({j9} + (id % 16) DIV {SP.N_SUB} + 0.5e0) * {s_sub} "
+                          f"- 90.0e0").alias("lat"),
+                   F.expr(f"({i9} + id % {SP.N_SUB} + 0.5e0) * {s_sub} "
+                          f"- 180.0e0").alias("lng"))
+           .withColumn("cell9", F.expr(sqlfns.cell_sql("lat", "lng", cells.DEFAULT_RES))))
+    tiles = SP.coverage_tiles(pts.drop("id"), pts.filter("id % 3 = 0").drop("id"))
+    plan = _final_nodes(tiles)
+    assert [(r.cell9, r.n_pages, r.n_matched, r.raster) for r in tiles.collect()] == [
+        (hot, n, (n + 2) // 3, [n / 16] * 16)]
+    bound = parts * SP.N_SUB ** 2
+    keyed = [e for e in plan if _kind(e) == "ShuffleExchangeExec"
+             and _SUB_KEYED.fullmatch(e.outputPartitioning().toString())]
+    assert len(keyed) == 1
+    # it reads at most the bound; any shuffle reading more is keyed by the
+    # match identity too, so the distinct matches spread over tasks
+    for e in (e for e in plan if _kind(e) == "ShuffleExchangeExec"):
+        part = e.outputPartitioning().toString()
+        assert (e.metrics().apply("recordsRead").value() <= bound
+                or ("url#" in part and "entity#" in part)), part
 
 
 def test_geocode_stays_in_codegen(spark):
@@ -650,6 +728,20 @@ def test_hits_and_lpa_rounds_are_checkpointed_flat(spark):
                        "ShuffledHashJoin"))
         assert n_joins <= max_joins, (max_joins, final[:2000])
         assert "CartesianProduct" not in final
+
+
+def test_pagerank_result_reads_only_the_last_round(spark):
+    """pagerank's output is the last round's rank vector, which carries
+    out_deg: the result plan scans one checkpoint, no edge relation, and
+    neither aggregates nor joins, so the edge checkpoint can be freed with
+    the rounds."""
+    from tosidewalk_spark.operators import graph
+    e = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3), (4, 3)],
+                              "src long, dst long")
+    plan = _optimized_plan(graph.pagerank(e, n_iter=3))
+    scans = [ln for ln in plan.splitlines() if "LogicalRDD" in ln]
+    assert len(scans) == 1 and "dst#" not in scans[0], plan
+    assert "Aggregate" not in plan and "Join" not in plan, plan
 
 
 def test_textrank_topk_is_take_ordered_no_python(spark):

@@ -172,21 +172,33 @@ def equirect_dist_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> str:
     return f"(SQRT({dx} * {dx} + {dy} * {dy}))"
 
 
-def seg_dist_sql(plat: str, plng: str, alat: str, alng: str,
-                 blat: str, blng: str) -> str:
-    """Point-to-segment meters — mirror of kernel.geom.point_segment_dist_m.
-
-    Equirectangular frame anchored at the segment start; clamp the
-    projection parameter to [0, 1].  The tiny denominator epsilon guards
-    zero-length segments identically in both engines.  Uses the shared
-    polynomial cos so all three engines agree bit-for-bit."""
-    c = f"({coslat_sql(alat)} * {M})"
-    mx = f"((({blng}) - ({alng})) * {c})"
+def seg_frame_sql(alat: str, alng: str, blat: str,
+                  blng: str) -> tuple[str, str, str, str]:
+    """(cm, mx, my, s2): the planar frame of segment a->b that
+    frame_dist_sql and frame_inside_sql measure in — equirectangular,
+    anchored at a, poly cos.  cm is meters per degree of longitude at a,
+    (mx, my) the segment vector in meters and s2 its squared length plus a
+    tiny epsilon, so zero-length segments divide safely and identically in
+    every engine.  Callers may stage the four values as columns and pass
+    the column names on."""
+    cm = f"({coslat_sql(alat)} * {M})"
+    mx = f"((({blng}) - ({alng})) * {cm})"
     my = f"((({blat}) - ({alat})) * {M})"
-    px = f"((({plng}) - ({alng})) * {c})"
-    py = f"((({plat}) - ({alat})) * {M})"
-    seg2 = f"({mx} * {mx} + {my} * {my} + 1e-300)"
-    t = f"LEAST(GREATEST(({px} * {mx} + {py} * {my}) / {seg2}, 0.0e0), 1.0e0)"
+    return cm, mx, my, f"({mx} * {mx} + {my} * {my} + 1e-300)"
+
+
+def _frame_point_sql(plat: str, plng: str, alat: str, alng: str,
+                     cm: str) -> tuple[str, str]:
+    """(px, py): point p in the segment frame anchored at a."""
+    return f"((({plng}) - ({alng})) * {cm})", f"((({plat}) - ({alat})) * {M})"
+
+
+def frame_dist_sql(plat: str, plng: str, alat: str, alng: str,
+                   cm: str, mx: str, my: str, s2: str) -> str:
+    """Point-to-segment meters in the segment's seg_frame_sql frame: the
+    projection parameter clamped to [0, 1], then the residual's length."""
+    px, py = _frame_point_sql(plat, plng, alat, alng, cm)
+    t = f"LEAST(GREATEST(({px} * {mx} + {py} * {my}) / {s2}, 0.0e0), 1.0e0)"
     # (e)*(e), NOT POWER(e, 2): libm pow is not exact-rounded and Spark
     # vs DuckDB disagreed by 1 ulp on fuzzed inputs (caught by
     # tests/test_cross_engine_fuzz.py); multiplication is IEEE
@@ -197,6 +209,32 @@ def seg_dist_sql(plat: str, plng: str, alat: str, alng: str,
     return f"(SQRT({ex} * {ex} + {ey} * {ey}))"
 
 
+def frame_inside_sql(plat: str, plng: str, alat: str, alng: str,
+                     cm: str, mx: str, my: str, s2: str,
+                     half_width_m: float) -> str:
+    """Strict containment of p in the flat-capped rectangle buffering the
+    segment by half_width_m each side, in its seg_frame_sql frame:
+    0 < t < 1 along the segment and squared perpendicular distance < hw^2.
+    The s2 epsilon makes zero-length segments test false."""
+    hw = dlit(half_width_m)
+    px, py = _frame_point_sql(plat, plng, alat, alng, cm)
+    t = f"(({px} * {mx} + {py} * {my}) / {s2})"
+    ex = f"({px} - {t} * {mx})"
+    ey = f"({py} - {t} * {my})"
+    return (f"(({t}) > 0.0e0 AND ({t}) < 1.0e0 "
+            f"AND ({ex} * {ex} + {ey} * {ey}) < ({hw} * {hw}))")
+
+
+def seg_dist_sql(plat: str, plng: str, alat: str, alng: str,
+                 blat: str, blng: str) -> str:
+    """Point-to-segment meters — mirror of kernel.geom.point_segment_dist_m.
+
+    frame_dist_sql in the seg_frame_sql frame of a->b; the shared
+    polynomial cos makes all three engines agree bit-for-bit."""
+    return frame_dist_sql(plat, plng, alat, alng,
+                          *seg_frame_sql(alat, alng, blat, blng))
+
+
 def buffer_corners_sql(alat: str, alng: str, blat: str, blng: str,
                        half_width_m: float) -> tuple[list[str], list[str]]:
     """The 4 corner coordinates (CCW, flat caps) of the rectangle buffering
@@ -205,9 +243,7 @@ def buffer_corners_sql(alat: str, alng: str, blat: str, blng: str,
     precisely so this template is bit-identical in Spark, DuckDB and numpy).
     Returns ([4 lat exprs], [4 lng exprs])."""
     hw = dlit(half_width_m)
-    cm = f"({coslat_sql(alat)} * {M})"
-    mx = f"((({blng}) - ({alng})) * {cm})"
-    my = f"((({blat}) - ({alat})) * {M})"
+    cm, mx, my, _ = seg_frame_sql(alat, alng, blat, blng)
     L = (f"(CASE WHEN SQRT({mx} * {mx} + {my} * {my}) = 0.0e0 THEN 1.0e0 "
          f"ELSE SQRT({mx} * {mx} + {my} * {my}) END)")
     nx = f"(-(({my}) / {L}) * {hw})"
@@ -226,29 +262,17 @@ def buffer_corners_sql(alat: str, alng: str, blat: str, blng: str,
 def rect_inside_sql(plat: str, plng: str, alat: str, alng: str,
                     blat: str, blng: str, half_width_m: float) -> str:
     """Strict containment of a point in the flat-capped rectangle buffering
-    segment a->b by half_width_m each side: 0 < t < 1 along the segment and
-    squared perpendicular distance < hw^2, in the same equirectangular
-    frame as seg_dist_sql (anchored at a, poly cos).  Identical template in
-    Spark and DuckDB => bit-identical booleans.
+    segment a->b by half_width_m each side: frame_inside_sql in the same
+    seg_frame_sql frame as seg_dist_sql.  Identical template in Spark and
+    DuckDB => bit-identical booleans.
 
     Why not ray-casting over the 4 corners: that expression is so large
     that Spark's generated code blows the JIT method limit and the whole
     stage falls back to interpreted evaluation — measured 50 us/row vs
     <1 us for this ~30-op form.  Semantics differ from corner ray-casting
-    only ON the zero-measure boundary (exact cap/edge hits).  The tiny
-    seg2 epsilon makes zero-length segments test false in both engines."""
-    hw = dlit(half_width_m)
-    c = f"({coslat_sql(alat)} * {M})"
-    mx = f"((({blng}) - ({alng})) * {c})"
-    my = f"((({blat}) - ({alat})) * {M})"
-    px = f"((({plng}) - ({alng})) * {c})"
-    py = f"((({plat}) - ({alat})) * {M})"
-    seg2 = f"({mx} * {mx} + {my} * {my} + 1e-300)"
-    t = f"(({px} * {mx} + {py} * {my}) / {seg2})"
-    ex = f"({px} - {t} * {mx})"
-    ey = f"({py} - {t} * {my})"
-    return (f"(({t}) > 0.0e0 AND ({t}) < 1.0e0 "
-            f"AND ({ex} * {ex} + {ey} * {ey}) < ({hw} * {hw}))")
+    only ON the zero-measure boundary (exact cap/edge hits)."""
+    return frame_inside_sql(plat, plng, alat, alng,
+                            *seg_frame_sql(alat, alng, blat, blng), half_width_m)
 
 
 def polyhash_spark(s: str, mult: int = 31) -> str:

@@ -88,7 +88,9 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     with an eager localCheckpoint (it is referenced twice per round — see
     the loop comment).  ``e``, ``nodes`` and ``ew`` are re-read by later
     jobs, so each is a lazy localCheckpoint: materialized by its first
-    job, freed by Spark's cleaner once no plan reads it.
+    job, freed by Spark's cleaner once no plan reads it.  out_deg rides in
+    the rank vector, so the result reads only the last round's checkpoint
+    and ``e`` is freed with the rounds.
 
     Output: (node_id, rank_fx, out_deg) — rank_fx sums to ~scale (minus
     the documented floor leak)."""
@@ -106,12 +108,15 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
     base_expr = (f"CAST(({100 - damping_pct} * CAST({scale} AS BIGINT))"
                  f" DIV (100 * _n) AS BIGINT)")
     ranks = (nodes.crossJoin(F.broadcast(n1))
+             .join(outdeg, F.col("node_id") == F.col("src"), "left")
              .select("node_id",
                      F.expr(f"CAST(CAST({scale} AS BIGINT) DIV _n"
                             " AS BIGINT)").alias("rank_fx"),
-                     F.expr(base_expr).alias("_base")))
+                     F.expr(base_expr).alias("_base"),
+                     F.expr("COALESCE(out_deg, CAST(0 AS BIGINT))").alias("out_deg")))
     for _ in range(n_iter):
-        contrib = (ranks.join(ew, F.col("node_id") == F.col("src"))
+        contrib = (ranks.select("node_id", "rank_fx")
+                   .join(ew, F.col("node_id") == F.col("src"))
                    .select("dst", F.expr("rank_fx DIV out_deg")
                            .alias("_c")))
         inflow = contrib.groupBy("dst").agg(F.sum("_c").alias("_in"))
@@ -120,17 +125,14 @@ def pagerank(edges: DataFrame, n_iter: int = 5,
         # so left lazy the plan doubles per round and exchange reuse
         # only partly contains the re-execution — measured 5.7 -> 3.9 s
         # at sf0.1 with bit-identical output (integer arithmetic)
-        ranks = (ranks.select("node_id", "_base")
+        ranks = (ranks.select("node_id", "_base", "out_deg")
                  .join(inflow, F.col("node_id") == F.col("dst"), "left")
-                 .select("node_id", "_base",
+                 .select("node_id", "_base", "out_deg",
                          F.expr(f"CAST(_base + ({damping_pct} * "
                                 "COALESCE(_in, CAST(0 AS BIGINT)))"
                                 " DIV 100 AS BIGINT)").alias("rank_fx"))
                  .localCheckpoint())
-    return (ranks.join(outdeg, F.col("node_id") == F.col("src"), "left")
-            .select("node_id", "rank_fx",
-                    F.expr("COALESCE(out_deg, CAST(0 AS BIGINT))")
-                    .alias("out_deg")))
+    return ranks.select("node_id", "rank_fx", "out_deg")
 
 
 def pagerank_duckdb_sql(edges_sql: str, n_iter: int = 5,

@@ -10,8 +10,9 @@ Scale design:
 - The spatial join is compiled to a cell equi-join (build side: polyfill
   of each buffer, exploded; probe side: the point's cell9) + an exact
   ray-casting refine — Catalyst picks broadcast vs SMJ, AQE handles skew
-  coarsely, and dense-cell skew is handled explicitly by the salted
-  aggregation in G6/G7.
+  coarsely.  Coverage tiles are one map-side-combined aggregation keyed
+  by (cell9, sub-cell), so a dense cell reaches the shuffle as at most
+  one row per sub-cell per map task.
 - kNN is one declarative plan: each distinct point cell probes its disk
   once against the segment cover, the per-cell candidates are pruned by a
   provable distance bound, and points equi-join their own cell.  Results
@@ -53,6 +54,21 @@ def street_segments(net: DataFrame) -> DataFrame:
         F.col("e.alat").alias("alat"), F.col("e.alng").alias("alng"),
         F.col("e.blat").alias("blat"), F.col("e.blng").alias("blng"),
     )
+
+
+# The per-segment planar frame (sqlfns.seg_frame_sql) as staged columns.
+FRAME = ("cm", "mx", "my", "s2")
+
+
+def _segment_frame(segs: DataFrame) -> DataFrame:
+    """``segs`` plus the FRAME columns of its (alat, alng, blat, blng)
+    segment.  Staged on the small build side, so a join refine reads four
+    columns per candidate: inlining the templates into a join condition
+    generates a Java method beyond HotSpot's huge-method JIT limit and the
+    whole condition runs in the bytecode interpreter — measured 19
+    us/candidate vs <0.3 us staged (a 13.5 s/6M-page swing)."""
+    frame = sqlfns.seg_frame_sql("alat", "alng", "blat", "blng")
+    return segs.select("*", *(F.expr(e).alias(c) for c, e in zip(FRAME, frame)))
 
 
 PIP_COVER_RES = 11  # 38 m cells: tight cover for 12 m buffers, ~8x fewer
@@ -120,8 +136,9 @@ def pip_join(points: DataFrame, buffers: DataFrame,
     explode(buffer cell cover) -> equi-join on the point's cell at the
     cover resolution -> exact containment refine.
 
-    The refine is pure Spark SQL (sqlfns.rect_inside_sql + seg_dist_sql,
-    bit-identical twins across engines): the whole join stays in
+    The refine is pure Spark SQL (sqlfns.frame_inside_sql + frame_dist_sql
+    over the staged FRAME: rect_inside_sql and seg_dist_sql, the oracle's
+    bit-identical twins, are the same templates): the whole join stays in
     whole-stage codegen with NO python workers — which is also what makes
     local[N] an honest N-core job for the scaling benchmark (python UDF
     workers are not capped by local[N]).  ``half_width_m`` must equal the
@@ -153,22 +170,9 @@ def pip_join(points: DataFrame, buffers: DataFrame,
             f"ASSERT_TRUE(cover_res = {cover_res}, "
             f"CONCAT('pip_join cover_res={cover_res} but buffers were covered "
             f"at res=', CAST(cover_res AS STRING))) IS NULL"))
-    # the per-SEGMENT frame (cm, mx, my, s2) is precomputed on the tiny
-    # build side, so the per-candidate refine is a ~50-node expression.
-    # Inlining the full rect/dist templates into the join condition
-    # generates a Java method beyond HotSpot's huge-method JIT limit and
-    # the whole condition runs in the bytecode interpreter — measured
-    # 19 us/candidate vs <0.3 us staged (a 13.5 s/6M-page swing).
-    # Arithmetic and op order are IDENTICAL to rect_inside_sql /
-    # seg_dist_sql, so the DuckDB oracle twins stay bit-exact.
-    M = sqlfns.M
-    build_side = (buffers.select(
+    build_side = _segment_frame(buffers.select(
         "way_id", "segment_id", "alat", "alng", "blat", "blng",
-        F.explode("cells").alias("cell"))
-        .withColumn("cm", F.expr(f"({sqlfns.coslat_sql('alat')} * {M})"))
-        .withColumn("mx", F.expr("(blng - alng) * cm"))
-        .withColumn("my", F.expr(f"(blat - alat) * {M}"))
-        .withColumn("s2", F.expr("mx * mx + my * my + 1e-300")))
+        F.explode("cells").alias("cell")))
     # ``passthrough``: extra point columns carried through the join
     # untouched (e.g. an event-time ts for the stream-static twin in
     # streaming/jobs.py) — () leaves every existing plan byte-identical.
@@ -176,20 +180,8 @@ def pip_join(points: DataFrame, buffers: DataFrame,
         "url", "entity", "lat", "lng", "cell9", *passthrough,
         F.expr(sqlfns.cell_sql("lat", "lng", cover_res)).alias("cell"))
     cand = probe.join(F.broadcast(build_side), "cell")
-    hw = sqlfns.dlit(half_width_m)
-    px = "((lng - alng) * cm)"
-    py = f"((lat - alat) * {M})"
-    t_u = f"(({px} * mx + {py} * my) / s2)"
-    ex = f"({px} - {t_u} * mx)"
-    ey = f"({py} - {t_u} * my)"
-    inside = (f"({t_u}) > 0.0e0 AND ({t_u}) < 1.0e0 "
-              f"AND ({ex} * {ex} + {ey} * {ey}) < ({hw} * {hw})")
-    t_c = f"LEAST(GREATEST(({px} * mx + {py} * my) / s2, 0.0e0), 1.0e0)"
-    # (e)*(e), not POWER(e,2): libm pow is off-by-ulp across engines
-    # (cross-engine fuzz); matches sqlfns.seg_dist_sql and the numpy twin
-    cx = f"({px} - ({t_c}) * mx)"
-    cy = f"({py} - ({t_c}) * my)"
-    dist = f"SQRT({cx} * {cx} + {cy} * {cy})"
+    inside = sqlfns.frame_inside_sql("lat", "lng", "alat", "alng", *FRAME, half_width_m)
+    dist = sqlfns.frame_dist_sql("lat", "lng", "alat", "alng", *FRAME)
     return (cand.filter(F.expr(inside))
             .select("url", "entity", "lat", "lng", "cell9", *passthrough,
                     "way_id", "segment_id", F.expr(dist).alias("dist_m")))
@@ -220,7 +212,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
     1. each distinct point cell c explodes disk(c, max_ring) against the
        broadcast segment cover, deduplicated on (c, segment);
     2. the table is pruned per cell in each segment's own planar frame
-       (the cm/mx/my/s2 staging of dist_m).  Distance to a segment is
+       (the FRAME staging of dist_m).  Distance to a segment is
        1-Lipschitz there, so every point p of c has |d(p, s) - d_c(s)| <= h,
        with d_c the distance from c's centre and h the cell's half-diagonal
        0.5·sqrt((s_deg·cm)² + (s_deg·M)²).  Segment s is dropped when
@@ -238,29 +230,16 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
     reach its top k."""
     s = sqlfns.dlit(cells.cell_size_deg(res))
     M = sqlfns.M
-    # per-segment frame staged on the tiny build side (same JIT-limit
-    # rationale and bit-identical arithmetic as pip_join)
-    sc = (seg_cells
-          .withColumn("cm", F.expr(f"({sqlfns.coslat_sql('alat')} * {M})"))
-          .withColumn("mx", F.expr("(blng - alng) * cm"))
-          .withColumn("my", F.expr(f"(blat - alat) * {M}"))
-          .withColumn("s2", F.expr("mx * mx + my * my + 1e-300")))
 
     def dist(lat: str, lng: str) -> F.Column:
-        px = f"(({lng} - alng) * cm)"
-        py = f"(({lat} - alat) * {M})"
-        t_c = f"LEAST(GREATEST(({px} * mx + {py} * my) / s2, 0.0e0), 1.0e0)"
-        # (e)*(e), not POWER(e,2) — see seg_dist_sql (cross-engine fuzz)
-        kx = f"({px} - ({t_c}) * mx)"
-        ky = f"({py} - ({t_c}) * my)"
-        return F.expr(f"SQRT({kx} * {kx} + {ky} * {ky})")
+        return F.expr(sqlfns.frame_dist_sql(lat, lng, "alat", "alng", *FRAME))
 
     # the point's lattice coords staged once as _pj/_pi: the cell key, and
     # the disk (sqlfns.disk_sql) is pure integer arithmetic over them
     pj, pi = sqlfns.lattice_sql("lat", "lng", res)
     pts = points.select("url", "entity", "lat", "lng", "cell9",
                         F.expr(pj).alias("_pj"), F.expr(pi).alias("_pi"))
-    frame = ["way_id", "segment_id", "alat", "alng", "cm", "mx", "my", "s2"]
+    frame = ["way_id", "segment_id", "alat", "alng", *FRAME]
     hi = F.col("_dc") + F.col("_h")
     wc = (Window.partitionBy("_pj", "_pi").orderBy(hi)
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
@@ -271,7 +250,7 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
                      F.explode(F.expr(sqlfns.disk_sql("_pj", "_pi", res, max_ring)))
                      .alias("cell"))
              # broadcast the segment-cover side: the fixed-size city network
-             .join(F.broadcast(sc), "cell")
+             .join(F.broadcast(_segment_frame(seg_cells)), "cell")
              .dropDuplicates(["_pj", "_pi", "segment_id"])
              .select("_pj", "_pi", *frame, dist("_clat", "_clng").alias("_dc"),
                      F.expr(f"0.5e0 * SQRT(({s} * cm) * ({s} * cm) "
@@ -302,43 +281,39 @@ def knn_join(points: DataFrame, seg_cells: DataFrame, k: int = 1,
 
 # --- G6: raster coverage tiles -------------------------------------------------
 
-def coverage_tiles(points: DataFrame, matches: DataFrame,
-                   n_sub: int = 4, salt_buckets: int = 16) -> DataFrame:
-    """G6 (+G7 salting): per res-9 cell — page count, matched count
-    (matched = point appeared in the PIP join output), coverage ratio, and
-    an n_sub x n_sub sub-cell raster histogram (row-major array<double>).
+N_SUB = 4  # raster side: a res-9 cell holds N_SUB x N_SUB res-11 sub-cells
 
-    Skew: dense urban cells concentrate keys, so the aggregation runs in
-    two phases — partial agg on (cell9, salt = pmod(hash(url), B)), final
-    agg on cell9 — a map-side-combine-friendly plan that survives hot
-    cells at any scale [BASELINE.json:14 'salted skew handling']."""
-    res = cells.DEFAULT_RES
-    sub_res = res + 2  # 4x per axis
-    sj, si = sqlfns.lattice_sql("lat", "lng", sub_res)
-    sub_idx = f"({sj} % {n_sub}) * {n_sub} + ({si} % {n_sub})"
-    # page counts: salted two-phase hash agg over the full points table;
-    # matched counts: distinct-page agg over the (already filtered) match
-    # rows, which carry their own lat/lng — NO wide (url, entity) join of
-    # the full points table against the match set (that join was the
-    # dominant shuffle at scale; two narrow aggs + a tiny per-cell join
-    # replace it)
-    pts = (points
-           .withColumn("sub_idx", F.expr(sub_idx))
-           .withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets))))
-    partial = pts.groupBy("cell9", "salt", "sub_idx").agg(F.count("*").alias("pn"))
-    n_side = partial.groupBy("cell9", "sub_idx").agg(F.sum("pn").alias("n"))
-    m_side = (matches
-              .withColumn("sub_idx", F.expr(sub_idx))
-              .groupBy("cell9", "sub_idx")
-              .agg(F.countDistinct("url", "entity").alias("m")))
-    per_sub = n_side.join(m_side, ["cell9", "sub_idx"], "left") \
-                    .withColumn("m", F.coalesce("m", F.lit(0)))
+
+def coverage_tiles(points: DataFrame, matches: DataFrame) -> DataFrame:
+    """G6: per res-9 cell — page count, matched count (matched = the point
+    appears in the PIP join output), coverage ratio, and an N_SUB x N_SUB
+    sub-cell raster histogram of page counts (row-major array<double>).
+
+    One aggregation keyed by (cell9, sub_idx) over the point rows and the
+    match rows together: n counts the point rows, m the distinct
+    (url, entity) of the match rows, which carry their own lat/lng — no
+    wide join of the points against the match set.  Skew: the count is
+    combined map-side, so a dense cell reaches the (cell9, sub_idx)
+    shuffle as at most N_SUB² rows per map task [BASELINE.json:14 'skew
+    handled explicitly']; the distinct side shuffles by (url, entity)
+    first and so spreads over tasks.  The per-cell fold is then a second,
+    tiny aggregation."""
+    sj, si = sqlfns.lattice_sql("lat", "lng", cells.DEFAULT_RES + 2)
+    sub_idx = F.expr(f"({sj} % {N_SUB}) * {N_SUB} + ({si} % {N_SUB})").alias("sub_idx")
+    rows = (points.select("cell9", sub_idx, "url", "entity", F.lit(True).alias("_pt"))
+            .unionByName(matches.select("cell9", sub_idx, "url", "entity",
+                                        F.lit(False).alias("_pt"))))
+    is_match = ~F.col("_pt")
+    per_sub = rows.groupBy("cell9", "sub_idx").agg(
+        F.count_if("_pt").alias("n"),
+        F.countDistinct(F.when(is_match, F.col("url")),
+                        F.when(is_match, F.col("entity"))).alias("m"))
     tiles = per_sub.groupBy("cell9").agg(
         F.sum("n").alias("n_pages"),
         F.sum("m").alias("n_matched"),
         F.sort_array(F.collect_list(F.struct("sub_idx", "n"))).alias("hist"))
     raster = F.expr(
-        f"TRANSFORM(SEQUENCE(0, {n_sub * n_sub - 1}), i -> "
+        f"TRANSFORM(SEQUENCE(0, {N_SUB * N_SUB - 1}), i -> "
         f"CAST(COALESCE(ELEMENT_AT(MAP_FROM_ENTRIES(hist), CAST(i AS BIGINT)), 0) AS DOUBLE))")
     return tiles.select(
         "cell9", "n_pages", "n_matched",
@@ -346,8 +321,7 @@ def coverage_tiles(points: DataFrame, matches: DataFrame,
         raster.alias("raster"))
 
 
-def vectorize_tiles(tiles: DataFrame, threshold: float = 1.0,
-                    n_sub: int = 4) -> DataFrame:
+def vectorize_tiles(tiles: DataFrame, threshold: float = 1.0) -> DataFrame:
     """Raster -> vector (the inverse of G6's vector -> raster): extract
     above-threshold sub-cells from each cell's row-major raster and merge
     horizontally contiguous runs into vector spans — run-length
@@ -360,14 +334,14 @@ def vectorize_tiles(tiles: DataFrame, threshold: float = 1.0,
 
     Scale: pure declarative plan — posexplode -> filter -> gap-and-island
     window -> hash agg.  The window partitions on (cell9, r): cardinality
-    = cells x n_sub with at most n_sub rows per partition, so the sort is
+    = cells x N_SUB with at most N_SUB rows per partition, so the sort is
     trivially bounded and the single shuffle is evenly spread (no skew —
-    every cell contributes the same n_sub x n_sub grid)."""
+    every cell contributes the same N_SUB x N_SUB grid)."""
     px = (tiles.select("cell9", F.posexplode("raster").alias("pos", "v"))
           .filter(F.col("v") >= threshold)
           .select("cell9",
-                  F.expr(f"CAST(pos DIV {n_sub} AS INT)").alias("r"),
-                  F.expr(f"CAST(pos % {n_sub} AS INT)").alias("c"),
+                  F.expr(f"CAST(pos DIV {N_SUB} AS INT)").alias("r"),
+                  F.expr(f"CAST(pos % {N_SUB} AS INT)").alias("c"),
                   "v"))
     w = Window.partitionBy("cell9", "r").orderBy("c")
     return (px.withColumn("island", F.col("c") - F.row_number().over(w))

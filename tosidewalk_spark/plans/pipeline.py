@@ -70,7 +70,6 @@ def run_graft(points: DataFrame, net: DataFrame, k: int = 1) -> dict[str, DataFr
     knn = SP.knn_join(points, seg_cells, k=k)
     # tiles count PIP containment matches (same semantics as the oracle);
     # knn is returned lazily — consumers that don't collect it pay nothing
-    # (the ring-expansion fixpoint only runs when knn is materialized)
     tiles = SP.coverage_tiles(points, join_out)
     return {"buffers": buffers, "join_out": join_out, "knn": knn, "tiles": tiles}
 
